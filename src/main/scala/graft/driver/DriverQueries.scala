@@ -46,128 +46,69 @@ object DriverQueries {
   /** Terms used by per-term analytics queries. */
   val histTerms: Seq[String] = Seq("spark", "merge", "the", "a", "dup", "vector", "hash", "query")
 
-  // ---- shared Spark-side corpus derivations, cached per sfDir ----
-  // Nearly every spec consumes termDocs/docs/dict/corpusStats; without
-  // caching each of the ~40 gate queries re-tokenizes the corpus from
-  // scratch (the round-1 gate spent 3-5× its operator time there).
-  //
-  // Round-6 (optimization guide §2.6 — overlap independent jobs): the memo
-  // holds FutureTasks instead of values, so that
-  //  (1) every shared derivation still computes exactly once (the first
-  //      claimant runs the task; later callers block on the same task);
-  //  (2) the INDEPENDENT expensive builds (compressed index, the two
-  //      fielded indexes + block stage, the grid-sweep runs/eval, the
-  //      shared BM25 run) are launched on background threads at first
-  //      contact with an sfDir — Spark happily runs several jobs at once,
-  //      so builds that used to run strictly back-to-back now back-fill
-  //      each other's idle cores and stragglers;
-  //  (3) [[fieldedBlockIndex]] — the LAST shared derivation the (frozen)
-  //      bench warmup awaits — joins every in-flight prefetch thread
-  //      before returning, so background work never bleeds into the
-  //      individually-timed gate phase: all overlap is absorbed into the
-  //      one warmup measurement, and every gate runs on a quiet scheduler.
-  // Nothing is precomputed across JVMs or bench runs — the same work runs
-  // from the same parquet inputs, merely concurrently.
-  private val memo =
-    scala.collection.mutable.Map.empty[(String, String), java.util.concurrent.FutureTask[Any]]
-  private def cached[A](kind: String, dir: String)(mk: => A): A = {
-    val key = (kind, dir)
-    val task = memo.synchronized {
-      memo.getOrElseUpdate(key, new java.util.concurrent.FutureTask[Any](() => mk))
-    }
-    task.run() // claims + runs in THIS thread if unclaimed; no-op otherwise
-    try task.get().asInstanceOf[A]
-    catch { case e: java.util.concurrent.ExecutionException =>
-      // don't memoize failures — drop the entry so a later call can retry
-      memo.synchronized { memo.remove(key) }
-      throw e.getCause
+  // ---- shared Spark-side corpus derivations, memoized per sfDir ----
+  // Nearly every spec consumes termDocs/docs/dict/corpusStats; without the
+  // memo each of the ~40 gate queries re-tokenizes the corpus from scratch
+  // (the round-1 gate spent 3-5× its operator time there). The independent
+  // expensive builds start as five background chains at first contact with
+  // an sfDir, so they back-fill each other's idle cores; fieldedBlockIndex,
+  // the last derivation the (frozen) bench warmup awaits, waits for them
+  // all, so no background work bleeds into the individually timed gates.
+  // Nothing is reused across JVMs: the same work runs from the same parquet
+  // inputs, merely concurrently.
+  private val derivations = new Derivations()
+
+  private def prefetch(s: SparkSession, d: String): Unit = {
+    derivations.prefetch("prefetch-index", d)(index(s, d))
+    derivations.prefetch("prefetch-fielded-split", d)(fieldedBlocks(s, d, "split"))
+    derivations.prefetch("prefetch-fielded-natural", d)(fieldedIndex(s, d, "natural"))
+    derivations.prefetch("prefetch-sweep", d)(sweepPq(s, d))
+    derivations.prefetch("prefetch-bm25run", d)(bm25Run(s, d))
+  }
+
+  /** `df` persisted and materialized once per sfDir (unpersisted by
+   * [[releaseCaches]]). */
+  private def persisted(kind: String, s: SparkSession, d: String)(df: => DataFrame): DataFrame = {
+    prefetch(s, d)
+    derivations(kind, d, (p: DataFrame) => { p.unpersist(blocking = true); () }) {
+      val p = df.persist()
+      p.count()
+      p
     }
   }
 
-  // one prefetch fan-out per sfDir; threads tracked so the warmup barrier
-  // (fieldedBlockIndex) and releaseCaches can join them
-  private val prefetchThreads =
-    scala.collection.mutable.Map.empty[String, Seq[Thread]]
-  private def maybePrefetch(spark: SparkSession, dir: String): Unit = {
-    val fresh = prefetchThreads.synchronized {
-      if (prefetchThreads.contains(dir)) false
-      else { prefetchThreads(dir) = Nil; true }
-    }
-    if (!fresh) return
-    def bg(name: String)(f: => Any): Thread = {
-      val t = new Thread(() => try f catch { case _: Throwable => () },
-        s"graft-prefetch-$name")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    val ts = Seq(
-      bg("index")(index(spark, dir)),
-      // block stage chains on the split index inside ONE thread
-      bg("fielded-split") {
-        fieldedIndex(spark, dir, "split")
-        fieldedBlocksInner(spark, dir, "split")
-      },
-      bg("fielded-natural")(fieldedIndex(spark, dir, "natural")),
-      bg("sweep") { sweepRunsCached(spark, dir); sweepPq(spark, dir) },
-      bg("bm25run")(bm25RunCached(spark, dir)))
-    prefetchThreads.synchronized { prefetchThreads(dir) = ts }
-  }
-  private def awaitPrefetch(dir: String): Unit = {
-    val ts = prefetchThreads.synchronized { prefetchThreads.getOrElse(dir, Nil) }
-    ts.foreach(t => if (t ne Thread.currentThread()) t.join())
-  }
+  def termDocs(spark: SparkSession, dir: String): DataFrame =
+    persisted("termDocs", spark, dir)(Tokenize.termDocs(Transcripts.fromDocuments(spark, dir)))
 
-  def termDocs(spark: SparkSession, dir: String): DataFrame = {
-    maybePrefetch(spark, dir)
-    cached("termDocs", dir) {
-      val df = Tokenize.termDocs(Transcripts.fromDocuments(spark, dir)).persist()
-      df.count()
-      df
-    }
-  }
+  def docs(spark: SparkSession, dir: String): DataFrame =
+    persisted("docs", spark, dir)(Tokenize.docs(Transcripts.fromDocuments(spark, dir)))
 
-  def docs(spark: SparkSession, dir: String): DataFrame = {
-    maybePrefetch(spark, dir)
-    cached("docs", dir) {
-      val df = Tokenize.docs(Transcripts.fromDocuments(spark, dir)).persist()
-      df.count()
-      df
-    }
-  }
-
-  def dict(spark: SparkSession, dir: String): DataFrame = {
-    maybePrefetch(spark, dir)
-    cached("dict", dir) {
-      val df = Dictionary.termStats(termDocs(spark, dir)).persist()
-      df.count()
-      df
-    }
-  }
+  def dict(spark: SparkSession, dir: String): DataFrame =
+    persisted("dict", spark, dir)(Dictionary.termStats(termDocs(spark, dir)))
 
   def corpusStats(spark: SparkSession, dir: String): graft.model.CorpusStats = {
-    maybePrefetch(spark, dir)
-    cached("stats", dir)(Tokenize.corpusStats(docs(spark, dir)))
+    prefetch(spark, dir)
+    derivations("stats", dir)(Tokenize.corpusStats(docs(spark, dir)))
   }
 
   /** Compressed block index over the documents corpus, built once per JVM
-   * per sfDir (fresh — no reuse across runs, the format may evolve). */
+   * per sfDir into a temp dir (fresh — no reuse across runs, the format may
+   * evolve). */
   def index(spark: SparkSession, dir: String): IndexBuild.Index = {
-    maybePrefetch(spark, dir)
-    cached("index", dir) {
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-docidx").toString
-      (IndexBuild.build(Transcripts.fromDocuments(spark, dir), idxDir, docsPerShard = 256), idxDir)
-    }._1
+    prefetch(spark, dir)
+    derivations.inTempDir("index", dir, "graft-docidx")(
+      IndexBuild.build(Transcripts.fromDocuments(spark, dir), _, docsPerShard = 256))
   }
 
   /** token array → term→tf map, in-row (the [[Tokenize.tfMapUdf]] pattern
    * for already-tokenized arrays): per-(doc, field) term frequencies need
    * NO shuffle — round 6 replaced the explode→groupBy form, which carried
    * every token of every document through an aggregation exchange (a
-   * corpus-sized shuffle for a row-local computation; guide §2.4). */
+   * corpus-sized shuffle for a row-local computation; guide §2.4). A null
+   * array (null text) yields no terms, as exploding it did. */
   private val toksTfUdf = udf { (toks: Seq[String]) =>
     val m = new java.util.HashMap[String, Long]()
-    toks.foreach(t => m.merge(t, 1L, (a, b) => a + b))
+    if (toks != null) toks.foreach(t => m.merge(t, 1L, (a, b) => a + b))
     import scala.jdk.CollectionConverters._
     m.asScala.toMap
   }
@@ -192,7 +133,7 @@ object DriverQueries {
   /** The r3b fielded source over the documents' NATURAL fields: contents =
    * text tokens; source/lang = the column value as a one-token field.
    * Map-only (same in-row tf as the split source). */
-  private def fieldedNaturalSource(s: SparkSession, d: String): DataFrame = {
+  private[graft] def fieldedNaturalSource(s: SparkSession, d: String): DataFrame = {
     val docs = Transcripts.table(s, d, "documents")
       .select(concat(lit("doc-"), col("doc_id").cast("string"), lit("#0")).as("docId"),
         col("text"), col("lang"), col("source"))
@@ -212,73 +153,44 @@ object DriverQueries {
   /** Prebuilt fielded indexes (round-3 VERDICT #1): per-field postings +
    * dict + stats materialized ONCE per (sfDir, variant); the r3/r3b gates
    * then run query-term-pruned scans only. */
-  private def fieldedIndexEntry(s: SparkSession, d: String,
-                                variant: String): (graft.index.FieldedIndex.FIndex, String) =
-    cached(s"fidx-$variant", d) {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-fidx-$variant").toString
+  def fieldedIndex(s: SparkSession, d: String, variant: String): graft.index.FieldedIndex.FIndex = {
+    prefetch(s, d)
+    derivations.inTempDir(s"fidx-$variant", d, s"graft-fidx-$variant") { dir =>
       val src = if (variant == "natural") fieldedNaturalSource(s, d)
                 else fieldedSplitSource(s, d)
-      (graft.index.FieldedIndex.build(src, dir), dir)
+      graft.index.FieldedIndex.build(src, dir)
     }
-
-  def fieldedIndex(s: SparkSession, d: String, variant: String): graft.index.FieldedIndex.FIndex = {
-    maybePrefetch(s, d)
-    fieldedIndexEntry(s, d, variant)._1
   }
 
   /** Block stage over the cached fielded index (round-4 VERDICT #1): built
-   * once per (sfDir, variant) into the SAME dir — the r3c gate then runs
-   * the early-terminating WAND over term-pruned block scans. sf0.01 holds
-   * ~600 docs; 256-doc shards exercise the cross-shard heap merge. */
-  private def fieldedBlocksInner(s: SparkSession, d: String,
-                                 variant: String): graft.index.FieldedBlocks.FBIndex =
-    cached(s"fblocks-$variant", d) {
-      val (idx, dir) = fieldedIndexEntry(s, d, variant)
-      graft.index.FieldedBlocks.build(idx, dir, docsPerShard = 256)
-    }
+   * once per (sfDir, variant) — the r3c gate then runs the early-terminating
+   * WAND over term-pruned block scans. sf0.01 holds ~600 docs; 256-doc
+   * shards exercise the cross-shard heap merge. */
+  private def fieldedBlocks(s: SparkSession, d: String,
+                            variant: String): graft.index.FieldedBlocks.FBIndex =
+    derivations.inTempDir(s"fblocks-$variant", d, s"graft-fblocks-$variant")(
+      graft.index.FieldedBlocks.build(fieldedIndex(s, d, variant), _, docsPerShard = 256))
 
   /** Public accessor doubles as the warmup BARRIER: it is the last shared
-   * derivation the frozen bench warms, so joining the prefetch threads here
-   * guarantees every background build has finished before any gate is
-   * individually timed (see the memo scaladoc). */
+   * derivation the frozen bench warms, so it returns only after every
+   * background build of the sfDir has finished. */
   def fieldedBlockIndex(s: SparkSession, d: String, variant: String): graft.index.FieldedBlocks.FBIndex = {
-    maybePrefetch(s, d)
-    val r = fieldedBlocksInner(s, d, variant)
-    awaitPrefetch(d)
+    prefetch(s, d)
+    val r = fieldedBlocks(s, d, variant)
+    derivations.awaitAll(d)
     r
   }
 
   /** Unpersist and drop every per-sfDir cache (the gate suite's warm
-   * state) — including storage persisted INSIDE the builders (DenseIds'
-   * post-shuffle frame in the compressed index, which the memo never
-   * references) via `catalog.clearCache()`, and the fielded indexes' temp
-   * dirs on disk — so a subsequent measurement runs on a quiet heap and
-   * a quiet filesystem. Round-3 context: the driver bench recorded a
-   * 3.6× index-build inflation with the gate caches still resident
-   * (VERDICT r03 "What's wrong" #2). */
-  def releaseCaches(spark: SparkSession): Unit = synchronized {
-    // join in-flight prefetch threads first: never unpersist/delete under a
-    // build that is still running
-    prefetchThreads.synchronized { prefetchThreads.keys.toSeq }.foreach(awaitPrefetch)
-    prefetchThreads.synchronized { prefetchThreads.clear() }
-    def rmDir(dir: String): Unit =
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => }
-    val tasks = memo.synchronized { val ts = memo.values.toSeq; memo.clear(); ts }
-    tasks.foreach { t =>
-      if (t.isDone) {
-        (try t.get() catch { case _: Throwable => null }) match {
-          case df: DataFrame        => df.unpersist(blocking = true)
-          case (_, dir: String)     => rmDir(dir) // index / fielded index entries
-          case _                    =>
-        }
-      }
-    }
-    streamTmpDirs.foreach(rmDir)
-    streamTmpDirs.clear()
+   * state) once every build in flight has finished — including storage
+   * persisted INSIDE the builders (DenseIds' post-shuffle frame in the
+   * compressed index, which the memo never references) via
+   * `catalog.clearCache()`, and the indexes' temp dirs on disk — so a
+   * subsequent measurement runs on a quiet heap and a quiet filesystem.
+   * Round-3 context: the driver bench recorded a 3.6× index-build inflation
+   * with the gate caches still resident (VERDICT r03 "What's wrong" #2). */
+  def releaseCaches(spark: SparkSession): Unit = {
+    derivations.release()
     spark.catalog.clearCache()
   }
 
@@ -478,14 +390,9 @@ object DriverQueries {
    * Round 6: memoized per sfDir like the sweep runs — e1/r6/nc1/sa1 all
    * consume it, and each used to re-score + re-rank the whole posting
    * source for itself. */
-  private def bm25RunCached(s: SparkSession, d: String): DataFrame =
-    cached("bm25Run", d) {
-      val df = Exact.search(termDocs(s, d), dict(s, d), corpusStats(s, d),
-        topics, Scoring.BM25c(0.9, 0.4), K, roundedDouble = Some(4)).persist()
-      df.count()
-      df
-    }
-  private def bm25Run(s: SparkSession, d: String): DataFrame = bm25RunCached(s, d)
+  private def bm25Run(s: SparkSession, d: String): DataFrame =
+    persisted("bm25Run", s, d)(Exact.search(termDocs(s, d), dict(s, d), corpusStats(s, d),
+      topics, Scoring.BM25c(0.9, 0.4), K, roundedDouble = Some(4)))
 
   /** Synthetic deterministic qrels over documents: qid × doc where
    * (doc_id + qid·7) % 5 == 0 (dense enough to overlap top-k runs),
@@ -1341,25 +1248,17 @@ object DriverQueries {
   /** Grid-sweep ranked runs, computed once per sfDir (p1/p2/ls1 all
    * consume them — without caching each gate re-scans and re-ranks the
    * whole sweep). */
-  private def sweepRunsCached(s: SparkSession, d: String): DataFrame =
-    cached("sweepRuns", d) {
-      val df = graft.train.ParamTrain.sweepRuns(
-        termDocs(s, d), dict(s, d), corpusStats(s, d), topics, gridModels,
-        topK = K, roundedDouble = Some(4)).persist()
-      df.count()
-      df
-    }
+  private def sweepRuns(s: SparkSession, d: String): DataFrame =
+    persisted("sweepRuns", s, d)(graft.train.ParamTrain.sweepRuns(
+      termDocs(s, d), dict(s, d), corpusStats(s, d), topics, gridModels,
+      topK = K, roundedDouble = Some(4)))
 
   /** Rounded per-(model, qid) sweep metrics (shared by p1/p2/ls1 gate fns). */
   private def sweepPq(s: SparkSession, d: String): DataFrame =
-    cached("sweepPq", d) {
-      val df = graft.train.ParamTrain.sweepEval(sweepRunsCached(s, d), qrelsDf(s, d), k = 10)
+    persisted("sweepPq", s, d)(
+      graft.train.ParamTrain.sweepEval(sweepRuns(s, d), qrelsDf(s, d), k = 10)
         .select(col("model"), col("qid"),
-          round(col("ap"), 6).as("ap"), round(col("ndcg10"), 6).as("ndcg10"))
-        .persist()
-      df.count()
-      df
-    }
+          round(col("ap"), 6).as("ap"), round(col("ndcg10"), 6).as("ndcg10")))
 
   val specs5: Seq[Spec] = Seq(
 
@@ -1550,11 +1449,10 @@ object DriverQueries {
   // skipped at sf10). Output goes through a parquet sink where the mode
   // allows (st1/st4); the complete-mode st2 keeps the tiny memory sink.
 
-  private def memQueryName(prefix: String): String =
-    prefix + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily derived from
-   * the stream's document volume (restored afterwards). The conf fixes the
+  /** Run `f` on a new session (same SparkContext and cache, own conf) whose
+   * `spark.sql.shuffle.partitions` is derived from the stream's document
+   * volume — the caller's session conf is never written, so builds running
+   * concurrently on it keep their parallelism. The conf fixes the
    * STATE-STORE partition count of a streaming query at its first batch —
    * AQE does not apply to streaming — so a session sized for batch
    * parallelism otherwise commits `cpus` state files per micro-batch for a
@@ -1564,24 +1462,19 @@ object DriverQueries {
    * value; at 100 TB the cap IS the cluster parallelism). Results are
    * partition-count-invariant (exact dedup / exact aggregation / stateless
    * map); only task and state-file counts change. */
-  private def withStreamShufflePartitions[A](s: SparkSession, nDocs: Long)(f: => A): A = {
+  private def withStreamSession[A](s: SparkSession, nDocs: Long)(f: SparkSession => A): A = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    val target = math.max(2L, math.min(prev.toLong, nDocs / 2000L + 1L))
-    s.conf.set(key, target.toString)
-    try f finally s.conf.set(key, prev)
+    val ss = s.newSession()
+    ss.conf.set(key, math.max(2L, math.min(s.conf.get(key).toLong, nDocs / 2000L + 1L)).toString)
+    f(ss)
   }
 
   // corpus-sized per-gate dirs (stream inputs/outputs/checkpoints) are
-  // registered here and removed by releaseCaches — a bench loop at sf10
-  // otherwise leaks several GB per suite run and later legs die with
+  // memo entries of their own, deleted by releaseCaches — a bench loop at
+  // sf10 otherwise leaks several GB per suite run and later legs die with
   // ENOSPC (the same failure mode Bench.rmAll/ScaleBench guard against)
-  private val streamTmpDirs = scala.collection.mutable.ArrayBuffer.empty[String]
-  private def streamTmp(prefix: String): String = synchronized {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    streamTmpDirs += d
-    d
-  }
+  private def streamTmp(prefix: String): String =
+    derivations.inTempDir(java.util.UUID.randomUUID().toString, "stream", prefix)(identity)
 
   val specs6: Seq[Spec] = Seq(
 
@@ -1606,8 +1499,8 @@ object DriverQueries {
         // semantics the gate pins (originals fully committed before the
         // copies arrive) live in the processAllAvailable barrier, not in
         // how many micro-batches each group is chopped into
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
-          val src = s.readStream.schema(docs.schema)
+        withStreamSession(s, corpusStats(s, d).numDocs) { ss =>
+          val src = ss.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
           val q = graft.streaming.Streams.dedupByContent(src, "id", "text")
             .writeStream.format("parquet").outputMode("append")
@@ -1637,8 +1530,8 @@ object DriverQueries {
           .select(col("doc_id").cast("long").as("id"), col("text"))
         val inDir = streamTmp("graft-st4-in")
         val outDir = streamTmp("graft-st4-out")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
-          val src = s.readStream.schema(docs.schema)
+        withStreamSession(s, corpusStats(s, d).numDocs) { ss =>
+          val src = ss.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
           val out = graft.streaming.Streams.topicMatches(
             src, "id", "text",
@@ -1681,13 +1574,13 @@ object DriverQueries {
         val docs = Transcripts.table(s, d, "documents")
           .select(col("doc_id").cast("long").as("doc_id"), col("text"))
         val inDir = streamTmp("graft-st2-in")
-        val qn = memQueryName("st2")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
-          val src = s.readStream.schema(docs.schema)
+        withStreamSession(s, corpusStats(s, d).numDocs) { ss =>
+          val src = ss.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
             .withColumn("ts", col("doc_id").cast("timestamp"))
           val out = graft.streaming.Streams.windowedTokenStats(src, "ts", "text", "60 seconds")
-          val q = out.writeStream.format("memory").queryName(qn).outputMode("complete")
+          // the memory sink's view lives in the gate's own session
+          val q = out.writeStream.format("memory").queryName("st2").outputMode("complete")
             .option("checkpointLocation", streamTmp("graft-st2-ck")).start()
           try {
             docs.filter(col("doc_id") < 250).repartition(2)
@@ -1697,8 +1590,8 @@ object DriverQueries {
               .write.mode("append").parquet(inDir)
             q.processAllAvailable()
           } finally q.stop()
+          ss.table("st2")
         }
-        s.table(qn)
       },
       Some("""SELECT (doc_id // 60) * 60 AS window_start, count(*) AS n_docs,
         |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
@@ -1715,8 +1608,8 @@ object DriverQueries {
         val inDir = streamTmp("graft-st3-in")
         val dir = streamTmp("graft-stream-idx")
         val ckpt = streamTmp("graft-stream-ckpt")
-        withStreamShufflePartitions(s, corpusStats(s, d).numDocs) {
-          val src = s.readStream.schema(turns.schema)
+        withStreamSession(s, corpusStats(s, d).numDocs) { ss =>
+          val src = ss.readStream.schema(turns.schema)
             .option("maxFilesPerTrigger", 2).parquet(inDir)
             .as[graft.model.Turn]
           val q = graft.streaming.Streams.indexSink(src, dir, docsPerShard = 256,
@@ -2234,7 +2127,7 @@ object DriverQueries {
       (s, d) => {
         val baseName = Scoring.BM25c(0.9, 0.4).name
         val feats = graft.train.LearnToSelect.klFeatures(
-          sweepRunsCached(s, d), baseName, n = K)
+          sweepRuns(s, d), baseName, n = K)
         graft.train.LearnToSelect.select(feats,
           sweepPq(s, d).select("model", "qid", "ap"), "ap", k = 3)
       },
@@ -2469,7 +2362,7 @@ object DriverQueries {
           .select(col("qid"),
             concat(lit("doc-"), col("doc_id").cast("string"), lit("#0")).as("docId"),
             ((col("doc_id") + col("qid")) % 7 - 2).cast("int").as("judge"))
-        graft.eval.Metrics.judgeHistogram(sweepRunsCached(s, d), jhQrels, k = 10)
+        graft.eval.Metrics.judgeHistogram(sweepRuns(s, d), jhQrels, k = 10)
       },
       Some(s"""WITH $CTES,
         |$sweepPqSql,

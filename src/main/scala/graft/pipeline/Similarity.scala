@@ -83,7 +83,7 @@ object Similarity {
     // tried (smaller expression tree) and REVERTED on sf10 evidence — the
     // nested-lambda form evaluated ~2× slower per row than these per-plane
     // expressions, whose literal arrays constant-fold once at optimization
-    // time (BenchProbe2 at 500k vectors: 4.4–5.7 s vs 9.2–11.9 s for the
+    // time (an isolated A/B at 500k vectors: 4.4–5.7 s vs 9.2–11.9 s for the
     // equivalent cell assignment). Literal-heavy but row-cheap wins here.
     (0 until planes).map { p =>
       val row = array((0 until dim).map(d => lit(planeComponent(p, d, seed))): _*)

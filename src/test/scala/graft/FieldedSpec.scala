@@ -326,4 +326,17 @@ class FieldedSpec extends AnyFunSuite {
       .collect()
     assert(got.length == 1 && got.head.getString(1) == "d1")
   }
+
+  test("natural fielded source: a null-text document keeps its source/lang postings only") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-null-text").toString
+    Seq((1L, "alpha beta alpha", "en", "web"), (2L, null, "de", "news"))
+      .toDF("doc_id", "text", "lang", "source").write.parquet(s"$dir/documents.parquet")
+    val got = graft.driver.DriverQueries.fieldedNaturalSource(spark, dir)
+      .as[(String, String, String, Long, Long)].collect().toSet
+    assert(got == Set(
+      ("doc-1#0", "contents", "alpha", 2L, 3L), ("doc-1#0", "contents", "beta", 1L, 3L),
+      ("doc-1#0", "source", "web", 1L, 1L), ("doc-1#0", "lang", "en", 1L, 1L),
+      ("doc-2#0", "source", "news", 1L, 1L), ("doc-2#0", "lang", "de", 1L, 1L)))
+  }
 }
