@@ -11,9 +11,9 @@ import scala.util.control.NonFatal
  * a key with `putIfAbsent` and computes its value outside the map, so a
  * derivation may use other derivations of the same memo (a recursive
  * `ConcurrentHashMap.compute*` would throw); later callers wait for that
- * computation. A failure is logged with its kind, dir and seconds, and its
- * entry is removed only if it is still that entry: waiters rethrow the
- * failure, the next call recomputes.
+ * computation. Each computation is logged with its kind, dir and seconds.
+ * A failed entry is removed only if it is still that entry: waiters rethrow
+ * the failure, the next call recomputes.
  */
 final class Derivations(log: String => Unit = msg => System.err.println(s"[derivations] $msg")) {
 
@@ -77,12 +77,15 @@ final class Derivations(log: String => Unit = msg => System.err.println(s"[deriv
 
   private def compute(kind: String, dir: String, e: Entry)(mk: => Any): Unit = {
     val t0 = System.nanoTime()
-    try e.future.complete(mk)
-    catch { case t: Throwable =>
+    def secs = (System.nanoTime() - t0) / 1e9
+    val v = try mk catch { case t: Throwable =>
       entries.remove((kind, dir), e)
-      log(f"$kind for $dir failed after ${(System.nanoTime() - t0) / 1e9}%.2f s: $t")
+      log(f"$kind for $dir failed after $secs%.2f s: $t")
       e.future.completeExceptionally(t)
+      return
     }
+    e.future.complete(v)
+    log(f"$kind for $dir took $secs%.2f s")
   }
 
   @annotation.tailrec

@@ -33,9 +33,31 @@ object Codec {
     def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
 
+  /** Cut postings `[from, until)` (docIds ascending) into one block: the
+   * block-max metadata (maxTf, sumTf, minDocLen) plus the three encoded
+   * columns, handed to `mk` as (n, minDoc, maxDoc, maxTf, sumTf, minDocLen,
+   * docBytes, tfBytes, dlBytes). Only the three byte arrays are allocated. */
+  def cutBlock[B](docs: Array[Long], tfs: Array[Long], dls: Array[Long],
+                  from: Int, until: Int, s: Scratch)
+                 (mk: (Int, Long, Long, Long, Long, Long,
+                   Array[Byte], Array[Byte], Array[Byte]) => B): B = {
+    var maxTf = 0L; var sumTf = 0L; var minDl = Long.MaxValue
+    var i = from
+    while (i < until) {
+      if (tfs(i) > maxTf) maxTf = tfs(i)
+      sumTf += tfs(i)
+      if (dls(i) < minDl) minDl = dls(i)
+      i += 1
+    }
+    mk(until - from, docs(from), docs(until - 1), maxTf, sumTf, minDl,
+      encodeDeltasInto(docs, from, until, s),
+      encodeMinus1Into(tfs, from, until, s),
+      encodeMinus1Into(dls, from, until, s))
+  }
+
   /** Delta+varint encode a slice of sorted docIds into a fresh array via a
    * reusable scratch. */
-  def encodeDeltasInto(src: Array[Long], from: Int, until: Int, s: Scratch): Array[Byte] = {
+  private def encodeDeltasInto(src: Array[Long], from: Int, until: Int, s: Scratch): Array[Byte] = {
     s.reset()
     var prev = 0L
     var i = from
@@ -50,7 +72,7 @@ object Codec {
   }
 
   /** Varint encode a slice of values as (v-1) via a reusable scratch. */
-  def encodeMinus1Into(src: Array[Long], from: Int, until: Int, s: Scratch): Array[Byte] = {
+  private def encodeMinus1Into(src: Array[Long], from: Int, until: Int, s: Scratch): Array[Byte] = {
     s.reset()
     var i = from
     while (i < until) {

@@ -20,8 +20,11 @@ import graft.model.FieldedBlock
  * Reference analog: one Lucene index per field with skip-list postings,
  * searched together at `Searcher.java:232-323`.
  *
- * On-disk layout under the SAME dir as the fielded index (two extra stages,
- * each resumable via the [[IndexBuild.stageDone]] marker convention):
+ * On-disk layout: two stages under the dir given to [[build]], each
+ * resumable via the [[IndexBuild.stageDone]] marker convention. [[build]]
+ * writes to any dir ([[graft.driver.DriverQueries]] builds the blocks into a
+ * temp dir of their own); [[load]] reads them from the fielded index's dir,
+ * so blocks meant for [[load]] must be built there:
  * {{{
  *   fdocs/    (docId, docIdNum) — dense ids in docId-STRING order, so
  *             docIdNum ascending ≡ docId ascending (the engine's canonical
@@ -106,19 +109,8 @@ object FieldedBlocks {
       private var pending: FieldedBlock = null
 
       private def cut(): FieldedBlock = {
-        var maxTf = 0L; var sumTf = 0L; var minDl = Long.MaxValue
-        var i = 0
-        while (i < n) {
-          if (tfs(i) > maxTf) maxTf = tfs(i)
-          sumTf += tfs(i)
-          if (dls(i) < minDl) minDl = dls(i)
-          i += 1
-        }
-        val b = FieldedBlock(curShard, curField, curTerm, blockNo, n,
-          docs(0), docs(n - 1), maxTf, sumTf, minDl,
-          Codec.encodeDeltasInto(docs, 0, n, scratch),
-          Codec.encodeMinus1Into(tfs, 0, n, scratch),
-          Codec.encodeMinus1Into(dls, 0, n, scratch))
+        val b = Codec.cutBlock(docs, tfs, dls, 0, n, scratch)(
+          FieldedBlock(curShard, curField, curTerm, blockNo, _, _, _, _, _, _, _, _, _))
         n = 0
         blockNo += 1
         b

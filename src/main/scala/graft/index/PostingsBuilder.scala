@@ -69,20 +69,8 @@ object PostingsBuilder {
     var blockNo = 0
     while (start < tp.n) {
       val end = math.min(start + blockSize, tp.n)
-      var maxTf = 0L; var sumTf = 0L; var minDl = Long.MaxValue
-      var i = start
-      while (i < end) {
-        val tf = tp.tfs(i)
-        if (tf > maxTf) maxTf = tf
-        sumTf += tf
-        if (tp.dls(i) < minDl) minDl = tp.dls(i)
-        i += 1
-      }
-      out += PostingBlock(shard, term, blockNo, end - start,
-        tp.docs(start), tp.docs(end - 1), maxTf, sumTf, minDl,
-        Codec.encodeDeltasInto(tp.docs, start, end, scratch),
-        Codec.encodeMinus1Into(tp.tfs, start, end, scratch),
-        Codec.encodeMinus1Into(tp.dls, start, end, scratch))
+      out += Codec.cutBlock(tp.docs, tp.tfs, tp.dls, start, end, scratch)(
+        PostingBlock(shard, term, blockNo, _, _, _, _, _, _, _, _, _))
       start = end
       blockNo += 1
     }

@@ -50,6 +50,22 @@ final case class Qrel(qid: Int, docId: String, judge: Int)
  * (reference: `Searcher.java:204-226`). */
 final case class RunRow(qid: Int, docId: String, rank: Int, score: Float, tag: String)
 
+/** What the block-max kernel ([[graft.query.BlockMax]]) reads of a
+ * compressed posting block: where it lives (shard, term), its doc range and
+ * block-max metadata, and the three encoded columns ([[graft.index.Codec]]). */
+trait Block {
+  def shard: Int
+  def term: String
+  def n: Int
+  def minDoc: Long
+  def maxDoc: Long
+  def maxTf: Long
+  def minDocLen: Long
+  def docBytes: Array[Byte]
+  def tfBytes: Array[Byte]
+  def dlBytes: Array[Byte]
+}
+
 /**
  * One compressed posting block (SURVEY.md §7.2). Postings of a term are split
  * into fixed-size blocks of (docId, tf) pairs sorted by docId; docIds are
@@ -71,6 +87,7 @@ final case class PostingBlock(
     docBytes: Array[Byte],  // delta+varint docIdNums
     tfBytes: Array[Byte],   // varint (tf-1)
     dlBytes: Array[Byte])   // varint (docLen-1), denormalized norms
+    extends Block
 
 /** Per-document identity map: stable string key ↔ dense numeric id whose
  * ascending order equals the docId string order (tie-break invariant). */
@@ -97,3 +114,4 @@ final case class FieldedBlock(
     docBytes: Array[Byte],
     tfBytes: Array[Byte],
     dlBytes: Array[Byte])
+    extends Block

@@ -1,0 +1,310 @@
+package graft.query
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.index.Codec
+import graft.model.Block
+
+/**
+ * The block-max WAND kernel shared by plain ([[BlockMaxWand]]) and fielded
+ * ([[FieldedBlockMax]]) retrieval (SURVEY.md §7.3; reference: the skip-list
+ * scorer of `Searcher.java:182`, searched per field at `:232-323`).
+ *
+ * A query term is a DisMax stream over its per-field posting cursors; the
+ * plain index is the one-field case (tie 0, msm 1). Within each shard
+ * (contiguous docIdNum range) the WAND loop runs:
+ *
+ *  - per-block bound `B = max(0, score(maxTf, minDocLen))`, valid for models
+ *    monotone increasing in tf / decreasing in docLen (`Model.ubSafe`); the
+ *    `max(0,·)` keeps negative-idf terms safe at the cost of not skipping on
+ *    them. Per-term bounds combine through the DisMax form
+ *    ((1−tie)·max_f B_f + tie·Σ_f B_f)·mult, monotone in every argument;
+ *  - pivot selection on the θ threshold of the shard-local top-k heap, at
+ *    index ≥ msm−1: a doc before `streams(msm−1)` matches fewer than msm
+ *    terms; fewer than msm live streams end the shard;
+ *  - a shallow *current-block* bound check before full evaluation;
+ *  - block-level skipTo: whole blocks whose maxDoc < target stay undecoded.
+ *
+ * Scores: a term scores (mx + tie·(sm − mx))·mult over its fields' scores at
+ * the doc (the caller's closures carry float boundary and boost); the doc
+ * sum runs in UTF8 term order and per-term field sums in UTF8 field order —
+ * the canonical order of [[Fielded.score]]'s array_sort'ed folds, since
+ * double addition is non-associative. `finish` (float cast, or half-up
+ * rounding) is monotone, so a doc whose raw sum ≤ θ finishes ≤ θ and loses
+ * the docId-ascending tie-break to the incumbents: the skips stay exact, and
+ * shard-local top-k sets over disjoint doc ranges merge to the global exact
+ * top-k (score desc, docIdNum asc).
+ */
+object BlockMax {
+
+  /** One query term of a query: multiplicity and, per field holding it, the
+   * score closure `(tf, docLen) => contribution`. */
+  final case class QueryTerm(term: String, mult: Int,
+                             fields: Seq[(String, (Long, Long) => Double)])
+
+  /** A query: minimum number of matched terms and its terms. */
+  final case class Query(msm: Int, terms: Seq[QueryTerm])
+
+  private def utf8(s: String): UTF8String = UTF8String.fromString(s)
+
+  /** Cursor over one posting list's blocks in a shard, ordered by minDoc:
+   * blocks decode lazily and skipTo passes whole blocks undecoded. */
+  final class Cursor(blocks: Array[_ <: Block], score: (Long, Long) => Double) {
+    private val ubs = blocks.map(b => math.max(0d, score(b.maxTf, b.minDocLen)))
+    val maxUb: Double = ubs.max
+    private var bi = 0
+    private var pi = 0
+    private var docs: Array[Long] = _
+    private var tfs: Array[Long] = _
+    private var dls: Array[Long] = _
+    private def decode(): Unit = {
+      val b = blocks(bi)
+      docs = Codec.decodeDeltas(b.docBytes, b.n)
+      tfs = Codec.decodeTfs(b.tfBytes, b.n)
+      dls = Codec.decodeTfs(b.dlBytes, b.n)
+    }
+    decode()
+
+    def exhausted: Boolean = bi >= blocks.length
+    def doc: Long = docs(pi)
+    def posting: Double = score(tfs(pi), dls(pi))
+    def blockUb: Double = ubs(bi)
+
+    def next(): Unit = {
+      pi += 1
+      if (pi >= blocks(bi).n) {
+        pi = 0; bi += 1
+        if (!exhausted) decode()
+      }
+    }
+
+    /** Advance to the first doc ≥ target. */
+    def skipTo(target: Long): Unit = {
+      if (blocks(bi).maxDoc < target) {
+        var lo = bi + 1; var hi = blocks.length
+        while (lo < hi) {
+          val mid = (lo + hi) >>> 1
+          if (blocks(mid).maxDoc < target) lo = mid + 1 else hi = mid
+        }
+        bi = lo; pi = 0
+        if (exhausted) return
+        decode()
+      }
+      while (docs(pi) < target) pi += 1 // maxDoc ≥ target bounds the scan
+    }
+  }
+
+  /** One query term: the DisMax merge of its per-field cursors (UTF8 field
+   * order). A doc matches the term iff any field holds it. */
+  final class Term(cursors: Array[Cursor], mult: Int, tie: Double) {
+    private var live = cursors
+    /** Current doc: min over the live cursors; Long.MaxValue once exhausted. */
+    var doc: Long = 0L
+    settle()
+
+    /** ((1−tie)·max + tie·Σ)·mult over the cursors' global bounds. */
+    val globalUb: Double = {
+      val ubs = cursors.map(_.maxUb)
+      ((1d - tie) * ubs.max + tie * ubs.sum) * mult
+    }
+
+    /** Drops exhausted cursors (allocating only then) and updates `doc`. */
+    private def settle(): Unit = {
+      var i = 0
+      while (i < live.length && !live(i).exhausted) i += 1
+      if (i < live.length) live = live.filter(!_.exhausted)
+      var d = Long.MaxValue
+      i = 0
+      while (i < live.length) { if (live(i).doc < d) d = live(i).doc; i += 1 }
+      doc = d
+    }
+
+    /** DisMax current-block bound over the cursors at `doc`, ×mult. */
+    def blockUb: Double = {
+      var mx = 0d; var sm = 0d
+      var i = 0
+      while (i < live.length) {
+        if (live(i).doc == doc) {
+          val u = live(i).blockUb
+          if (u > mx) mx = u
+          sm += u
+        }
+        i += 1
+      }
+      ((1d - tie) * mx + tie * sm) * mult
+    }
+
+    /** Exact contribution at `doc`: (mx + tie·(sm − mx))·mult. */
+    def score: Double = {
+      var mx = Double.NegativeInfinity; var sm = 0d
+      var i = 0
+      while (i < live.length) {
+        if (live(i).doc == doc) {
+          val s = live(i).posting
+          if (s > mx) mx = s
+          sm += s
+        }
+        i += 1
+      }
+      (mx + tie * (sm - mx)) * mult
+    }
+
+    def next(): Unit = {
+      var i = 0
+      while (i < live.length) { if (live(i).doc == doc) live(i).next(); i += 1 }
+      settle()
+    }
+
+    def skipTo(target: Long): Unit = {
+      var i = 0
+      while (i < live.length) { if (live(i).doc < target) live(i).skipTo(target); i += 1 }
+      settle()
+    }
+  }
+
+  /** Top-k accumulator ordered (score desc, docIdNum asc); ascending doc
+   * traversal ⇒ ties never displace earlier docs. */
+  private final class TopK(k: Int) {
+    private val heap = new java.util.PriorityQueue[(Double, Long)](k,
+      (a: (Double, Long), b: (Double, Long)) => {
+        val c = java.lang.Double.compare(a._1, b._1) // lowest score = worst first
+        if (c != 0) c else java.lang.Long.compare(b._2, a._2) // larger doc = worse
+      })
+    def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.peek()._1
+    def offer(score: Double, doc: Long): Unit = {
+      if (heap.size < k) heap.add((score, doc))
+      else if (score > heap.peek()._1) { heap.poll(); heap.add((score, doc)) }
+    }
+    def drain(): List[(Double, Long)] = {
+      var out = List.empty[(Double, Long)]
+      while (!heap.isEmpty) out = heap.poll() :: out
+      out
+    }
+  }
+
+  private val byDoc: java.util.Comparator[Term] =
+    (a: Term, b: Term) => java.lang.Long.compare(a.doc, b.doc)
+
+  /** The WAND loop over one shard's streams of one query → its top-k
+   * (score, docIdNum), best first. `terms` is in UTF8 term order, the
+   * summation order of a doc's score. */
+  def topK(terms: Array[Term], msm: Int, k: Int,
+           finish: Double => Double): List[(Double, Long)] = {
+    val heap = new TopK(k)
+    val streams = terms.clone() // ordered by current doc; exhausted ones last
+    var live = streams.length
+    def settle(): Unit = {
+      java.util.Arrays.sort(streams, 0, live, byDoc)
+      while (live > 0 && streams(live - 1).doc == Long.MaxValue) live -= 1
+    }
+    settle()
+
+    while (live >= msm) {
+      val theta = heap.theta
+      // pivot: smallest index ≥ msm−1 whose Σ global-UB prefix exceeds θ
+      var acc = 0d
+      var pivot = -1
+      var i = 0
+      while (i < live && pivot < 0) {
+        acc += streams(i).globalUb
+        if (acc > theta && i >= msm - 1) pivot = i
+        i += 1
+      }
+      if (pivot < 0) return heap.drain() // nothing can beat θ anymore
+
+      val pivotDoc = streams(pivot).doc
+      if (streams(0).doc == pivotDoc) {
+        // aligned: every stream that can hold pivotDoc sits at it, and
+        // j > pivot ≥ msm−1 of them do
+        var blockAcc = 0d
+        var j = 0
+        while (j < live && streams(j).doc == pivotDoc) {
+          blockAcc += streams(j).blockUb; j += 1
+        }
+        if (blockAcc > theta) {
+          var s = 0d
+          var m = 0
+          while (m < terms.length) {
+            if (terms(m).doc == pivotDoc) s += terms(m).score
+            m += 1
+          }
+          heap.offer(finish(s), pivotDoc)
+        }
+        var a = 0
+        while (a < j) { streams(a).next(); a += 1 }
+      } else {
+        // advance the laggards up to the pivot
+        var a = 0
+        while (a < live && streams(a).doc < pivotDoc) {
+          streams(a).skipTo(pivotDoc); a += 1
+        }
+      }
+      settle()
+    }
+    heap.drain()
+  }
+
+  /** One shard's top-k of every query as (qid, docIdNum, score); `lists`
+   * holds the shard's posting lists by (term, field), blocks by minDoc. */
+  def shard(lists: Map[(String, String), Array[_ <: Block]], queries: Map[Int, Query],
+            tie: Double, k: Int, finish: Double => Double): Iterator[(Int, Long, Double)] =
+    queries.iterator.flatMap { case (qid, q) =>
+      val terms = q.terms.sortBy(t => utf8(t.term)).flatMap { t =>
+        val cursors = t.fields.sortBy(f => utf8(f._1)).flatMap { case (field, score) =>
+          lists.get((t.term, field)).map(new Cursor(_, score))
+        }
+        if (cursors.isEmpty) None else Some(new Term(cursors.toArray, t.mult, tie))
+      }
+      topK(terms.toArray, q.msm, k, finish).iterator.map { case (score, doc) => (qid, doc, score) }
+    }
+
+  /**
+   * Distributed block-max search, one Spark job for the whole query set:
+   * blocks are pruned to the query terms at the parquet scan (row-group stats
+   * on `term`), grouped by shard, and each shard task runs [[topK]] per
+   * query; the small per-shard candidate sets merge through a global window
+   * top-k joined to `docs` (docIdNum → docId).
+   *
+   * @param field the field a block belongs to (one constant for a plain index)
+   * @param rounded half-up round doc scores to this many decimals and rank
+   *   on the rounded double; None = float scores
+   */
+  def search[B <: Block : ClassTag](blocks: Dataset[B], field: B => String,
+                                    docs: DataFrame, queries: Map[Int, Query],
+                                    tie: Double, k: Int,
+                                    rounded: Option[Int]): DataFrame = {
+    val spark = blocks.sparkSession
+    import spark.implicits._
+    val finish: Double => Double = rounded match {
+      case None => d => d.toFloat.toDouble
+      case Some(decimals) =>
+        d => BigDecimal(d).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+    val termSet = queries.values.flatMap(_.terms.map(_.term)).toSeq.distinct
+    val bQueries = spark.sparkContext.broadcast(queries)
+    val candidates = blocks
+      .filter(col("term").isin(termSet: _*))
+      .groupByKey(_.shard)
+      .flatMapGroups { (_, it) =>
+        // order blocks by doc range, NOT blockNo — a shard straddling a
+        // build-partition boundary has two block runs with repeated blockNos
+        val lists: Map[(String, String), Array[_ <: Block]] = it.toArray
+          .groupBy(b => (b.term, field(b))).view.mapValues(_.sortBy(_.minDoc)).toMap
+        shard(lists, bQueries.value, tie, k, finish)
+      }
+      .toDF("qid", "docIdNum", "score")
+
+    val scoreCol = if (rounded.isEmpty) col("score").cast("float") else col("score")
+    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("docIdNum").asc)
+    candidates
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .join(docs.select("docIdNum", "docId"), "docIdNum")
+      .select(col("qid"), col("docId"), col("rank"), scoreCol.as("score"))
+  }
+}

@@ -1,183 +1,29 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
-import graft.index.{Codec, IndexBuild}
+import graft.index.IndexBuild
 import graft.model.{PostingBlock, Topic}
 
 /**
  * Block-Max WAND top-k over the compressed, document-sharded posting index
- * (SURVEY.md §7.3; north rule "block-max WAND posting-list intersection").
- *
- * Within each shard (contiguous docIdNum range), the classic WAND loop runs
- * over the query terms' block streams:
- *
- *  - per-term global upper bound from block-max metadata
- *    (`ub = max(0, score(maxTf, minDocLen))`, valid for models monotone
- *    increasing in tf / decreasing in docLen — BM25 family, TFIDF, LGD,
- *    DirichletLM; the `max(0,·)` keeps negative-idf stopword terms safe at
- *    the cost of not skipping on them);
- *  - pivot selection on the θ threshold of the shard-local top-k heap;
- *  - a shallow *current-block* upper-bound check before full evaluation;
- *  - block-level skipTo: whole blocks whose maxDoc < target are skipped
- *    without decoding.
+ * (SURVEY.md §7.3; north rule "block-max WAND posting-list intersection"):
+ * the one-field case (tie 0, msm 1) of the [[BlockMax]] kernel.
  *
  * Float discipline matches the exact path bit-for-bit: per-term score cast
  * to float (`ModelBase.java:145`), ×multiplicity accumulated in double,
- * final cast to float; local heap order (score desc, docIdNum asc).
- * Shard-local exact top-k sets merge to the global exact top-k because doc
- * ranges are disjoint. Standing invariant (tested): BMW ≡ exact path.
+ * final cast to float. Standing invariant (tested): BMW ≡ exact path.
  */
 object BlockMaxWand {
 
-  /** Lazily-decoded posting stream over one term's blocks within a shard. */
-  private final class TermStream(blocks: Array[PostingBlock],
-                                 val mult: Int, val df: Long, val cf: Long,
-                                 ubOf: PostingBlock => Double) {
-    val globalUb: Double = if (blocks.isEmpty) 0d else blocks.map(ubOf).max * mult
-    private var bi = 0
-    private var pi = 0
-    private var docs: Array[Long] = _
-    private var tfs: Array[Long] = _
-    private var dls: Array[Long] = _
-    private def decode(): Unit = {
-      val b = blocks(bi)
-      docs = Codec.decodeDeltas(b.docBytes, b.n)
-      tfs = Codec.decodeTfs(b.tfBytes, b.n)
-      dls = Codec.decodeTfs(b.dlBytes, b.n)
-    }
-    if (blocks.nonEmpty) decode()
-
-    def exhausted: Boolean = bi >= blocks.length
-    def curDoc: Long = docs(pi)
-    def curTf: Long = tfs(pi)
-    def curDl: Long = dls(pi)
-    /** Upper bound of the current block (×mult). */
-    def blockUb: Double = ubOf(blocks(bi)) * mult
-
-    def next(): Unit = {
-      pi += 1
-      if (pi >= blocks(bi).n) {
-        pi = 0; bi += 1
-        if (!exhausted) decode()
-      }
-    }
-
-    /** Advance to the first doc ≥ target; skips whole blocks undecoded. */
-    def skipTo(target: Long): Unit = {
-      if (exhausted) return
-      if (blocks(bi).maxDoc < target) {
-        // gallop over blocks by maxDoc without decoding
-        var lo = bi + 1; var hi = blocks.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (blocks(mid).maxDoc < target) lo = mid + 1 else hi = mid
-        }
-        bi = lo; pi = 0
-        if (exhausted) return
-        decode()
-      }
-      while (pi < blocks(bi).n - 1 && docs(pi) < target) pi += 1
-      if (docs(pi) < target) { next(); if (!exhausted) skipTo(target) }
-    }
-  }
-
-  /** Shard-local top-k accumulator ordered (score desc, docIdNum asc);
-   * ascending doc traversal ⇒ ties never displace earlier docs. */
-  private final class TopK(k: Int) {
-    private val heap = new java.util.PriorityQueue[(Double, Long)](k,
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1) // lowest score = worst first
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2) // larger doc = worse
-      })
-    def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.peek()._1
-    def offer(score: Double, doc: Long): Unit = {
-      if (heap.size < k) heap.add((score, doc))
-      else if (score > heap.peek()._1) { heap.poll(); heap.add((score, doc)) }
-    }
-    def drain(): List[(Double, Long)] = {
-      var out = List.empty[(Double, Long)]
-      while (!heap.isEmpty) out = heap.poll() :: out
-      out
-    }
-  }
-
   /**
-   * One shard × one query WAND loop → local top-k (docIdNum, score).
-   *
-   * `perTerm` maps the raw per-term double score to its contribution
-   * (reference float boundary, or identity for the cross-engine rounded
-   * mode) and `finish` maps the per-doc OR-sum to the stored score (float
-   * re-widened, or half-up rounding). Both are monotone, so a doc whose
-   * unfinished sum ≤ θ finishes ≤ θ and future docs lose ties on docId —
-   * the skip conditions stay exact.
-   */
-  private def wand(streams0: Array[TermStream], model: Scoring.Model,
-                   nDocs: Double, nTokens: Double, k: Int,
-                   perTerm: Double => Double,
-                   finish: Double => Double): List[(Double, Long)] = {
-    val topk = new TopK(k)
-    val avgdl = nTokens / nDocs
-    var streams = streams0.filter(!_.exhausted)
-
-    while (streams.nonEmpty) {
-      java.util.Arrays.sort(streams, (a: TermStream, b: TermStream) =>
-        java.lang.Long.compare(a.curDoc, b.curDoc))
-      val theta = topk.theta
-      // pivot: smallest prefix whose Σ global-UB exceeds θ
-      var acc = 0d
-      var pivot = -1
-      var i = 0
-      while (i < streams.length && pivot < 0) {
-        acc += streams(i).globalUb
-        if (acc > theta) pivot = i
-        i += 1
-      }
-      if (pivot < 0) return topk.drain() // nothing can beat θ anymore
-
-      val pivotDoc = streams(pivot).curDoc
-      if (streams(0).curDoc == pivotDoc) {
-        // aligned: shallow current-block bound over all streams at pivotDoc
-        var blockAcc = 0d
-        var j = 0
-        while (j < streams.length && streams(j).curDoc == pivotDoc) {
-          blockAcc += streams(j).blockUb; j += 1
-        }
-        if (blockAcc > theta) {
-          var s = 0d
-          var m = 0
-          while (m < j) {
-            val st = streams(m)
-            s += perTerm(model.score(st.curTf.toDouble, st.curDl, avgdl, 1.0,
-              st.df.toDouble, st.cf.toDouble, nDocs, nTokens)) * st.mult
-            m += 1
-          }
-          topk.offer(finish(s), pivotDoc)
-        }
-        // advance every stream positioned at pivotDoc
-        var a = 0
-        while (a < j) { streams(a).next(); a += 1 }
-      } else {
-        // advance the laggard(s) up to the pivot
-        var a = 0
-        while (a < streams.length && streams(a).curDoc < pivotDoc) {
-          streams(a).skipTo(pivotDoc); a += 1
-        }
-      }
-      streams = streams.filter(!_.exhausted)
-    }
-    topk.drain()
-  }
-
-  /**
-   * Distributed BMW search: one Spark job for the whole topic set.
-   * Blocks are pruned to the query terms' termIds at the parquet scan
-   * (predicate pushdown on `termId`), grouped by shard, and each shard task
-   * runs the WAND loop per topic; the tiny per-shard candidate sets merge
-   * through a global window top-k.
+   * Distributed BMW search: one Spark job for the whole topic set. Blocks
+   * are pruned to the query terms at the parquet scan (predicate pushdown
+   * on `term`), grouped by shard, and each shard task runs the WAND loop per
+   * topic; the tiny per-shard candidate sets merge through a global window
+   * top-k.
    */
   def search(index: IndexBuild.Index, topics: Seq[Topic], model: Scoring.Model,
              k: Int, tag: Analyzer.Tag = Analyzer.Tag.NoStem,
@@ -187,96 +33,47 @@ object BlockMaxWand {
       s"Block-Max WAND is unsound for non-monotone model ${model.name} " +
         "(block bound score(maxTf, minDocLen) would not dominate mid-tf " +
         "postings); use Exact.search")
-    val spark = index.docs.sparkSession
-    import spark.implicits._
 
     // reference float boundary vs cross-engine rounded-double mode (see
-    // Exact.search): per-term map + per-doc finish must both be monotone and
-    // the block upper bounds must go through the same per-term map, or a
-    // float-rounded-down UB could mask a winning doc.
-    val decimals = roundedDouble.getOrElse(-1)
+    // Exact.search): the per-term map must be monotone and the block upper
+    // bounds go through it too, or a float-rounded-down UB could mask a
+    // winning doc.
     val perTerm: Double => Double =
       if (roundedDouble.isEmpty) d => d.toFloat.toDouble else identity
-    val finish: Double => Double =
-      if (roundedDouble.isEmpty) d => d.toFloat.toDouble
-      else d => BigDecimal(d).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).toDouble
 
     // driver-side: analyzed terms + dictionary stats for them (tiny)
     val qterms = Exact.queryTerms(topics, tag) // (qid, term, mult, nTerms)
-    val termSet = qterms.map(_._2).distinct
     val dictRows = index.dict
-      .filter(col("term").isin(termSet: _*))
+      .filter(col("term").isin(qterms.map(_._2).distinct: _*))
       .select("term", "df", "cf")
       .collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
       .toMap
-    // qid → Seq[(term, mult, df, cf)]
-    val plan: Map[Int, Seq[(String, Int, Long, Long)]] = qterms
-      .flatMap { case (qid, term, mult, _) =>
-        dictRows.get(term).map { case (df, cf) => qid -> (term, mult, df, cf) }
-      }
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val bPlan = spark.sparkContext.broadcast(plan)
     // Query-sensitive models: MATF's scalar score() reads the instance's
     // queryLength (the reference's per-query setMaxOverlap), while the exact
     // path reads In.qLen per row — substitute a per-qid instance here or BMW
     // would score every query with the parser default (|q| = 1) and diverge
     // from the exact path on multi-term queries.
-    val perQidModel: Map[Int, Scoring.Model] = model match {
-      case Scoring.MATF(_) =>
-        qterms.groupBy(_._1).view
-          .mapValues(ts => Scoring.MATF(ts.map(_._3).sum): Scoring.Model).toMap
-      case _ => Map.empty
+    def modelOf(ts: Seq[(Int, String, Int, Int)]): Scoring.Model = model match {
+      case Scoring.MATF(_) => Scoring.MATF(ts.map(_._3).sum)
+      case _ => model
     }
-    val bModels = spark.sparkContext.broadcast(perQidModel)
     val nDocs = index.stats.numDocs.toDouble
     val nTokens = index.stats.numTokens.toDouble
-
-    val candidates = index.blocks
-      .filter(col("term").isin(termSet: _*)) // parquet row-group stats prune
-      .as[PostingBlock]
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        // order blocks by doc range, NOT blockNo — a shard straddling a
-        // build-partition boundary has two block runs with repeated blockNos
-        val byTerm = it.toArray.groupBy(_.term)
-          .view.mapValues(_.sortBy(_.minDoc)).toMap
-        bPlan.value.iterator.flatMap { case (qid, terms) =>
-          val qModel = bModels.value.getOrElse(qid, model)
-          val streams = terms.flatMap { case (term, mult, df, cf) =>
-            byTerm.get(term).map { blocks =>
-              val ub: PostingBlock => Double = b =>
-                math.max(0d, perTerm(qModel.score(b.maxTf.toDouble, b.minDocLen,
-                  nTokens / nDocs, 1.0, df.toDouble, cf.toDouble,
-                  nDocs, nTokens)))
-              new TermStream(blocks, mult, df, cf, ub)
-            }
-          }.toArray
-          if (streams.isEmpty) Iterator.empty
-          else wand(streams, qModel, nDocs, nTokens, k, perTerm, finish).iterator
-            .map { case (score, doc) => (qid, doc, score) }
+    val avgdl = nTokens / nDocs
+    val queries = qterms.groupBy(_._1).map { case (qid, ts) =>
+      val qModel = modelOf(ts)
+      qid -> BlockMax.Query(1, ts.flatMap { case (_, term, mult, _) =>
+        dictRows.get(term).map { case (df, cf) =>
+          BlockMax.QueryTerm(term, mult, Seq("" -> ((tf: Long, dl: Long) =>
+            perTerm(qModel.score(tf.toDouble, dl, avgdl, 1.0, df.toDouble, cf.toDouble,
+              nDocs, nTokens)))))
         }
-      }
-      .toDF("qid", "docIdNum", "score")
-
-    val scoreCol = if (roundedDouble.isEmpty) col("score").cast("float") else col("score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("docIdNum").asc)
-    val ranked = candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(index.docs.select("docIdNum", "docId"), "docIdNum")
-      .select(col("qid"), col("docId"), col("rank"), scoreCol.as("score"))
-
-    sentinelDocId match {
-      case None => ranked
-      case Some(sentinel) =>
-        val zero: org.apache.spark.sql.Column =
-          if (roundedDouble.isEmpty) lit(0.0f) else lit(0.0d)
-        val allQ = topics.map(_.qid).toDF("qid")
-        val missing = allQ.join(ranked.select("qid").distinct(), Seq("qid"), "left_anti")
-          .select(col("qid"), lit(sentinel).as("docId"),
-            lit(1).as("rank"), zero.as("score"))
-        ranked.unionByName(missing)
+      })
     }
+
+    val ranked = BlockMax.search(index.blocks, (_: PostingBlock) => "",
+      index.docs, queries, tie = 0d, k, roundedDouble)
+    Exact.withSentinel(ranked, topics, sentinelDocId, roundedDouble.isDefined)
   }
 }

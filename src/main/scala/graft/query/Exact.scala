@@ -83,10 +83,7 @@ object Exact {
              conjunctive: Boolean = false,
              sentinelDocId: Option[String] = None,
              roundedDouble: Option[Int] = None): DataFrame = {
-    val spark = termDocs.sparkSession
-    import spark.implicits._
-
-    val qts = qtermStats(spark, topics, dict, tag)
+    val qts = qtermStats(termDocs.sparkSession, topics, dict, tag)
 
     // roundedDouble: cross-engine-comparable mode — pure double math, final
     // score rounded to d decimals and ranked on the rounded value (ties then
@@ -114,18 +111,27 @@ object Exact {
       .filter(col("rank") <= k)
       .select("qid", "docId", "rank", "score")
 
+    withSentinel(ranked, topics, sentinelDocId, roundedDouble.isDefined)
+  }
+
+  /** `ranked` plus a (qid, sentinel, rank 1, score 0) row for every topic
+   * without hits — an anti-join of topics vs results; score 0 is a double in
+   * the rounded-double mode, a float otherwise. */
+  private[query] def withSentinel(ranked: DataFrame, topics: Seq[Topic],
+                                  sentinelDocId: Option[String],
+                                  roundedDouble: Boolean): DataFrame =
     sentinelDocId match {
       case None => ranked
       case Some(sentinel) =>
-        // anti-join topics vs results → union sentinel rows (rank 1, score 0)
-        val zero: Column = if (roundedDouble.isDefined) lit(0.0d) else lit(0.0f)
-        val allQ = topics.map(_.qid).toDF("qid")
-        val missing = allQ.join(ranked.select("qid").distinct(), Seq("qid"), "left_anti")
+        val spark = ranked.sparkSession
+        import spark.implicits._
+        val zero: Column = if (roundedDouble) lit(0.0d) else lit(0.0f)
+        val missing = topics.map(_.qid).toDF("qid")
+          .join(ranked.select("qid").distinct(), Seq("qid"), "left_anti")
           .select(col("qid"), lit(sentinel).as("docId"),
             lit(1).as("rank"), zero.as("score"))
         ranked.unionByName(missing)
     }
-  }
 
   /** R5 multi-model pass: ONE scan of the posting source producing one score
    * column per model (`FeatureSearcher.java:51-140` recomputes all models per

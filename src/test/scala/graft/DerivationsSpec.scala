@@ -83,6 +83,11 @@ class DerivationsSpec extends AnyFunSuite {
     val msgs = logged.asScala.toSeq
     assert(msgs.size == 1)
     assert(msgs.head.matches("chain for dirX failed after \\d+\\.\\d{2} s: .*IllegalStateException: boom"), msgs.head)
+    assert(d("ok", "dirX")(7) == 7)
+    assert(d("ok", "dirX")(8) == 7)
+    val after = logged.asScala.toSeq
+    assert(after.size == 2, after)
+    assert(after(1).matches("ok for dirX took \\d+\\.\\d{2} s"), after(1))
   }
 
   test("awaitAll waits for entries that a chain registers while it runs") {
