@@ -152,6 +152,11 @@ object Analyzer {
     c
   }
 
+  /** Analyzed length of a document under `tag`: the zero-alloc
+   * [[countTokens]] for NoStem, the analyzed token count otherwise. */
+  def docLength(text: String, tag: Tag): Long =
+    if (tag == Tag.NoStem) countTokens(text).toLong else analyze(text, tag).size.toLong
+
   /** Strip English possessive suffix `'s` / `’s` (reference chain component
    * `englishpossessive`, `Analyzers.java:95-101`). */
   def stripPossessive(token: String): String = {

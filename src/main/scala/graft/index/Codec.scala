@@ -17,7 +17,7 @@ object Codec {
 
   /** Reusable growable varint scratch buffer (unsynchronized, task-local) —
    * block encoding copies once into a right-sized output array instead of
-   * churning ByteArrayOutputStreams. */
+   * allocating a growable output stream per block. */
   final class Scratch(initial: Int = 4096) {
     private var buf = new Array[Byte](initial)
     private var len = 0
@@ -81,43 +81,6 @@ object Codec {
       i += 1
     }
     s.toArray
-  }
-
-  /** Unsigned LEB128 varint append. */
-  private def writeVarLong(buf: java.io.ByteArrayOutputStream, value: Long): Unit = {
-    var v = value
-    while ((v & ~0x7FL) != 0L) {
-      buf.write(((v & 0x7F) | 0x80).toInt)
-      v >>>= 7
-    }
-    buf.write(v.toInt)
-  }
-
-  /** Delta+varint encode a sorted array of longs (docIds). */
-  def encodeDeltas(sorted: Array[Long]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream(sorted.length * 2)
-    var prev = 0L
-    var i = 0
-    while (i < sorted.length) {
-      val d = sorted(i) - prev
-      require(d >= 0, s"docIds must be sorted ascending (gap $d)")
-      writeVarLong(buf, d)
-      prev = sorted(i)
-      i += 1
-    }
-    buf.toByteArray
-  }
-
-  /** Varint encode tf values as (tf - 1). */
-  def encodeTfs(tfs: Array[Long]): Array[Byte] = {
-    val buf = new java.io.ByteArrayOutputStream(tfs.length)
-    var i = 0
-    while (i < tfs.length) {
-      require(tfs(i) >= 1, "tf must be >= 1")
-      writeVarLong(buf, tfs(i) - 1)
-      i += 1
-    }
-    buf.toByteArray
   }
 
   /** Decode n delta+varint longs back to absolute values. */

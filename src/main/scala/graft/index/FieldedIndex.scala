@@ -94,27 +94,19 @@ object FieldedIndex {
     // §2.6: actions are only sequential because driver code calls them
     // sequentially); each stays individually resumable.
     val written = spark.read.parquet(s"$dir/postings")
-    val dictJob: Runnable = () =>
+    val dictJob = () =>
       if (!IndexBuild.stageDone(spark, s"$dir/dict"))
         written.groupBy("field", "term")
           .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
           .repartitionByRange(math.max(1, parts / 4), col("term"))
           .sortWithinPartitions("term")
           .write.mode("overwrite").parquet(s"$dir/dict")
-    val statsJob: Runnable = () =>
+    IndexBuild.alongside(dictJob, "graft-fidx-dict") {
       if (!IndexBuild.stageDone(spark, s"$dir/stats"))
         fieldStatsOf(written)
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/stats")
-    @volatile var dictFailure: Throwable = null
-    val t = new Thread(() => try dictJob.run() catch { case e: Throwable => dictFailure = e },
-      "graft-fidx-dict")
-    t.start()
-    var statsFailure: Throwable = null
-    try statsJob.run() catch { case e: Throwable => statsFailure = e }
-    t.join()
-    if (dictFailure != null) throw dictFailure
-    if (statsFailure != null) throw statsFailure
+    }
     load(spark, dir)
   }
 
@@ -149,7 +141,7 @@ object FieldedIndex {
                 tag: graft.analysis.Analyzer.Tag = graft.analysis.Analyzer.Tag.NoStem): DataFrame = {
     val tfm = Tokenize.tfMapUdf(tag)
     val base = turns.toDF()
-      .withColumn("docId", concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")))
+      .withColumn("docId", graft.data.Transcripts.docIdCol)
     val contents = base
       .withColumn("tfMap", tfm(col("text")))
       .withColumn("docLen", aggregate(map_values(col("tfMap")), lit(0L), (acc, x) => acc + x))

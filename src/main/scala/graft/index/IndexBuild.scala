@@ -5,11 +5,15 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
+import graft.data.Transcripts
 import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
 
 /**
  * Resumable index build (SURVEY.md §7.2/§7.5, north rule: "resumable from
- * checkpoint with per-partition lineage + metrics").
+ * checkpoint with per-partition lineage + metrics"), and the one owner of
+ * the plain index's on-disk layout: [[build]] and the streaming append
+ * ([[graft.streaming.Streams.appendBatch]]) write it through the same docs
+ * stage, term-stats aggregation, dict-snapshot writer and marker I/O here.
  *
  * On-disk layout under `indexDir/`:
  * {{{
@@ -18,6 +22,9 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  *   dict/        term, termId, df, cf           (+ _SUCCESS; derived from
  *                                                block metadata — no extra
  *                                                pass over the corpus)
+ *   dicts/v=N/   the same columns, as immutable snapshots: an appended
+ *                index supersedes dict/ with them, and `_dict_version`
+ *                names the current one (see [[dictPath]])
  *   manifest/    per-shard lineage + metrics rows, appended per wave
  * }}}
  *
@@ -53,7 +60,7 @@ object IndexBuild {
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(spark: SparkSession, p: String): Boolean =
+  private[graft] def exists(spark: SparkSession, p: String): Boolean =
     fs(spark, p).exists(new Path(p))
 
   def stageDone(spark: SparkSession, stageDir: String): Boolean =
@@ -140,16 +147,12 @@ object IndexBuild {
             failAfterWave: Int = -1,
             inputSorted: Boolean = false): Index = {
     val spark = turns.sparkSession
-    import spark.implicits._
-    // Resume safety: completedShards treats an on-disk shard=K dir as
-    // committed, which is only true under job-level commit — pin the v1
-    // committer so partition dirs surface at job commit, never mid-wave.
-    spark.sparkContext.hadoopConfiguration
-      .setInt("mapreduce.fileoutputcommitter.algorithm.version", 1)
+    pinJobCommit(spark)
     val docsDir = s"$indexDir/docs"
     val dictDir = s"$indexDir/dict"
     val postingsDir = s"$indexDir/postings"
     val manifestDir = s"$indexDir/manifest"
+    val docsWasDone = stageDone(spark, docsDir)
 
     // inputSorted trusts in-partition order AS docId-string order — the
     // engine's canonical tie-break order (exact path, BMW heap, windows).
@@ -160,9 +163,8 @@ object IndexBuild {
     // arbitrary task order — DenseIds numbers them in min-key order). A
     // numeric (conv_id, turn_idx) sort with turn_idx ≥ 10 would fail here
     // ("c#10" sorts before "c#2" numerically but after as a string).
-    if (inputSorted && !stageDone(spark, s"$indexDir/docs")) {
-      val docIdCol = concat(col("conv_id"), lit("#"), col("turn_idx").cast("string"))
-      val bounds = turns.toDF().select(docIdCol.as("docId"))
+    if (inputSorted && !docsWasDone) {
+      val bounds = docText(turns).select("docId")
         .rdd.mapPartitionsWithIndex { (pi, it) =>
           var first: String = null; var last: String = null; var sorted = true
           it.foreach { r =>
@@ -195,222 +197,258 @@ object IndexBuild {
     // Instead, join the committed mapping back onto the input and restore
     // the shard-build invariant (docIdNum ascending within partitions) with
     // a range shuffle on the now-FIXED numeric ids.
-    val docsWasDone = stageDone(spark, docsDir)
     lazy val freshAssigned = DenseIds.assignCounted(
-      turns.toDF().select(
-        concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-        col("text")),
-      "docIdNum", assumeSorted = inputSorted, col("docId"))
+      docText(turns), "docIdNum", assumeSorted = inputSorted, col("docId"))
     lazy val turnsWithId: DataFrame =
       if (docsWasDone) {
         val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
-        turns.toDF().select(
-            concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-            col("text"))
+        docText(turns)
           .join(spark.read.parquet(docsDir).select("docId", "docIdNum"), "docId")
           .repartitionByRange(parts, col("docIdNum"))
           .sortWithinPartitions("docIdNum")
       } else freshAssigned._1
 
-    // -- stage 1: docs (docId, docIdNum, docLen), one zero-alloc count pass.
-    // Round 6 (optimization guide §2.6): on a FRESH build the docs write is
-    // independent of the postings waves (both scan turnsWithId), and the
-    // shard space is already known from the numbering's own count pass
-    // (dense ids ⇒ maxDocIdNum = n − 1) — so the docs job runs on its own
-    // thread and the postings waves back-fill the scheduler alongside it.
-    // The resume path keeps the sequential read of the committed docs.
-    @volatile var docsFailure: Throwable = null
-    val docsThread: Option[Thread] =
-      if (docsWasDone) None
-      else {
-        val work: Runnable = () =>
-          try {
-            turnsWithId.select("docId", "docIdNum", "text").as[(String, Long, String)]
-              .mapPartitions(_.map { case (docId, num, text) =>
-                val dl =
-                  if (tag == Analyzer.Tag.NoStem) Analyzer.countTokens(text).toLong
-                  else Analyzer.analyze(text, tag).size.toLong
-                DocEntry(docId, num, dl)
-              })
-              .write.mode("overwrite").parquet(docsDir)
-          } catch { case e: Throwable => docsFailure = e }
-        val t = new Thread(work, "graft-idx-docs")
-        t.start()
-        Some(t)
-      }
-
+    // -- stage 2: postings via fused segment build, shard-granular resume.
     // Shard space from BOTH the doc count and the max id: the build's own
     // numbering is dense (maxId + 1 == numDocs), but a streaming-appended
     // index aligns each batch to a shard boundary, leaving id gaps — a
-    // count-only bound would never repair its upper shards. Fresh build:
-    // both come from the numbering count (no job); resume: from the
-    // committed docs.
-    val (numDocsForShards, maxDocIdNum) =
-      if (docsWasDone) {
-        val r = spark.read.parquet(docsDir)
-          .agg(count(lit(1)), coalesce(max("docIdNum"), lit(-1L))).head()
-        (r.getLong(0), r.getLong(1))
-      } else (freshAssigned._2, freshAssigned._2 - 1)
-
-    // -- stage 2: postings via fused segment build, shard-granular resume --
-    val numShards = math.max(1,
-      ((math.max(numDocsForShards, maxDocIdNum + 1) + docsPerShard - 1) / docsPerShard).toInt)
-    val done = completedShards(spark, postingsDir)
-    val todo = (0 until numShards).filterNot(done)
-    val repairedShards = todo.nonEmpty // consumed by the dict stage below
-
-    try if (todo.nonEmpty) {
-      val groups = {
-        val per = math.max(1, math.ceil(todo.size.toDouble / math.max(1, waves)).toInt)
-        todo.grouped(per).toSeq
+    // count-only bound would never repair its upper shards. Returns whether
+    // any shard was (re)written.
+    def writePostings(numDocs: Long, maxDocIdNum: Long): Boolean = {
+      val numShards = math.max(1,
+        ((math.max(numDocs, maxDocIdNum + 1) + docsPerShard - 1) / docsPerShard).toInt)
+      val done = completedShards(spark, postingsDir)
+      val todo = (0 until numShards).filterNot(done)
+      if (todo.nonEmpty) {
+        val groups = {
+          val per = math.max(1, math.ceil(todo.size.toDouble / math.max(1, waves)).toInt)
+          todo.grouped(per).toSeq
+        }
+        // Wave-scoped input pruning: when a wave covers only part of the
+        // shard space (multi-wave build, or a resume with committed shards),
+        // prune whole INPUT partitions whose docIdNum range misses the wave
+        // — a wave then reads ~its share of the input instead of scanning
+        // everything and discarding rows inside mapPartitions.
+        //
+        // CONSISTENCY: the bounds pass runs on the SAME RDD object the wave
+        // jobs prune (`baseRdd`), so any shuffle in the lineage materializes
+        // once and is REUSED by every subsequent job (Spark skips the map
+        // stage of an already-computed ShuffleDependency) — the partitioning
+        // the bounds describe is physically the partitioning the waves read.
+        // A fresh DataFrame aggregate would NOT give that guarantee: the
+        // resume path's repartitionByRange re-samples boundaries per
+        // execution (seeded by rdd.id), and drift between the bounds job and
+        // the wave job would silently prune partitions that still hold
+        // wanted-shard docs.
+        val pruneWaves = groups.size > 1 || done.nonEmpty
+        lazy val baseRdd = {
+          import spark.implicits._
+          turnsWithId.select("docIdNum", "text").as[(Long, String)].rdd
+        }
+        lazy val partBounds: Array[(Int, Long, Long)] =
+          baseRdd.mapPartitionsWithIndex { (pi, it) =>
+            var mn = Long.MaxValue; var mx = Long.MinValue
+            it.foreach { case (num, _) =>
+              if (num < mn) mn = num
+              if (num > mx) mx = num
+            }
+            if (mn == Long.MaxValue) Iterator.empty else Iterator((pi, mn, mx))
+          }.collect()
+        groups.zipWithIndex.foreach { case (shardGroup, wave) =>
+          val t0 = System.nanoTime()
+          val groupSet = shardGroup.toSet
+          val blocks =
+            if (pruneWaves) {
+              val keep = partitionsForShards(partBounds, groupSet, docsPerShard)
+              PostingsBuilder.buildSegmentsRdd(spark,
+                org.apache.spark.rdd.PartitionPruningRDD.create(baseRdd, keep.contains),
+                tag, docsPerShard, shardFilter = groupSet.contains)
+            } else PostingsBuilder.buildSegments(turnsWithId, tag, docsPerShard,
+              shardFilter = groupSet.contains)
+          blocks
+            .toDF()
+            .write.mode("append").partitionBy("shard").parquet(postingsDir)
+          // per-shard lineage + metrics from the blocks just committed
+          val wallMs = (System.nanoTime() - t0) / 1000000L
+          // two-stage (shard, term) partials → per-shard roll-up: mixing
+          // countDistinct with plain sums plans an Expand that doubles the
+          // block rows through the shuffle (see FieldedIndex.fieldStatsOf;
+          // block terms are non-null by construction, so count(*) over the
+          // (shard, term) groups ≡ the old countDistinct)
+          spark.read.parquet(postingsDir)
+            .filter(col("shard").isin(shardGroup: _*))
+            .groupBy("shard", "term")
+            .agg(count(lit(1)).as("tBlocks"), sum("n").as("tPostings"),
+              sum("maxTf").as("tMaxTf"))
+            .groupBy("shard")
+            .agg(sum("tBlocks").as("nBlocks"), sum("tPostings").as("nPostings"),
+              count(lit(1)).as("nTerms"), sum("tMaxTf").as("sumMaxTf"))
+            .withColumn("wave", lit(wave))
+            .withColumn("wallMs", lit(wallMs))
+            .write.mode("append").parquet(manifestDir)
+          if (failAfterWave == wave) throw new InjectedFailure(wave)
+        }
       }
-      // Wave-scoped input pruning: when a wave covers only part of the shard
-      // space (multi-wave build, or a resume with committed shards), prune
-      // whole INPUT partitions whose docIdNum range misses the wave — a wave
-      // then reads ~its share of the input instead of scanning everything
-      // and discarding rows inside mapPartitions.
-      //
-      // CONSISTENCY: the bounds pass runs on the SAME RDD object the wave
-      // jobs prune (`baseRdd`), so any shuffle in the lineage materializes
-      // once and is REUSED by every subsequent job (Spark skips the map
-      // stage of an already-computed ShuffleDependency) — the partitioning
-      // the bounds describe is physically the partitioning the waves read.
-      // A fresh DataFrame aggregate would NOT give that guarantee: the
-      // resume path's repartitionByRange re-samples boundaries per
-      // execution (seeded by rdd.id), and drift between the bounds job and
-      // the wave job would silently prune partitions that still hold
-      // wanted-shard docs.
-      val pruneWaves = groups.size > 1 || done.nonEmpty
-      lazy val baseDs = {
-        import spark.implicits._
-        turnsWithId.select("docIdNum", "text").as[(Long, String)]
-      }
-      lazy val baseRdd = baseDs.rdd
-      lazy val partBounds: Array[(Int, Long, Long)] =
-        baseRdd.mapPartitionsWithIndex { (pi, it) =>
-          var mn = Long.MaxValue; var mx = Long.MinValue
-          it.foreach { case (num, _) =>
-            if (num < mn) mn = num
-            if (num > mx) mx = num
-          }
-          if (mn == Long.MaxValue) Iterator.empty else Iterator((pi, mn, mx))
-        }.collect()
-      groups.zipWithIndex.foreach { case (shardGroup, wave) =>
-        val t0 = System.nanoTime()
-        val groupSet = shardGroup.toSet
-        val blocks =
-          if (pruneWaves) {
-            val keep = partitionsForShards(partBounds, groupSet, docsPerShard)
-            PostingsBuilder.buildSegmentsRdd(spark,
-              org.apache.spark.rdd.PartitionPruningRDD.create(baseRdd, keep.contains),
-              tag, docsPerShard, shardFilter = groupSet.contains)
-          } else PostingsBuilder.buildSegments(turnsWithId, tag, docsPerShard,
-            shardFilter = groupSet.contains)
-        blocks
-          .toDF()
-          .write.mode("append").partitionBy("shard").parquet(postingsDir)
-        // per-shard lineage + metrics from the blocks just committed
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        // two-stage (shard, term) partials → per-shard roll-up: mixing
-        // countDistinct with plain sums plans an Expand that doubles the
-        // block rows through the shuffle (see FieldedIndex.fieldStatsOf;
-        // block terms are non-null by construction, so count(*) over the
-        // (shard, term) groups ≡ the old countDistinct)
-        spark.read.parquet(postingsDir)
-          .filter(col("shard").isin(shardGroup: _*))
-          .groupBy("shard", "term")
-          .agg(count(lit(1)).as("tBlocks"), sum("n").as("tPostings"),
-            sum("maxTf").as("tMaxTf"))
-          .groupBy("shard")
-          .agg(sum("tBlocks").as("nBlocks"), sum("tPostings").as("nPostings"),
-            count(lit(1)).as("nTerms"), sum("tMaxTf").as("sumMaxTf"))
-          .withColumn("wave", lit(wave))
-          .withColumn("wallMs", lit(wallMs))
-          .write.mode("append").parquet(manifestDir)
-        if (failAfterWave == wave) throw new InjectedFailure(wave)
-      }
+      todo.nonEmpty
     }
-    // the concurrent docs write must be fully committed (or its failure
-    // surfaced) before anything below reads docsDir — and ALSO when a wave
-    // throws (kill-resume re-enters build in the same JVM and must not see
-    // a half-written docs stage racing a fresh attempt)
-    finally docsThread.foreach(_.join())
-    if (docsFailure != null) throw docsFailure
 
-    val docs = spark.read.parquet(docsDir)
-    val statsRow = docs.agg(count(lit(1)), coalesce(sum("docLen"), lit(0L))).head()
-    val stats = CorpusStats(statsRow.getLong(0), statsRow.getLong(1))
+    // -- stage 1: docs. Round 6 (optimization guide §2.6): on a FRESH build
+    // the docs write is independent of the postings waves (both scan
+    // turnsWithId), and the shard space is already known from the
+    // numbering's own count pass (dense ids ⇒ maxDocIdNum = n − 1) — so the
+    // docs job runs alongside the waves and they back-fill the scheduler.
+    // It is joined before docsDir is read below, and also when a wave
+    // throws: kill-resume re-enters build in the same JVM and must not see
+    // a half-written docs stage racing a fresh attempt. The resume path
+    // reads the shard space from the committed docs instead.
+    val repairedShards =
+      if (docsWasDone) {
+        val (numDocs, maxDocIdNum) = docsExtent(spark, docsDir)
+        writePostings(numDocs, maxDocIdNum)
+      } else {
+        val numDocs = freshAssigned._2
+        alongside(() => writeDocs(turnsWithId, tag, docsDir, "overwrite"), "graft-idx-docs")(
+          writePostings(numDocs, numDocs - 1))
+      }
 
     // commit marker for the postings stage as a whole
-    val f = fs(spark, postingsDir)
-    f.create(new Path(s"$postingsDir/_GRAFT_COMPLETE"), true).close()
-
-
+    writeSmallFile(spark, s"$postingsDir/_GRAFT_COMPLETE")
 
     // -- stage 3: dict from block metadata (no corpus pass) --
     // A streaming-appended index supersedes the flat dict/ with versioned
-    // snapshots (`_dict_version` marker) — never resurrect the stale flat
-    // dir over them. BUT if THIS build call committed new posting shards
-    // (repairing a crashed append), the latest snapshot no longer covers
-    // them: write a fresh full-aggregation snapshot and advance the
-    // version, so the returned dict counts every shard on disk.
-    val hasSnapshots = exists(spark, s"$indexDir/_dict_version")
-    if (hasSnapshots) {
-      if (repairedShards) {
-        val termStats = spark.read.parquet(postingsDir)
-          .groupBy("term")
-          .agg(sum("n").as("df"), sum("sumTf").as("cf"))
-        val newVer = readSmallFile(spark, s"$indexDir/_dict_version").get.toLong + 1
-        Dictionary.withIds(termStats)
-          .write.mode("overwrite").parquet(s"$indexDir/dicts/v=$newVer")
-        writeSmallFile(spark, s"$indexDir/_dict_version", newVer.toString)
-      }
-    } else if (!stageDone(spark, dictDir)) {
-      val termStats = spark.read.parquet(postingsDir)
-        .groupBy("term")
-        .agg(sum("n").as("df"), sum("sumTf").as("cf"))
-      Dictionary.withIds(termStats)
+    // snapshots — never resurrect the stale flat dir over them. BUT if THIS
+    // build call committed new posting shards (repairing a crashed append),
+    // the latest snapshot no longer covers them: write a fresh
+    // full-aggregation snapshot, so the returned dict counts every shard.
+    val version = dictVersion(spark, indexDir)
+    if (version > 0L) {
+      if (repairedShards)
+        writeDictSnapshot(spark, indexDir, termStatsOf(spark.read.parquet(postingsDir)), version)
+    } else if (!stageDone(spark, dictDir))
+      Dictionary.withIds(termStatsOf(spark.read.parquet(postingsDir)))
         .write.mode("overwrite").parquet(dictDir)
-    }
-    val dict = spark.read.parquet(dictPath(spark, indexDir))
 
-    Index(docs, dict, spark.read.parquet(postingsDir).as[PostingBlock], stats)
+    load(spark, indexDir)
   }
 
-  private def readSmallFile(spark: SparkSession, path: String): Option[String] = {
-    val p = new Path(path)
-    val f = fs(spark, path)
-    if (!f.exists(p)) None
+  /** Resume and replay read an on-disk `shard=K` or docs dir as committed,
+   * which holds only under job-level commit — pin the v1 committer so
+   * partition dirs surface at job commit, never mid-job. */
+  private[graft] def pinJobCommit(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration
+      .setInt("mapreduce.fileoutputcommitter.algorithm.version", 1)
+
+  /** (docId, text) of each turn — the input the numbering, docs and
+   * postings stages share. */
+  private[graft] def docText(turns: Dataset[Turn]): DataFrame =
+    turns.toDF().select(Transcripts.docIdCol.as("docId"), col("text"))
+
+  /** The docs stage: numbered (docId, docIdNum, text) rows → `DocEntry`
+   * rows with the analyzed doc length, one zero-shuffle pass, written to
+   * `docsDir` with save mode `mode`. */
+  private[graft] def writeDocs(withId: DataFrame, tag: Analyzer.Tag,
+                               docsDir: String, mode: String): Unit = {
+    val spark = withId.sparkSession
+    import spark.implicits._
+    withId.select("docId", "docIdNum", "text").as[(String, Long, String)]
+      .mapPartitions(_.map { case (docId, num, text) =>
+        DocEntry(docId, num, Analyzer.docLength(text, tag)) })
+      .write.mode(mode).parquet(docsDir)
+  }
+
+  /** (doc count, max docIdNum or −1 when empty) of a committed docs table:
+   * the shard space of a resumed build, the numbering start of an append
+   * onto an index without a high-water mark. */
+  private[graft] def docsExtent(spark: SparkSession, docsDir: String): (Long, Long) = {
+    val r = spark.read.parquet(docsDir)
+      .agg(count(lit(1)), coalesce(max("docIdNum"), lit(-1L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** (term, df, cf) from posting-block metadata (`n`, `sumTf`). */
+  private[graft] def termStatsOf(blocks: DataFrame): DataFrame =
+    blocks.groupBy("term").agg(sum("n").as("df"), sum("sumTf").as("cf"))
+
+  private def versionFile(indexDir: String) = s"$indexDir/_dict_version"
+
+  /** Directory of dict snapshot `v`. */
+  private[graft] def snapshotDir(indexDir: String, v: Long): String = s"$indexDir/dicts/v=$v"
+
+  /** Current dict snapshot version; 0 = none (a batch build's flat dict). */
+  private[graft] def dictVersion(spark: SparkSession, indexDir: String): Long =
+    readSmallFile(spark, versionFile(indexDir)).fold(0L)(_.toLong)
+
+  /** The snapshot an append merges onto: the current version, after a
+   * one-time promotion of a batch build's flat `dict/` to `dicts/v=1` (the
+   * flat dir is rewritten in place by a rebuild, so it cannot serve as an
+   * immutable replay base). */
+  private[graft] def snapshotBase(spark: SparkSession, indexDir: String): Long = {
+    if (dictVersion(spark, indexDir) == 0L && stageDone(spark, s"$indexDir/dict"))
+      writeDictSnapshot(spark, indexDir, spark.read.parquet(s"$indexDir/dict"), 0L)
+    dictVersion(spark, indexDir)
+  }
+
+  /** Write `termStats` (term, df, cf), numbered, as snapshot `base + 1` and
+   * advance `_dict_version` to it. Snapshot `base − 1` is deleted: a
+   * replayed append re-merges onto `base`, which is kept, so nothing older
+   * can be read again. */
+  private[graft] def writeDictSnapshot(spark: SparkSession, indexDir: String,
+                                       termStats: DataFrame, base: Long): Unit = {
+    Dictionary.withIds(termStats).write.mode("overwrite").parquet(snapshotDir(indexDir, base + 1))
+    writeSmallFile(spark, versionFile(indexDir), (base + 1).toString)
+    if (base > 1) fs(spark, indexDir).delete(new Path(snapshotDir(indexDir, base - 1)), true)
+  }
+
+  /** Trimmed UTF-8 body of a small marker file, if present. */
+  private[graft] def readSmallFile(spark: SparkSession, path: String): Option[String] =
+    if (!exists(spark, path)) None
     else {
-      val in = f.open(p)
-      val b = new java.io.ByteArrayOutputStream()
-      try { var c = in.read(); while (c >= 0) { b.write(c); c = in.read() } } finally in.close()
-      Some(b.toString("UTF-8").trim)
+      val in = fs(spark, path).open(new Path(path))
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
+    }
+
+  private[graft] def writeSmallFile(spark: SparkSession, path: String, body: String = ""): Unit = {
+    val out = fs(spark, path).create(new Path(path), true)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Run `background` on its own thread while `foreground` runs on this
+   * one — two independent Spark jobs sharing the scheduler. The background
+   * job is joined before this returns or throws, so no caller reads its
+   * output half-written; a foreground failure is thrown first, with a
+   * background failure attached to it as suppressed. */
+  private[graft] def alongside[A](background: () => Unit, name: String)(foreground: => A): A = {
+    @volatile var bgFailure: Throwable = null
+    val t = new Thread(() => try background() catch { case e: Throwable => bgFailure = e }, name)
+    t.start()
+    var fgFailure: Throwable = null
+    try foreground
+    catch { case e: Throwable => fgFailure = e; throw e }
+    finally {
+      t.join()
+      if (bgFailure != null) {
+        if (fgFailure != null) fgFailure.addSuppressed(bgFailure)
+        else throw bgFailure
+      }
     }
   }
 
-  private def writeSmallFile(spark: SparkSession, path: String, body: String): Unit = {
-    val p = new Path(path)
-    val out = fs(spark, path).create(p, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-  }
-
-  /** Current dictionary location: a streaming-appended index carries a
+  /** Current dictionary location: an appended index carries a
    * `_dict_version` marker naming the latest immutable snapshot under
    * `dicts/v=N` (see [[graft.streaming.Streams.appendBatch]]); a pure
    * batch build uses the flat `dict/` stage dir. */
-  def dictPath(spark: SparkSession, indexDir: String): String =
-    readSmallFile(spark, s"$indexDir/_dict_version")
-      .fold(s"$indexDir/dict")(v => s"$indexDir/dicts/v=${v.toLong}")
+  def dictPath(spark: SparkSession, indexDir: String): String = {
+    val v = dictVersion(spark, indexDir)
+    if (v > 0L) snapshotDir(indexDir, v) else s"$indexDir/dict"
+  }
 
   def load(spark: SparkSession, indexDir: String): Index = {
     import spark.implicits._
     val docs = spark.read.parquet(s"$indexDir/docs")
-    val statsRow = docs.agg(count(lit(1)), coalesce(sum("docLen"), lit(0L))).head()
     Index(
       docs,
       spark.read.parquet(dictPath(spark, indexDir)),
       spark.read.parquet(s"$indexDir/postings").as[PostingBlock],
-      CorpusStats(statsRow.getLong(0), statsRow.getLong(1)))
+      Tokenize.corpusStats(docs))
   }
 }

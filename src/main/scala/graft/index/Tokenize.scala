@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
+import graft.data.Transcripts
 import graft.model.{CorpusStats, Turn}
 
 /**
@@ -38,31 +39,18 @@ object Tokenize {
   def termDocs(turns: Dataset[Turn], tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
     val tfm = tfMapUdf(tag)
     turns
-      .withColumn("docId", concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")))
+      .withColumn("docId", Transcripts.docIdCol)
       .withColumn("tfMap", tfm(col("text")))
       .withColumn("docLen", aggregate(map_values(col("tfMap")), lit(0L), (acc, x) => acc + x))
       .select(col("docId"), col("docLen"), explode(col("tfMap")).as(Seq("term", "tf")))
   }
 
   /** docs(docId, docLen) — includes empty documents (docLen 0), which never
-   * appear in termDocs. One map pass over turns. Round 6: for the NoStem
-   * tag the doc length comes from the zero-alloc [[TokenCounter]] counter
-   * (the same `countTokens ≡ analyze(_, NoStem).size` equivalence the
-   * index build's docs stage relies on) instead of building a tf HashMap
-   * per document just to sum its values. */
+   * appear in termDocs. One map pass over turns; the length is the index
+   * build's own [[Analyzer.docLength]] (zero-alloc for NoStem). */
   def docs(turns: Dataset[Turn], tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
-    val dlCol =
-      if (tag == Analyzer.Tag.NoStem) {
-        val cnt = udf((text: String) => Analyzer.countTokens(text).toLong)
-        cnt(col("text"))
-      } else {
-        val tfm = tfMapUdf(tag)
-        aggregate(map_values(tfm(col("text"))), lit(0L), (acc, x) => acc + x)
-      }
-    turns
-      .select(
-        concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-        dlCol.as("docLen"))
+    val docLen = udf((text: String) => Analyzer.docLength(text, tag))
+    turns.select(Transcripts.docIdCol.as("docId"), docLen(col("text")).as("docLen"))
   }
 
   /** Corpus statistics N (docCount incl. empty docs) and C (sumTotalTermFreq)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.analysis.Analyzer
-import graft.index.{Dictionary, DenseIds, PostingsBuilder}
+import graft.index.{DenseIds, IndexBuild, PostingsBuilder}
 import graft.model.Turn
 
 /**
@@ -64,10 +64,6 @@ object Streams {
         col("n_docs"), col("n_tokens"))
   }
 
-  /** O(docs) fallback scan, used ONLY when no `_hwm` marker exists yet
-   * (first batch on a pre-existing batch-built index). Every committed
-   * append persists the high-water mark, so steady-state batches never
-   * re-scan the docs table (round-2 VERDICT "What's wrong" #2). */
   /**
    * Streaming topic match ("percolation"): score every incoming turn
    * against a STANDING query set — the reference's searcher inverted
@@ -187,55 +183,6 @@ object Streams {
       release)
   }
 
-  private def maxDocIdNum(spark: org.apache.spark.sql.SparkSession, docsDir: String): Option[Long] = {
-    val p = new Path(docsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val r = spark.read.parquet(docsDir).agg(max("docIdNum")).head()
-      if (r.isNullAt(0)) None else Some(r.getLong(0))
-    }
-  }
-
-  /**
-   * Append one micro-batch of turns to an (possibly empty) index directory.
-   *
-   * The batch gets docIdNums starting at the next shard boundary past the
-   * current maximum, so its shards (`docIdNum / docsPerShard`) are disjoint
-   * from every earlier batch — the fused segment build then runs unchanged
-   * and the shard files land under new `shard=K` partition dirs. Within a
-   * batch ids follow docId-string order (DenseIds); ACROSS batches order is
-   * arrival order, so score ties across batches break by arrival — the
-   * standard streaming-ingest semantic (a batch rebuild re-sorts globally).
-   */
-  private def markerPath(indexDir: String, name: String) = new Path(s"$indexDir/$name")
-
-  private def markerExists(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String, name: String): Boolean = {
-    val p = markerPath(indexDir, name)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def writeMarker(spark: org.apache.spark.sql.SparkSession,
-                          indexDir: String, name: String, body: String = ""): Unit = {
-    val p = markerPath(indexDir, name)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    out.write(body.getBytes("UTF-8")); out.close()
-  }
-
-  private def readMarker(spark: org.apache.spark.sql.SparkSession,
-                         indexDir: String, name: String): Option[String] = {
-    val p = markerPath(indexDir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val b = new java.io.ByteArrayOutputStream()
-      try { var c = in.read(); while (c >= 0) { b.write(c); c = in.read() } } finally in.close()
-      Some(b.toString("UTF-8"))
-    }
-  }
-
   /** Marker-name prefix for one logical stream's batch sidecars. Two
    * different streaming queries over the same index (fresh checkpoints —
    * batch ids restart at 0) MUST use different tokens, or query B's batch 0
@@ -263,31 +210,37 @@ object Streams {
     }
   }
 
-  /** High-water mark + dict-version markers are run-agnostic: they describe
-   * the INDEX state, carried across batches and across queries. */
+  /** The high-water mark is run-agnostic: it describes the INDEX state,
+   * carried across batches and across queries. */
   private val HWM = "_hwm"
-  private val DICT_VERSION = "_dict_version"
-
-  private def currentDictVersion(spark: org.apache.spark.sql.SparkSession,
-                                 indexDir: String): Long =
-    readMarker(spark, indexDir, DICT_VERSION).map(_.trim.toLong).getOrElse(0L)
 
   /**
    * Append one micro-batch of turns to an (possibly empty) index directory.
+   *
+   * The batch gets docIdNums starting at the next shard boundary past the
+   * current maximum, so its shards (`docIdNum / docsPerShard`) are disjoint
+   * from every earlier batch — the fused segment build then runs unchanged
+   * and the shard files land under new `shard=K` partition dirs. Within a
+   * batch ids follow docId-string order (DenseIds); ACROSS batches order is
+   * arrival order, so score ties across batches break by arrival — the
+   * standard streaming-ingest semantic (a batch rebuild re-sorts globally).
+   *
+   * The on-disk layout is [[graft.index.IndexBuild]]'s: the docs stage, the
+   * term stats from block metadata, the dict snapshots and the marker I/O
+   * are its code. What is specific to streaming stays here: the numbering
+   * offset, the replay sidecars and the `_hwm` high-water mark.
    *
    * Scale contract (round-3): per-batch work is O(batch), never O(index) —
    *  - the numbering start comes from the persisted `_hwm` high-water mark
    *    (the O(docs) scan runs only on first contact with a marker-less
    *    pre-existing index);
    *  - the dictionary is merged incrementally: old dict snapshot
-   *    (`dicts/v=B`, O(vocabulary) — sublinear in corpus size by Heaps'
-   *    law) + this batch's block metadata (partition-pruned to the batch's
-   *    own shards), written as the next immutable snapshot `dicts/v=B+1`;
-   *    readers resolve the current snapshot through the `_dict_version`
-   *    marker ([[graft.index.IndexBuild.dictPath]] — the flat `dict/` dir
-   *    of a batch build is superseded once the marker exists). NEVER a
-   *    re-aggregation of the whole postings dir (except a one-time legacy
-   *    replay, see the sidecar-format note in the code).
+   *    (O(vocabulary) — sublinear in corpus size by Heaps' law) + this
+   *    batch's block metadata (partition-pruned to the batch's own
+   *    shards), written as the next immutable snapshot
+   *    ([[graft.index.IndexBuild.dictPath]] resolves the current one).
+   *    NEVER a re-aggregation of the whole postings dir (except a one-time
+   *    legacy replay, see the sidecar-format note in the code).
    *
    * @param batchId Structured Streaming micro-batch id: with it set, replays
    *   of the same batch (foreachBatch is at-least-once) are IDEMPOTENT —
@@ -311,14 +264,11 @@ object Streams {
                   batchId: Option[Long] = None,
                   runToken: Option[String] = None): Unit = {
     val spark = turns.sparkSession
-    import spark.implicits._
-    def marker(id: Long, suffix: String) = batchPrefix(runToken, id) + suffix
-    if (batchId.exists(id => markerExists(spark, indexDir, marker(id, "done")))) return
+    def marker(id: Long, suffix: String) = s"$indexDir/${batchPrefix(runToken, id)}$suffix"
+    if (batchId.exists(id => IndexBuild.exists(spark, marker(id, "done")))) return
     val docsDir = s"$indexDir/docs"
     val postingsDir = s"$indexDir/postings"
-    val dictDir = s"$indexDir/dict"
-    spark.sparkContext.hadoopConfiguration
-      .setInt("mapreduce.fileoutputcommitter.algorithm.version", 1)
+    IndexBuild.pinJobCommit(spark)
 
     // number the batch FIRST (the assignment is start-independent): the
     // counted variant returns the exact batch size from the numbering's own
@@ -326,10 +276,7 @@ object Streams {
     // and the max(docIdNum) aggregation job (ids are dense, so
     // newMax = start + n − 1) — two fewer jobs per micro-batch.
     val (withId0, batchN, cleanup) = DenseIds.assignCounted(
-      turns.toDF().select(
-        concat(col("conv_id"), lit("#"), col("turn_idx").cast("string")).as("docId"),
-        col("text")),
-      "docIdNum0", assumeSorted = false, col("docId"))
+      IndexBuild.docText(turns), "docIdNum0", assumeSorted = false, col("docId"))
     if (batchN == 0L) { cleanup(); return }
 
     // (start, dict base version) — from the replay sidecar when present,
@@ -342,26 +289,17 @@ object Streams {
     // code always did and is idempotent regardless of index state. Parsing
     // a legacy body as base 0 would wipe the pre-existing vocabulary.
     val (start, baseVer) = batchId.flatMap(id =>
-        readMarker(spark, indexDir, marker(id, "start")).map { body =>
-          val parts = body.trim.split(':')
+        IndexBuild.readSmallFile(spark, marker(id, "start")).map { body =>
+          val parts = body.split(':')
           (parts(0).toLong, if (parts.length > 1) parts(1).toLong else -1L)
         })
       .getOrElse {
-        val hwm = readMarker(spark, indexDir, HWM).map(_.trim.toLong)
-          .orElse(maxDocIdNum(spark, docsDir))
+        val hwm = IndexBuild.readSmallFile(spark, s"$indexDir/$HWM").map(_.toLong)
+          .orElse(Option.when(IndexBuild.exists(spark, docsDir))(
+            IndexBuild.docsExtent(spark, docsDir)._2).filter(_ >= 0L))
         val s = hwm.fold(0L)(mx => ((mx / docsPerShard) + 1) * docsPerShard) // next shard boundary
-        // one-time migration: a batch-built index has a flat dict but no
-        // snapshot — promote it to dicts/v=1 so the incremental merge has an
-        // IMMUTABLE base (the flat dir is overwritten every batch, so it can
-        // never serve as a replay base itself)
-        if (currentDictVersion(spark, indexDir) == 0L &&
-            markerExists(spark, indexDir, "dict/_SUCCESS")) {
-          spark.read.parquet(dictDir).write.mode("overwrite")
-            .parquet(s"$indexDir/dicts/v=1")
-          writeMarker(spark, indexDir, DICT_VERSION, "1")
-        }
-        val v = currentDictVersion(spark, indexDir)
-        batchId.foreach(id => writeMarker(spark, indexDir, marker(id, "start"), s"$s:$v"))
+        val v = IndexBuild.snapshotBase(spark, indexDir)
+        batchId.foreach(id => IndexBuild.writeSmallFile(spark, marker(id, "start"), s"$s:$v"))
         (s, v)
       }
     val withId = withId0
@@ -370,17 +308,9 @@ object Streams {
 
     try {
       val newMax = start + batchN - 1
-      val docsApplied = batchId.exists(id => markerExists(spark, indexDir, marker(id, "docs")))
-      if (!docsApplied) {
-        withId.select("docId", "docIdNum", "text").as[(String, Long, String)]
-          .mapPartitions(_.map { case (docId, num, text) =>
-            val dl =
-              if (tag == Analyzer.Tag.NoStem) Analyzer.countTokens(text).toLong
-              else Analyzer.analyze(text, tag).size.toLong
-            graft.model.DocEntry(docId, num, dl)
-          })
-          .write.mode("append").parquet(docsDir)
-        batchId.foreach(id => writeMarker(spark, indexDir, marker(id, "docs")))
+      if (!batchId.exists(id => IndexBuild.exists(spark, marker(id, "docs")))) {
+        IndexBuild.writeDocs(withId, tag, docsDir, "append")
+        batchId.foreach(id => IndexBuild.writeSmallFile(spark, marker(id, "docs")))
       }
 
       // dynamic overwrite: a replay rewrites exactly this batch's shard
@@ -393,35 +323,25 @@ object Streams {
 
       // Incremental dict: old snapshot + THIS batch's block metadata only
       // (shard partition pruning bounds the read to the batch's own shards).
-      val batchShards = (start / docsPerShard).toInt to (newMax / docsPerShard).toInt
-      val delta = spark.read.parquet(postingsDir)
-        .filter(col("shard").isin(batchShards: _*))
-        .groupBy("term").agg(sum("n").as("df"), sum("sumTf").as("cf"))
-      val merged =
-        if (baseVer == 0L) delta
-        else if (baseVer < 0L) // legacy replay: full re-agg (old semantics)
-          spark.read.parquet(postingsDir)
-            .groupBy("term").agg(sum("n").as("df"), sum("sumTf").as("cf"))
-        else spark.read.parquet(s"$indexDir/dicts/v=$baseVer")
-          .select("term", "df", "cf")
-          .unionByName(delta)
-          .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
-      val newVer = (if (baseVer < 0L) currentDictVersion(spark, indexDir) else baseVer) + 1
-      Dictionary.withIds(merged)
-        .write.mode("overwrite").parquet(s"$indexDir/dicts/v=$newVer")
-      // readers resolve the current snapshot via the _dict_version marker
-      // (IndexBuild.load); no flat-dir mirror job per batch
-      writeMarker(spark, indexDir, DICT_VERSION, newVer.toString)
-      // snapshots older than the replay base can never be read again
-      if (baseVer > 1) {
-        val old = new Path(s"$indexDir/dicts/v=${baseVer - 1}")
-        val fsys = old.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fsys.exists(old)) fsys.delete(old, true)
+      val postings = spark.read.parquet(postingsDir)
+      if (baseVer < 0L) // legacy replay: full re-agg (old semantics)
+        IndexBuild.writeDictSnapshot(spark, indexDir, IndexBuild.termStatsOf(postings),
+          IndexBuild.dictVersion(spark, indexDir))
+      else {
+        val batchShards = (start / docsPerShard).toInt to (newMax / docsPerShard).toInt
+        val delta = IndexBuild.termStatsOf(postings.filter(col("shard").isin(batchShards: _*)))
+        val merged =
+          if (baseVer == 0L) delta
+          else spark.read.parquet(IndexBuild.snapshotDir(indexDir, baseVer))
+            .select("term", "df", "cf")
+            .unionByName(delta)
+            .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
+        IndexBuild.writeDictSnapshot(spark, indexDir, merged, baseVer)
       }
 
-      writeMarker(spark, indexDir, HWM, newMax.toString)
+      IndexBuild.writeSmallFile(spark, s"$indexDir/$HWM", newMax.toString)
       batchId.foreach { id =>
-        writeMarker(spark, indexDir, marker(id, "done"))
+        IndexBuild.writeSmallFile(spark, marker(id, "done"))
         gcBatchMarkers(spark, indexDir, runToken, keepFromId = id - 1)
       }
     } finally cleanup()

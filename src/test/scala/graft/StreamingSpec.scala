@@ -184,6 +184,37 @@ class StreamingSpec extends AnyFunSuite {
     assert(postings.contains(("b-0#0", "gamma")), "rebuilt shard must hold batch 1's postings")
   }
 
+  test("streamed index under a stemming tag (Snowball) equals the batch build") {
+    import spark.implicits._
+    val snowball = graft.analysis.Analyzer.Tag.Snowball
+    // English inflections and possessives, so stems merge and counts shift
+    val words = Array("running", "runs", "runner's", "connections", "connected",
+      "Connecting", "generously", "generous", "caresses", "ponies", "Ponies'")
+    val local = Transcripts.generate(spark, 20, 4, seed = 61L, partitions = 2).collect().toSeq
+      .map { t =>
+        val h = t.conv_id.hashCode.abs + 3 * t.turn_idx
+        t.copy(text = s"${t.text} ${words(h % words.length)} ${words((h / 3) % words.length)}")
+      }
+    val (b1, b2) = local.splitAt(local.size / 3)
+    val sdir = Files.createTempDirectory("graft-stream-snowball-test").toString
+    Streams.appendBatch(b1.toDS(), sdir, tag = snowball, docsPerShard = 16, batchId = Some(0L))
+    Streams.appendBatch(b2.toDS(), sdir, tag = snowball, docsPerShard = 16, batchId = Some(1L))
+    val streamed = IndexBuild.load(spark, sdir)
+    val batch = IndexBuild.build(local.toDS(), Files.createTempDirectory("graft-batch-snowball-test").toString,
+      tag = snowball, docsPerShard = 16)
+
+    def docs(i: IndexBuild.Index) =
+      i.docs.select("docId", "docLen").collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+    def dict(i: IndexBuild.Index) =
+      i.dict.select("term", "df", "cf").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted.toSeq
+    def termDocs(i: IndexBuild.Index) =
+      i.termDocs.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3))).sorted.toSeq
+    assert(docs(streamed) == docs(batch))
+    assert(dict(streamed) == dict(batch))
+    assert(termDocs(streamed) == termDocs(batch))
+    assert(dict(batch).exists(_._1 == "run"), "the fixture must exercise stemming")
+  }
+
   test("distinct stream tokens isolate batch markers (fresh checkpoint restarts at id 0)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-stream-token-test").toString
