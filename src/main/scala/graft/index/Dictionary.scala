@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -28,8 +28,13 @@ object Dictionary {
    * Instead: range-repartition by term (so partition p holds a contiguous,
    * sorted term range), count per partition, broadcast the prefix offsets,
    * then number within partitions. Two jobs, fully parallel, deterministic.
+   * Written to `dir` as (term, termId, df, cf), replacing what is there; the
+   * numbering's cached frame is released once the write is done.
    */
-  def withIds(termStats: DataFrame): DataFrame =
-    DenseIds.assign(termStats.select("term", "df", "cf"), "termId", col("term"))
-      .select("term", "termId", "df", "cf")
+  def writeWithIds(termStats: DataFrame, dir: String): Unit = {
+    val (numbered, cleanup) = DenseIds.assignManaged(termStats.select("term", "df", "cf"),
+      "termId", assumeSorted = false, col("term"))
+    try numbered.select("term", "termId", "df", "cf").write.mode("overwrite").parquet(dir)
+    finally cleanup()
+  }
 }

@@ -56,9 +56,11 @@ object FieldedBlocks {
     import spark.implicits._
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
 
-    if (!IndexBuild.stageDone(spark, s"$dir/fdocs"))
-      DenseIds.assign(idx.postings.select("docId").distinct(), "docIdNum", col("docId"))
-        .write.mode("overwrite").parquet(s"$dir/fdocs")
+    if (!IndexBuild.stageDone(spark, s"$dir/fdocs")) {
+      val (fdocs, cleanup) = DenseIds.assignManaged(idx.postings.select("docId").distinct(),
+        "docIdNum", assumeSorted = false, col("docId"))
+      try fdocs.write.mode("overwrite").parquet(s"$dir/fdocs") finally cleanup()
+    }
     val fdocs = spark.read.parquet(s"$dir/fdocs")
 
     if (!IndexBuild.stageDone(spark, s"$dir/fblocks"))

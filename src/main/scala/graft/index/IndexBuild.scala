@@ -306,9 +306,12 @@ object IndexBuild {
         val (numDocs, maxDocIdNum) = docsExtent(spark, docsDir)
         writePostings(numDocs, maxDocIdNum)
       } else {
+        // nothing after this branch reads the numbering: release its
+        // persisted frame (DenseIds persists it for unsorted input)
         val numDocs = freshAssigned._2
-        alongside(() => writeDocs(turnsWithId, tag, docsDir, "overwrite"), "graft-idx-docs")(
+        try alongside(() => writeDocs(turnsWithId, tag, docsDir, "overwrite"), "graft-idx-docs")(
           writePostings(numDocs, numDocs - 1))
+        finally freshAssigned._3()
       }
 
     // commit marker for the postings stage as a whole
@@ -325,8 +328,7 @@ object IndexBuild {
       if (repairedShards)
         writeDictSnapshot(spark, indexDir, termStatsOf(spark.read.parquet(postingsDir)), version)
     } else if (!stageDone(spark, dictDir))
-      Dictionary.withIds(termStatsOf(spark.read.parquet(postingsDir)))
-        .write.mode("overwrite").parquet(dictDir)
+      Dictionary.writeWithIds(termStatsOf(spark.read.parquet(postingsDir)), dictDir)
 
     load(spark, indexDir)
   }
@@ -394,7 +396,7 @@ object IndexBuild {
    * can be read again. */
   private[graft] def writeDictSnapshot(spark: SparkSession, indexDir: String,
                                        termStats: DataFrame, base: Long): Unit = {
-    Dictionary.withIds(termStats).write.mode("overwrite").parquet(snapshotDir(indexDir, base + 1))
+    Dictionary.writeWithIds(termStats, snapshotDir(indexDir, base + 1))
     writeSmallFile(spark, versionFile(indexDir), (base + 1).toString)
     if (base > 1) fs(spark, indexDir).delete(new Path(snapshotDir(indexDir, base - 1)), true)
   }

@@ -1,14 +1,19 @@
 package graft.query
 
-import scala.reflect.ClassTag
+import scala.collection.BufferedIterator
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.{Partitioner, SparkContext}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.analysis.Analyzer
 import graft.index.Codec
-import graft.model.Block
+import graft.model.{Block, Topic}
 
 /**
  * The block-max WAND kernel shared by plain ([[BlockMaxWand]]) and fielded
@@ -31,7 +36,7 @@ import graft.model.Block
  *  - block-level skipTo: whole blocks whose maxDoc < target stay undecoded.
  *
  * Scores: a term scores (mx + tie·(sm − mx))·mult over its fields' scores at
- * the doc (the caller's closures carry float boundary and boost); the doc
+ * the doc (the caller's scorers carry float boundary and boost); the doc
  * sum runs in UTF8 term order and per-term field sums in UTF8 field order —
  * the canonical order of [[Fielded.score]]'s array_sort'ed folds, since
  * double addition is non-associative. `finish` (float cast, or half-up
@@ -263,48 +268,196 @@ object BlockMax {
       topK(terms.toArray, q.msm, k, finish).iterator.map { case (score, doc) => (qid, doc, score) }
     }
 
+  /** A query before its scorers exist: minimum number of matched terms and
+   * its analyzed (term, multiplicity) pairs. */
+  final case class QuerySpec(msm: Int, terms: Seq[(String, Int)])
+
+  /** What a scorer reads of the index: a term's df and cf in one field, and
+   * that field's doc and token counts. */
+  final case class TermStats(df: Long, cf: Long, fieldDocs: Long, fieldTokens: Long)
+
+  /** Builds the score closure `(tf, docLen) => contribution` of one query's
+   * term in one field from its statistics; runs inside the kernel tasks. */
+  type ScorerFactory = (QuerySpec, String, TermStats) => (Long, Long) => Double
+
+  /** A block as the kernel job ships it: what the kernel reads of a
+   * [[Block]], and its field. */
+  private final case class Shipped(shard: Int, field: String, term: String, n: Int,
+                                   minDoc: Long, maxDoc: Long, maxTf: Long, minDocLen: Long,
+                                   docBytes: Array[Byte], tfBytes: Array[Byte],
+                                   dlBytes: Array[Byte]) extends Block
+
+  /** Routes shard `s` (≥ 0) to partition `s mod n`, and key `−1 − p` to
+   * partition p: that key carries p's copy of the statistics rows, which
+   * thus sort before every shard. */
+  private final class ShardPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val k = key.asInstanceOf[Int]
+      if (k < 0) -1 - k else k % numPartitions
+    }
+  }
+
+  /** Per query: its top-k (score, docIdNum), best first. */
+  private type Hits = Map[Int, List[(Double, Long)]]
+
+  /** Union of two per-query top-k sets over disjoint doc ranges, cut to k in
+   * (score desc, docIdNum asc) order: the exact top-k of both ranges. */
+  private def merge(a: Hits, b: Hits, k: Int): Hits =
+    (a.keySet ++ b.keySet).iterator.map { qid =>
+      qid -> (a.getOrElse(qid, Nil) ++ b.getOrElse(qid, Nil))
+        .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)).take(k)
+    }.toMap
+
+  /** One reduce partition of the kernel job, sorted by key: its copy of the
+   * statistics rows — (field, term, df, cf) dict rows, and (field, null, fN,
+   * fC) field rows — then its shards' blocks shard by shard → the top-k over
+   * those shards. Holds one shard's blocks at a time. */
+  private def partitionTopK(in: BufferedIterator[(Int, Any)], specs: Map[Int, QuerySpec],
+                            scorer: ScorerFactory, tie: Double, k: Int,
+                            finish: Double => Double): Hits = {
+    val stats = ArrayBuffer.empty[(String, String, Long, Long)]
+    while (in.hasNext && in.head._1 < 0) stats += in.next()._2.asInstanceOf[(String, String, Long, Long)]
+    val (fieldRows, dictRows) = stats.toSeq.partition(_._2 == null)
+    val fields = fieldRows.map(r => r._1 -> (r._3, r._4)).toMap
+    val byTerm = dictRows.groupBy(_._2)
+    val queries = specs.map { case (qid, spec) =>
+      qid -> Query(spec.msm, spec.terms.map { case (term, mult) =>
+        QueryTerm(term, mult, byTerm.getOrElse(term, Nil).map { case (field, _, df, cf) =>
+          val (fN, fC) = fields(field)
+          field -> scorer(spec, field, TermStats(df, cf, fN, fC))
+        })
+      })
+    }
+    var top: Hits = Map.empty
+    while (in.hasNext) {
+      val s = in.head._1
+      val blocks = ArrayBuffer.empty[Shipped]
+      while (in.hasNext && in.head._1 == s) blocks += in.next()._2.asInstanceOf[Shipped]
+      // order blocks by doc range, NOT blockNo — a shard straddling a
+      // build-partition boundary has two block runs with repeated blockNos
+      val lists: Map[(String, String), Array[_ <: Block]] = blocks.toArray
+        .groupBy(b => (b.term, b.field)).view.mapValues(_.sortBy(_.minDoc)).toMap
+      top = merge(top, shard(lists, queries, tie, k, finish).toList.groupMap(_._1)(r => (r._3, r._2)), k)
+    }
+    top
+  }
+
+  /** String column `i` of an internal row, copied out of the row's buffer. */
+  private def string(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** Runs `f` with its jobs described as `desc`, then restores the caller's
+   * description; every other local property is left alone. */
+  private def described[A](sc: SparkContext, desc: String)(f: => A): A = {
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(desc)
+    try f finally sc.setLocalProperty(key, prev)
+  }
+
   /**
-   * Distributed block-max search, one Spark job for the whole query set:
-   * blocks are pruned to the query terms at the parquet scan (row-group stats
-   * on `term`), grouped by shard, and each shard task runs [[topK]] per
-   * query; the small per-shard candidate sets merge through a global window
-   * top-k joined to `docs` (docIdNum → docId).
+   * Distributed block-max search, eager, in two Spark jobs for the whole
+   * topic set, both run before this returns:
    *
-   * @param field the field a block belongs to (one constant for a plain index)
+   *  1. the kernel job: blocks pruned to the query terms at the parquet scan
+   *     (row-group stats on `term`) are shuffled by shard; the term-pruned
+   *     `dict` rows and the `fieldStats` rows are read in the same scan plan
+   *     and ride the same shuffle, one copy to every reduce partition. Each
+   *     task builds its scorers from them through `scorer`, runs [[shard]]
+   *     per shard, and returns the per-query top-k of its shards; those
+   *     merge on the driver as tasks finish (exact: shard doc ranges are
+   *     disjoint).
+   *  2. the docIds job: one `docs` read, pruned to the winners' docIdNum
+   *     range, resolves docId for the at most k × |topics| winners.
+   *
+   * The driver then ranks each query's hits (score desc, docIdNum asc), adds
+   * the sentinel rows, and returns (qid, docId, rank, score) as a local
+   * DataFrame: collecting it runs no further job. The two jobs are described
+   * `<label> kernel: <n> topics` and `<label> docIds`.
+   *
+   * @param blocks [[Block]] rows of the index
+   * @param field the field of a block row (one constant for a plain index)
+   * @param dict (field, term, df, cf) rows of the index's dictionary
+   * @param fieldStats (field, fN, fC): each field's doc and token counts
+   * @param msm minimum number of matched terms from a query's distinct-term count
    * @param rounded half-up round doc scores to this many decimals and rank
-   *   on the rounded double; None = float scores
+   *   on the rounded double (a double score column); None = float scores
+   * @param sentinel docId of the (qid, sentinel, 1, 0) row added for every
+   *   topic without hits; None = no such rows
    */
-  def search[B <: Block : ClassTag](blocks: Dataset[B], field: B => String,
-                                    docs: DataFrame, queries: Map[Int, Query],
-                                    tie: Double, k: Int,
-                                    rounded: Option[Int]): DataFrame = {
+  def search(blocks: DataFrame, field: Column, dict: DataFrame, fieldStats: DataFrame,
+             docs: DataFrame, topics: Seq[Topic], tag: Analyzer.Tag, msm: Int => Int,
+             scorer: ScorerFactory, tie: Double, k: Int, rounded: Option[Int],
+             sentinel: Option[String], label: String): DataFrame = {
     val spark = blocks.sparkSession
-    import spark.implicits._
+    val sc = spark.sparkContext
     val finish: Double => Double = rounded match {
       case None => d => d.toFloat.toDouble
       case Some(decimals) =>
         d => BigDecimal(d).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).toDouble
     }
-    val termSet = queries.values.flatMap(_.terms.map(_.term)).toSeq.distinct
-    val bQueries = spark.sparkContext.broadcast(queries)
-    val candidates = blocks
-      .filter(col("term").isin(termSet: _*))
-      .groupByKey(_.shard)
-      .flatMapGroups { (_, it) =>
-        // order blocks by doc range, NOT blockNo — a shard straddling a
-        // build-partition boundary has two block runs with repeated blockNos
-        val lists: Map[(String, String), Array[_ <: Block]] = it.toArray
-          .groupBy(b => (b.term, field(b))).view.mapValues(_.sortBy(_.minDoc)).toMap
-        shard(lists, bQueries.value, tie, k, finish)
-      }
-      .toDF("qid", "docIdNum", "score")
+    val specs = Exact.queryTerms(topics, tag).groupBy(_._1).map { case (qid, ts) =>
+      qid -> QuerySpec(msm(ts.head._4), ts.map(t => (t._2, t._3)))
+    }
+    val isQueryTerm = col("term").isin(specs.values.flatMap(_.terms.map(_._1)).toSeq.distinct: _*)
+    // reduce tasks: no more than the cores, since no adaptive coalescing
+    // trims empty ones (a batch may touch a single shard)
+    val n = math.max(1, math.min(spark.sessionState.conf.numShufflePartitions, sc.defaultParallelism))
+    def everywhere(row: Any): Iterator[(Int, Any)] = (0 until n).iterator.map(p => (-1 - p, row))
 
-    val scoreCol = if (rounded.isEmpty) col("score").cast("float") else col("score")
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("docIdNum").asc)
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .join(docs.select("docIdNum", "docId"), "docIdNum")
-      .select(col("qid"), col("docId"), col("rank"), scoreCol.as("score"))
+    // one scan plan, columns (shard, field, term, n, minDoc, maxDoc, maxTf,
+    // minDocLen, docBytes, tfBytes, dlBytes, df, cf): the block rows, then
+    // the statistics rows — dict rows and (field, null, fN, fC) field rows —
+    // without a shard, read by one task
+    val stats = dict.filter(isQueryTerm)
+      .select(col("field"), col("term"), col("df").cast("long"), col("cf").cast("long"))
+      .unionByName(fieldStats.select(col("field"), col("fN").cast("long").as("df"),
+        col("fC").cast("long").as("cf")), allowMissingColumns = true)
+      .coalesce(1)
+    val input = blocks.filter(isQueryTerm)
+      .select(col("shard"), field.as("field"), col("term"), col("n"), col("minDoc"),
+        col("maxDoc"), col("maxTf"), col("minDocLen"), col("docBytes"), col("tfBytes"),
+        col("dlBytes"))
+      .unionByName(stats, allowMissingColumns = true)
+    val top: Hits = described(sc, s"$label kernel: ${topics.size} topics") {
+      // the plan's internal rows, without a SQL execution around them: the
+      // rows go straight into the shuffle
+      input.queryExecution.toRdd
+        .flatMap { r =>
+          if (r.isNullAt(0)) everywhere((string(r, 1), string(r, 2), r.getLong(11), r.getLong(12)))
+          else Iterator((r.getInt(0), Shipped(r.getInt(0), string(r, 1), string(r, 2), r.getInt(3),
+            r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
+            r.getBinary(8), r.getBinary(9), r.getBinary(10))))
+        }
+        .repartitionAndSortWithinPartitions(new ShardPartitioner(n))
+        .mapPartitions(it => Iterator(partitionTopK(it.buffered, specs, scorer, tie, k, finish)))
+        .reduce(merge(_, _, k))
+    }
+
+    val winners = top.valuesIterator.flatMap(_.map(_._2)).toSeq.distinct
+    val docIds: Map[Long, String] =
+      if (winners.isEmpty) Map.empty
+      else described(sc, s"$label docIds") {
+        val wanted = winners.toSet
+        docs.filter(col("docIdNum").between(winners.min, winners.max))
+          .select("docIdNum", "docId").queryExecution.toRdd
+          .flatMap(r => Option.when(wanted(r.getLong(0)))((r.getLong(0), string(r, 1))))
+          .collect().toMap
+      }
+
+    val score: Double => Any = if (rounded.isEmpty) _.toFloat else identity
+    val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, hits) =>
+      hits.zipWithIndex.flatMap { case ((s, doc), i) =>
+        docIds.get(doc).map(id => Row(qid, id, i + 1, score(s)))
+      }
+    }
+    val sentinels = sentinel.toSeq.flatMap(id =>
+      topics.filterNot(t => top.contains(t.qid)).map(t => Row(t.qid, id, 1, score(0d))))
+    val schema = StructType(Seq(
+      StructField("qid", IntegerType, nullable = false),
+      StructField("docId", StringType),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("score", if (rounded.isEmpty) FloatType else DoubleType, nullable = false)))
+    spark.createDataFrame((ranked ++ sentinels).asJava, schema)
   }
 }

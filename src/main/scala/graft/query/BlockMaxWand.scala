@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.index.IndexBuild
-import graft.model.{PostingBlock, Topic}
+import graft.model.Topic
 
 /**
  * Block-Max WAND top-k over the compressed, document-sharded posting index
@@ -19,11 +19,13 @@ import graft.model.{PostingBlock, Topic}
 object BlockMaxWand {
 
   /**
-   * Distributed BMW search: one Spark job for the whole topic set. Blocks
-   * are pruned to the query terms at the parquet scan (predicate pushdown
-   * on `term`), grouped by shard, and each shard task runs the WAND loop per
-   * topic; the tiny per-shard candidate sets merge through a global window
-   * top-k.
+   * Distributed BMW search, answered eagerly in two Spark jobs for the whole
+   * topic set ([[BlockMax.search]]): a kernel job, in which blocks pruned to
+   * the query terms at the parquet scan (predicate pushdown on `term`) and
+   * the query terms' dict rows share one shuffle by shard and each shard task
+   * runs the WAND loop per topic, and a docs job that resolves docId for the
+   * winners only. The per-shard top-k lists merge on the driver; the result
+   * is a local DataFrame, so collecting it runs no job.
    */
   def search(index: IndexBuild.Index, topics: Seq[Topic], model: Scoring.Model,
              k: Int, tag: Analyzer.Tag = Analyzer.Tag.NoStem,
@@ -40,40 +42,27 @@ object BlockMaxWand {
     // winning doc.
     val perTerm: Double => Double =
       if (roundedDouble.isEmpty) d => d.toFloat.toDouble else identity
-
-    // driver-side: analyzed terms + dictionary stats for them (tiny)
-    val qterms = Exact.queryTerms(topics, tag) // (qid, term, mult, nTerms)
-    val dictRows = index.dict
-      .filter(col("term").isin(qterms.map(_._2).distinct: _*))
-      .select("term", "df", "cf")
-      .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
     // Query-sensitive models: MATF's scalar score() reads the instance's
     // queryLength (the reference's per-query setMaxOverlap), while the exact
-    // path reads In.qLen per row — substitute a per-qid instance here or BMW
-    // would score every query with the parser default (|q| = 1) and diverge
-    // from the exact path on multi-term queries.
-    def modelOf(ts: Seq[(Int, String, Int, Int)]): Scoring.Model = model match {
-      case Scoring.MATF(_) => Scoring.MATF(ts.map(_._3).sum)
-      case _ => model
-    }
-    val nDocs = index.stats.numDocs.toDouble
-    val nTokens = index.stats.numTokens.toDouble
-    val avgdl = nTokens / nDocs
-    val queries = qterms.groupBy(_._1).map { case (qid, ts) =>
-      val qModel = modelOf(ts)
-      qid -> BlockMax.Query(1, ts.flatMap { case (_, term, mult, _) =>
-        dictRows.get(term).map { case (df, cf) =>
-          BlockMax.QueryTerm(term, mult, Seq("" -> ((tf: Long, dl: Long) =>
-            perTerm(qModel.score(tf.toDouble, dl, avgdl, 1.0, df.toDouble, cf.toDouble,
-              nDocs, nTokens)))))
-        }
-      })
+    // path reads In.qLen per row — substitute a per-query instance (|q| =
+    // Σ mult) here or BMW would score every query with the parser default
+    // (|q| = 1) and diverge from the exact path on multi-term queries.
+    val scorer: BlockMax.ScorerFactory = (q, _, s) => {
+      val qModel = model match {
+        case Scoring.MATF(_) => Scoring.MATF(q.terms.map(_._2).sum)
+        case _ => model
+      }
+      val avgdl = s.fieldTokens.toDouble / s.fieldDocs.toDouble
+      (tf, dl) => perTerm(qModel.score(tf.toDouble, dl, avgdl, 1.0, s.df.toDouble, s.cf.toDouble,
+        s.fieldDocs.toDouble, s.fieldTokens.toDouble))
     }
 
-    val ranked = BlockMax.search(index.blocks, (_: PostingBlock) => "",
-      index.docs, queries, tie = 0d, k, roundedDouble)
-    Exact.withSentinel(ranked, topics, sentinelDocId, roundedDouble.isDefined)
+    val spark = index.docs.sparkSession
+    import spark.implicits._
+    BlockMax.search(index.blocks.toDF(), field = lit(""),
+      dict = index.dict.select(lit("").as("field"), col("term"), col("df"), col("cf")),
+      fieldStats = Seq(("", index.stats.numDocs, index.stats.numTokens)).toDF("field", "fN", "fC"),
+      index.docs, topics, tag, msm = _ => 1, scorer, tie = 0d, k, roundedDouble,
+      sentinelDocId, label = "bmw")
   }
 }

@@ -117,9 +117,9 @@ object Exact {
   /** `ranked` plus a (qid, sentinel, rank 1, score 0) row for every topic
    * without hits — an anti-join of topics vs results; score 0 is a double in
    * the rounded-double mode, a float otherwise. */
-  private[query] def withSentinel(ranked: DataFrame, topics: Seq[Topic],
-                                  sentinelDocId: Option[String],
-                                  roundedDouble: Boolean): DataFrame =
+  private def withSentinel(ranked: DataFrame, topics: Seq[Topic],
+                           sentinelDocId: Option[String],
+                           roundedDouble: Boolean): DataFrame =
     sentinelDocId match {
       case None => ranked
       case Some(sentinel) =>

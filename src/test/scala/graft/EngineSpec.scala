@@ -10,6 +10,7 @@ import graft.data.Transcripts
 import graft.index.{Dictionary, IndexBuild, Tokenize}
 import graft.model.{Topic, Turn}
 import graft.query.{BlockMaxWand, Exact, Scoring}
+import graft.streaming.Streams
 
 /**
  * End-to-end engine invariants (SURVEY.md §5.2): rank-identity against the
@@ -90,6 +91,68 @@ class EngineSpec extends AnyFunSuite {
     val want = Oracle.topk(turnsLocal, topics, model, K, SENT).sortBy(t => (t._1, t._3))
     assert(got.length == want.length)
     got.zip(want).foreach { case (g, w) => assert(g == w, s"got $g want $w") }
+  }
+
+  test("a BMW batch runs two labelled Spark jobs and leaves the caller's properties alone") {
+    val sc = spark.sparkContext
+    val idx = index // loaded (its corpus-stats job runs) outside the counted window
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    sc.setJobDescription("caller")
+    sc.setLocalProperty("graft.test.span", "7")
+    try {
+      val jobs = SparkTestSession.jobDescriptions {
+        BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT)).collect()
+      }
+      assert(jobs == Seq(s"bmw kernel: ${topics.size} topics", "bmw docIds"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("graft.test.span") == "7")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("graft.test.span", null)
+    }
+  }
+
+  test("BMW ≡ exact ≡ oracle on a streamed index (two appended batches, dict snapshot v=2)") {
+    import spark.implicits._
+    // the batches arrive in docId order: across batches, ties break by
+    // arrival (Streams.appendBatch), which is then the exact path's docId order
+    val (b1, b2) = turnsLocal.sortBy(t => s"${t.conv_id}#${t.turn_idx}").splitAt(250)
+    val dir = Files.createTempDirectory("graft-idx-stream").toString
+    Streams.appendBatch(b1.toDS(), dir, docsPerShard = 100, batchId = Some(0L))
+    Streams.appendBatch(b2.toDS(), dir, docsPerShard = 100, batchId = Some(1L))
+    assert(IndexBuild.dictPath(spark, dir) == s"$dir/dicts/v=2")
+    val idx = IndexBuild.load(spark, dir)
+    // batch 1 holds ids 0–249; batch 2 starts at the next shard boundary
+    assert(idx.docs.agg(min("docIdNum"), max("docIdNum")).head().toSeq ==
+      Seq(0L, 300L + b2.size - 1))
+    val k = 200 // more than the hits of the needle topics
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3)))
+        .sortBy(t => (t._1, t._3)).toSeq
+    val got = rows(BlockMaxWand.search(idx, topics, model, k, sentinelDocId = Some(SENT)))
+    val exact = rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, k,
+      sentinelDocId = Some(SENT)))
+    assert(got == exact)
+    assert(got == Oracle.topk(turnsLocal, topics, model, k, SENT).sortBy(t => (t._1, t._3)))
+    assert(got.count(_._1 == 2) < k, "k must exceed the hits of topic 2")
+    assert(got.filter(_._1 == 4) == Seq((4, SENT, 1, 0f)), "topic 4's terms are all unseen")
+  }
+
+  test("fresh unsorted builds (plain index, fielded blocks) leave no RDD persisted") {
+    val sc = spark.sparkContext
+    def leftSince(before: Set[Int]) = {
+      val left = sc.getPersistentRDDs.filter(e => !before(e._1))
+      assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
+    }
+    val before = sc.getPersistentRDDs.keySet.toSet
+    IndexBuild.build(turns, Files.createTempDirectory("graft-idx-unpersist").toString,
+      docsPerShard = 100)
+    leftSince(before)
+    val fdir = Files.createTempDirectory("graft-fidx-unpersist").toString
+    graft.index.FieldedBlocks.build(
+      graft.index.FieldedIndex.build(graft.index.FieldedIndex.fromTurns(turns), fdir), fdir)
+    leftSince(before)
   }
 
   test("BMW ≡ exact for a parameter-free model (DirichletLM)") {

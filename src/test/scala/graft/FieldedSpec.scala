@@ -262,29 +262,54 @@ class FieldedSpec extends AnyFunSuite {
     assert(re.nonEmpty)
   }
 
-  test("FieldedBlockMax ≡ searchIndexed on generated transcripts (k cuts, multi-shard, zero-boost field)") {
+  // generated transcripts, tiny shards + tiny blocks: exercises
+  // shard-boundary cuts, multi-block runs, and the cross-shard heap merge
+  private lazy val (genIdx, genBlocks) = {
     val turns = graft.data.Transcripts.generate(spark, 60, 6, seed = 11L, partitions = 3)
     val dir = java.nio.file.Files.createTempDirectory("graft-fbmw-gen").toString
     val idx = graft.index.FieldedIndex.build(
       graft.index.FieldedIndex.fromTurns(turns), dir)
-    // tiny shards + tiny blocks: exercises shard-boundary cuts, multi-block
-    // runs, and the cross-shard heap merge
-    val fb = graft.index.FieldedBlocks.build(idx, dir, docsPerShard = 16, blockSize = 4)
-    val topics = Seq(
-      Topic(1, "bash w0"), Topic(2, "w1 w2 w3"), Topic(3, "assistant w0 w1 w2 w4"),
-      Topic(4, "w5"), Topic(5, "w0 w0 w0"))
-    // 'contents' boosted, role boosted, tool NOT in the boost map (scores 0
-    // but still counts for msm — the silent-field semantics of Fielded.score)
-    val boosts = Map("role" -> 0.9, "contents" -> 0.3)
+    (idx, graft.index.FieldedBlocks.build(idx, dir, docsPerShard = 16, blockSize = 4))
+  }
+  private val genTopics = Seq(
+    Topic(1, "bash w0"), Topic(2, "w1 w2 w3"), Topic(3, "assistant w0 w1 w2 w4"),
+    Topic(4, "w5"), Topic(5, "w0 w0 w0"))
+  // 'contents' boosted, role boosted, tool NOT in the boost map (scores 0
+  // but still counts for msm — the silent-field semantics of Fielded.score)
+  private val genBoosts = Map("role" -> 0.9, "contents" -> 0.3)
+
+  test("FieldedBlockMax ≡ searchIndexed on generated transcripts (k cuts, multi-shard, zero-boost field)") {
     for (k <- Seq(3, 10, 50)) {
-      val want = Fielded.searchIndexed(idx, topics, Scoring.BM25c(0.9, 0.4), k,
-          boosts = boosts, rounded = Some(4))
+      val want = Fielded.searchIndexed(genIdx, genTopics, Scoring.BM25c(0.9, 0.4), k,
+          boosts = genBoosts, rounded = Some(4))
         .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
-      val got = graft.query.FieldedBlockMax.search(fb, topics,
-          Scoring.BM25c(0.9, 0.4), k, boosts = boosts, rounded = Some(4))
+      val got = graft.query.FieldedBlockMax.search(genBlocks, genTopics,
+          Scoring.BM25c(0.9, 0.4), k, boosts = genBoosts, rounded = Some(4))
         .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getDouble(3))).toSet
       assert(got == want,
         s"k=$k diverged:\n  missing=${want -- got}\n  extra=${got -- want}")
+    }
+  }
+
+  test("a FieldedBlockMax batch runs two labelled Spark jobs and leaves the caller's properties alone") {
+    val sc = spark.sparkContext
+    val fb = genBlocks
+    assert(fb.blocks.select("shard").distinct().count() > 1, "the fixture must span several shards")
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    sc.setJobDescription("caller")
+    sc.setLocalProperty("graft.test.span", "7")
+    try {
+      val jobs = SparkTestSession.jobDescriptions {
+        graft.query.FieldedBlockMax.search(fb, genTopics, Scoring.BM25c(0.9, 0.4), 10,
+          boosts = genBoosts).collect()
+      }
+      assert(jobs == Seq(s"fielded bmw kernel: ${genTopics.size} topics", "fielded bmw docIds"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("graft.test.span") == "7")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("graft.test.span", null)
     }
   }
 
