@@ -41,7 +41,13 @@ final class Derivations(log: String => Unit = msg => System.err.println(s"[deriv
   /** [[apply]] for a value built into a fresh temp dir, which [[release]]
    * deletes (as does a failed build). */
   def inTempDir[A](kind: String, dir: String, prefix: String)(mk: String => A): A =
-    apply(kind, dir, (built: (A, Path)) => rmTree(built._2)) {
+    inTempDir(kind, dir, prefix, (_: A) => ())(mk)
+
+  /** [[inTempDir]], with [[release]] handing the value to `cleanup` before
+   * it deletes the dir. */
+  def inTempDir[A](kind: String, dir: String, prefix: String, cleanup: A => Unit)(
+      mk: String => A): A =
+    apply(kind, dir, (built: (A, Path)) => try cleanup(built._1) finally rmTree(built._2)) {
       val tmp = Files.createTempDirectory(prefix)
       try (mk(tmp.toString), tmp) catch { case e: Throwable => rmTree(tmp); throw e }
     }._1

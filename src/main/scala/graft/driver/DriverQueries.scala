@@ -93,10 +93,10 @@ object DriverQueries {
 
   /** Compressed block index over the documents corpus, built once per JVM
    * per sfDir into a temp dir (fresh — no reuse across runs, the format may
-   * evolve). */
+   * evolve); [[releaseCaches]] frees its resident shard partitions. */
   def index(spark: SparkSession, dir: String): IndexBuild.Index = {
     prefetch(spark, dir)
-    derivations.inTempDir("index", dir, "graft-docidx")(
+    derivations.inTempDir("index", dir, "graft-docidx", (i: IndexBuild.Index) => i.release())(
       IndexBuild.build(Transcripts.fromDocuments(spark, dir), _, docsPerShard = 256))
   }
 
@@ -164,11 +164,13 @@ object DriverQueries {
 
   /** Block stage over the cached fielded index (round-4 VERDICT #1): built
    * once per (sfDir, variant) — the r3c gate then runs the early-terminating
-   * WAND over term-pruned block scans. sf0.01 holds ~600 docs; 256-doc
-   * shards exercise the cross-shard heap merge. */
+   * WAND over the handle's resident shard partitions, which [[releaseCaches]]
+   * frees. sf0.01 holds ~600 docs; 256-doc shards exercise the cross-shard
+   * heap merge. */
   private def fieldedBlocks(s: SparkSession, d: String,
                             variant: String): graft.index.FieldedBlocks.FBIndex =
-    derivations.inTempDir(s"fblocks-$variant", d, s"graft-fblocks-$variant")(
+    derivations.inTempDir(s"fblocks-$variant", d, s"graft-fblocks-$variant",
+        (b: graft.index.FieldedBlocks.FBIndex) => b.release())(
       graft.index.FieldedBlocks.build(fieldedIndex(s, d, variant), _, docsPerShard = 256))
 
   /** Public accessor doubles as the warmup BARRIER: it is the last shared

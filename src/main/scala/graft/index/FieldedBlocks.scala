@@ -29,21 +29,27 @@ import graft.model.FieldedBlock
  *   fdocs/    (docId, docIdNum) — dense ids in docId-STRING order, so
  *             docIdNum ascending ≡ docId ascending (the engine's canonical
  *             tie-break; heaps and windows order on the cheap numeric id)
- *   fblocks/  FieldedBlock rows, files sorted by (field, term, minDoc) —
- *             a query's `term IN (…)` predicate prunes row groups via
- *             parquet min/max stats, same mechanism as the main block table
+ *   fblocks/  FieldedBlock rows, files sorted by (field, term, minDoc);
+ *             searches read them once, into the loaded index's
+ *             [[Resident]] shard partitions
  * }}}
  */
 object FieldedBlocks {
 
   final case class FBIndex(blocks: Dataset[FieldedBlock], fdocs: DataFrame,
-                           dict: DataFrame, stats: DataFrame)
+                           dict: DataFrame, stats: DataFrame) {
+    /** The shard partitions [[graft.query.FieldedBlockMax]] searches, built
+     * by the first search. */
+    lazy val resident: Resident = new Resident("fielded bmw", blocks.toDF(), dict, fdocs, stats)
+
+    /** Unpersists the resident shard partitions, if built. */
+    def release(): Unit = resident.release()
+  }
 
   /**
    * Build (or resume) the block stage over an existing fielded index.
    * One corpus-sized join (postings ⋈ fdocs on docId) and one range shuffle
-   * on (field, term, docIdNum) — both one-time build costs; query plans read
-   * only term-pruned block scans afterwards.
+   * on (field, term, docIdNum) — both one-time build costs.
    *
    * @param docsPerShard docs per shard (shard = docIdNum / docsPerShard);
    *   shards bound the WAND tasks' doc ranges — disjoint ranges make the

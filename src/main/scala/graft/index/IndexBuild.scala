@@ -55,6 +55,19 @@ object IndexBuild {
       PostingsBuilder.decodeBlocks(blocks)
         .join(docs.select("docIdNum", "docId"), "docIdNum")
         .select("docId", "docLen", "term", "tf")
+
+    /** The shard partitions [[graft.query.BlockMaxWand]] searches, built by
+     * the first search: one field, "", with the corpus stats. */
+    lazy val resident: Resident = {
+      val spark = docs.sparkSession
+      import spark.implicits._
+      new Resident("bmw", blocks.withColumn("field", lit("")),
+        dict.withColumn("field", lit("")), docs,
+        Seq(("", stats.numDocs, stats.numTokens)).toDF("field", "fN", "fC"))
+    }
+
+    /** Unpersists the resident shard partitions, if built. */
+    def release(): Unit = resident.release()
   }
 
   private def fs(spark: SparkSession, dir: String) =

@@ -1,0 +1,224 @@
+package graft.index
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.{HashPartitioner, SparkContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.LongAccumulator
+
+import graft.model.Block
+
+/**
+ * The shard partitions of a loaded index, built once and kept in memory
+ * (`MEMORY_AND_DISK`), so that every block-max batch runs against them
+ * without reading or planning the index again (reference: `Searcher.java`
+ * opens the index once and runs every topic against it, `:162-230`).
+ *
+ * One element per partition ([[Resident.Part]]) holds
+ *  - its shards (`shard mod partitions`): posting lists by (term, field),
+ *    blocks sorted by minDoc, and docId by docIdNum as an array from the
+ *    shard's first doc;
+ *  - its slice of the dictionary, hash-partitioned by term.
+ *
+ * The first [[use]] runs one small job, described `<label> shards`, for each
+ * shard's doc range and block count (block metadata only) and the per-field
+ * (fN, fC) rows, which stay on the driver; the partitions themselves are
+ * persisted then, and materialized by the first caller's own job. The copy
+ * serves the snapshot the handle was loaded from: the file listings and the
+ * dict version pinned at load.
+ *
+ * @param label what the partitions serve; their jobs are described with it
+ * @param blocks the index's posting blocks, with a `field` column
+ * @param dict (field, term, df, cf) rows
+ * @param docs (docIdNum, docId) rows
+ * @param fieldStats (field, fN, fC): each field's doc and token counts
+ */
+final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
+                     docs: DataFrame, fieldStats: DataFrame) {
+  import Resident._
+
+  def spark: SparkSession = docs.sparkSession
+
+  private var built: Built = _
+  /** nanoTime at which the current build began, until it is logged. */
+  private var buildStart = 0L
+
+  /** Runs `f` on the partitions, which the first call defines and persists;
+   * the first call to return logs the build. */
+  def use[A](f: Built => A): A = {
+    val b = synchronized {
+      if (built == null) { buildStart = System.nanoTime(); built = build() }
+      built
+    }
+    val out = f(b)
+    synchronized {
+      if (buildStart != 0L && (built eq b)) {
+        val secs = (System.nanoTime() - buildStart) / 1e9
+        val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == b.parts.id)
+          .fold(0L)(i => i.memSize + i.diskSize)
+        System.err.println(f"[resident] $label: ${b.shards} shards in ${b.parts.getNumPartitions} " +
+          f"partitions, ${b.blocks} blocks, ${b.docs.value} docs, ${bytes / 1e6}%.1f MB, $secs%.2f s")
+        buildStart = 0L
+      }
+    }
+    out
+  }
+
+  /** Unpersists the partitions; a later [[use]] builds them again. */
+  def release(): Unit = synchronized {
+    if (built != null) {
+      built.parts.unpersist(blocking = true)
+      built = null
+      buildStart = 0L
+    }
+  }
+
+  private def build(): Built = {
+    val spark = docs.sparkSession
+    val sc = spark.sparkContext
+    // per shard (first doc, last doc, blocks), and the field rows, in one job
+    val meta = blocks.select(col("shard"), col("minDoc"), col("maxDoc"))
+      .unionByName(fieldStats.select(col("field"), col("fN").cast("long"), col("fC").cast("long")),
+        allowMissingColumns = true)
+      .queryExecution.toRdd
+      .mapPartitions(metaRows)
+    val (extents, fields) = described(sc, s"$label shards")(meta.collect()).toSeq.partitionMap(identity)
+    val shards = extents.groupMapReduce(_._1)(e => (e._2, e._3, e._4)) {
+      case ((lo1, hi1, n1), (lo2, hi2, n2)) => (math.min(lo1, lo2), math.max(hi1, hi2), n1 + n2)
+    }.toArray.sortBy(_._2._1)
+    val ids = shards.map(_._1)
+    val los = shards.map(_._2._1)
+    val his = shards.map(_._2._2)
+    // the shard whose doc range holds a docIdNum, if any; a doc outside
+    // every range has no posting, so it is never a hit
+    val shardOf: Long => Option[Int] = { num =>
+      val i = java.util.Arrays.binarySearch(los, num) match {
+        case found if found >= 0 => found
+        case insertion => -insertion - 2
+      }
+      Option.when(i >= 0 && num <= his(i))(ids(i))
+    }
+    // tasks: no more than the shards, nor than the cores
+    val n = math.max(1, Seq(shards.length, spark.sessionState.conf.numShufflePartitions,
+      sc.defaultParallelism).min)
+
+    // one scan plan over the blocks, docs and dict rows; each row goes to
+    // its partition: a block and a doc by shard, a dict row by term
+    val input = blocks.select(col("shard"), col("field"), col("term"), col("n"), col("minDoc"),
+        col("maxDoc"), col("maxTf"), col("minDocLen"), col("docBytes"), col("tfBytes"), col("dlBytes"))
+      .unionByName(docs.select(col("docIdNum"), col("docId")), allowMissingColumns = true)
+      .unionByName(dict.select(col("field"), col("term"), col("df").cast("long"), col("cf").cast("long")),
+        allowMissingColumns = true)
+    val at = input.schema.fieldNames.zipWithIndex.toMap
+    val (shard, field, term, num, df) = (at("shard"), at("field"), at("term"), at("docIdNum"), at("df"))
+    val docCount = sc.longAccumulator(s"$label resident docs")
+    val firstDoc = ids.zip(los).toMap
+    val parts = input.queryExecution.toRdd
+      .flatMap { r =>
+        if (!r.isNullAt(shard)) {
+          val s = r.getInt(shard)
+          Some((s % n, Blk(s, string(r, field), string(r, term), r.getInt(at("n")),
+            r.getLong(at("minDoc")), r.getLong(at("maxDoc")), r.getLong(at("maxTf")),
+            r.getLong(at("minDocLen")), r.getBinary(at("docBytes")), r.getBinary(at("tfBytes")),
+            r.getBinary(at("dlBytes")))))
+        } else if (!r.isNullAt(num)) {
+          val d = r.getLong(num)
+          shardOf(d).map(s => (s % n, Doc(s, d, string(r, at("docId")))))
+        } else {
+          val t = string(r, term)
+          Some((Math.floorMod(t.hashCode, n), Term(t, string(r, field), r.getLong(df), r.getLong(at("cf")))))
+        }
+      }
+      .partitionBy(new HashPartitioner(n)) // keys are partition numbers
+      .mapPartitions(rs => Iterator(part(rs.map(_._2), firstDoc, docCount)))
+      .setName(s"$label resident shards").persist(StorageLevel.MEMORY_AND_DISK)
+    Built(parts, fields.toMap, shards.length, shards.map(_._2._3).sum, docCount)
+  }
+}
+
+object Resident {
+
+  /** A posting block as the partitions hold it, with its field. */
+  final case class Blk(shard: Int, field: String, term: String, n: Int, minDoc: Long, maxDoc: Long,
+                       maxTf: Long, minDocLen: Long, docBytes: Array[Byte], tfBytes: Array[Byte],
+                       dlBytes: Array[Byte]) extends Block
+
+  /** One shard: posting lists by (term, field), blocks sorted by minDoc, and
+   * the docId of docIdNum `base + i` at `docIds(i)`. */
+  final case class Shard(id: Int, lists: Map[(String, String), Array[Blk]],
+                         base: Long, docIds: Array[String]) {
+    def docId(num: Long): String = docIds((num - base).toInt)
+  }
+
+  /** One partition: its shards and its dictionary slice, term → (field, df,
+   * cf) rows. */
+  final case class Part(shards: Array[Shard], dict: Map[String, Array[(String, Long, Long)]])
+
+  /** Persisted partitions and each field's (fN, fC), with the build's
+   * shard, block and doc counts. */
+  final case class Built(parts: RDD[Part], fieldStats: Map[String, (Long, Long)],
+                         shards: Int, blocks: Long, docs: LongAccumulator)
+
+  /** What the build routes to a partition besides blocks. */
+  private final case class Doc(shard: Int, num: Long, id: String)
+  private final case class Term(term: String, field: String, df: Long, cf: Long)
+
+  /** String column `i` of an internal row, copied out of the row's buffer. */
+  private def string(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** One meta-scan partition: its (shard, minDoc, maxDoc) rows → per shard
+   * (shard, first doc, last doc, blocks); its (field, fN, fC) rows as they
+   * are. */
+  private def metaRows(rows: Iterator[InternalRow])
+      : Iterator[Either[(Int, Long, Long, Long), (String, (Long, Long))]] = {
+    val acc = scala.collection.mutable.HashMap.empty[Int, (Long, Long, Long)]
+    val fields = rows.flatMap { r =>
+      if (r.isNullAt(0)) Some(Right((string(r, 3), (r.getLong(4), r.getLong(5)))))
+      else {
+        val (s, lo, hi) = (r.getInt(0), r.getLong(1), r.getLong(2))
+        acc(s) = acc.get(s).fold((lo, hi, 1L)) { case (l, h, c) => (math.min(l, lo), math.max(h, hi), c + 1) }
+        None
+      }
+    }.toList
+    fields.iterator ++ acc.iterator.map { case (s, (lo, hi, c)) => Left((s, lo, hi, c)) }
+  }
+
+  /** A partition's element from its blocks, docs and dictionary rows. */
+  private def part(records: Iterator[Any], firstDoc: Map[Int, Long], docCount: LongAccumulator): Part = {
+    val blocks = ArrayBuffer.empty[Blk]
+    val docs = ArrayBuffer.empty[Doc]
+    val terms = ArrayBuffer.empty[Term]
+    records.foreach {
+      case b: Blk => blocks += b
+      case d: Doc => docs += d
+      case t: Term => terms += t
+    }
+    val docsOf = docs.groupBy(_.shard)
+    val shards = blocks.groupBy(_.shard).toArray.sortBy(_._1).map { case (s, bs) =>
+      // order blocks by doc range, NOT blockNo — a shard straddling a
+      // build-partition boundary has two block runs with repeated blockNos
+      val lists = bs.toArray.groupBy(b => (b.term, b.field)).view.mapValues(_.sortBy(_.minDoc)).toMap
+      val base = firstDoc(s)
+      val ds = docsOf.getOrElse(s, ArrayBuffer.empty)
+      val docIds = new Array[String](if (ds.isEmpty) 0 else (ds.map(_.num).max - base + 1).toInt)
+      ds.foreach(d => docIds((d.num - base).toInt) = d.id)
+      docCount.add(ds.size)
+      Shard(s, lists, base, docIds)
+    }
+    Part(shards, terms.toArray.groupMap(_.term)(t => (t.field, t.df, t.cf)))
+  }
+
+  /** Runs `f` with its jobs described as `desc`, then restores the caller's
+   * description; every other local property is left alone. */
+  private[graft] def described[A](sc: SparkContext, desc: String)(f: => A): A = {
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(desc)
+    try f finally sc.setLocalProperty(key, prev)
+  }
+}

@@ -1,18 +1,14 @@
 package graft.query
 
-import scala.collection.BufferedIterator
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.{Partitioner, SparkContext}
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
-import graft.index.Codec
+import graft.index.{Codec, Resident}
 import graft.model.{Block, Topic}
 
 /**
@@ -280,25 +276,8 @@ object BlockMax {
    * term in one field from its statistics; runs inside the kernel tasks. */
   type ScorerFactory = (QuerySpec, String, TermStats) => (Long, Long) => Double
 
-  /** A block as the kernel job ships it: what the kernel reads of a
-   * [[Block]], and its field. */
-  private final case class Shipped(shard: Int, field: String, term: String, n: Int,
-                                   minDoc: Long, maxDoc: Long, maxTf: Long, minDocLen: Long,
-                                   docBytes: Array[Byte], tfBytes: Array[Byte],
-                                   dlBytes: Array[Byte]) extends Block
-
-  /** Routes shard `s` (≥ 0) to partition `s mod n`, and key `−1 − p` to
-   * partition p: that key carries p's copy of the statistics rows, which
-   * thus sort before every shard. */
-  private final class ShardPartitioner(val numPartitions: Int) extends Partitioner {
-    def getPartition(key: Any): Int = {
-      val k = key.asInstanceOf[Int]
-      if (k < 0) -1 - k else k % numPartitions
-    }
-  }
-
-  /** Per query: its top-k (score, docIdNum), best first. */
-  private type Hits = Map[Int, List[(Double, Long)]]
+  /** Per query: its top-k (score, docIdNum, docId), best first. */
+  private type Hits = Map[Int, List[(Double, Long, String)]]
 
   /** Union of two per-query top-k sets over disjoint doc ranges, cut to k in
    * (score desc, docIdNum asc) order: the exact top-k of both ranges. */
@@ -308,18 +287,14 @@ object BlockMax {
         .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)).take(k)
     }.toMap
 
-  /** One reduce partition of the kernel job, sorted by key: its copy of the
-   * statistics rows — (field, term, df, cf) dict rows, and (field, null, fN,
-   * fC) field rows — then its shards' blocks shard by shard → the top-k over
-   * those shards. Holds one shard's blocks at a time. */
-  private def partitionTopK(in: BufferedIterator[(Int, Any)], specs: Map[Int, QuerySpec],
+  /** One resident partition's top-k over its shards, docIds resolved there;
+   * `stats` are the query terms' (field, term, df, cf) dict rows and
+   * `fields` each field's (fN, fC), from which the scorers are built. */
+  private def partitionTopK(part: Resident.Part, stats: Seq[(String, String, Long, Long)],
+                            fields: Map[String, (Long, Long)], specs: Map[Int, QuerySpec],
                             scorer: ScorerFactory, tie: Double, k: Int,
                             finish: Double => Double): Hits = {
-    val stats = ArrayBuffer.empty[(String, String, Long, Long)]
-    while (in.hasNext && in.head._1 < 0) stats += in.next()._2.asInstanceOf[(String, String, Long, Long)]
-    val (fieldRows, dictRows) = stats.toSeq.partition(_._2 == null)
-    val fields = fieldRows.map(r => r._1 -> (r._3, r._4)).toMap
-    val byTerm = dictRows.groupBy(_._2)
+    val byTerm = stats.groupBy(_._2)
     val queries = specs.map { case (qid, spec) =>
       qid -> Query(spec.msm, spec.terms.map { case (term, mult) =>
         QueryTerm(term, mult, byTerm.getOrElse(term, Nil).map { case (field, _, df, cf) =>
@@ -328,69 +303,42 @@ object BlockMax {
         })
       })
     }
-    var top: Hits = Map.empty
-    while (in.hasNext) {
-      val s = in.head._1
-      val blocks = ArrayBuffer.empty[Shipped]
-      while (in.hasNext && in.head._1 == s) blocks += in.next()._2.asInstanceOf[Shipped]
-      // order blocks by doc range, NOT blockNo — a shard straddling a
-      // build-partition boundary has two block runs with repeated blockNos
-      val lists: Map[(String, String), Array[_ <: Block]] = blocks.toArray
-        .groupBy(b => (b.term, b.field)).view.mapValues(_.sortBy(_.minDoc)).toMap
-      top = merge(top, shard(lists, queries, tie, k, finish).toList.groupMap(_._1)(r => (r._3, r._2)), k)
+    part.shards.foldLeft(Map.empty: Hits) { (top, s) =>
+      merge(top, shard(s.lists, queries, tie, k, finish).toList
+        .groupMap(_._1)(r => (r._3, r._2, s.docId(r._2))), k)
     }
-    top
-  }
-
-  /** String column `i` of an internal row, copied out of the row's buffer. */
-  private def string(r: InternalRow, i: Int): String =
-    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
-
-  /** Runs `f` with its jobs described as `desc`, then restores the caller's
-   * description; every other local property is left alone. */
-  private def described[A](sc: SparkContext, desc: String)(f: => A): A = {
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setJobDescription(desc)
-    try f finally sc.setLocalProperty(key, prev)
   }
 
   /**
-   * Distributed block-max search, eager, in two Spark jobs for the whole
-   * topic set, both run before this returns:
+   * Distributed block-max search over an index's [[Resident]] partitions,
+   * eager, in one Spark job for the whole topic set, described `<label>
+   * kernel: <n> topics`:
    *
-   *  1. the kernel job: blocks pruned to the query terms at the parquet scan
-   *     (row-group stats on `term`) are shuffled by shard; the term-pruned
-   *     `dict` rows and the `fieldStats` rows are read in the same scan plan
-   *     and ride the same shuffle, one copy to every reduce partition. Each
-   *     task builds its scorers from them through `scorer`, runs [[shard]]
-   *     per shard, and returns the per-query top-k of its shards; those
-   *     merge on the driver as tasks finish (exact: shard doc ranges are
-   *     disjoint).
-   *  2. the docIds job: one `docs` read, pruned to the winners' docIdNum
-   *     range, resolves docId for the at most k × |topics| winners.
+   *  1. each partition looks the query terms up in its dictionary slice and
+   *     sends the rows it holds to every partition (a few KB);
+   *  2. each partition builds its scorers from those rows and the driver's
+   *     per-field (fN, fC) through `scorer`, runs [[shard]] per shard, and
+   *     returns its per-query top-k with their docIds; those merge on the
+   *     driver as tasks finish (exact: shard doc ranges are disjoint).
+   *
+   * No batch reads or plans the index, or shuffles a block. The first batch
+   * on a handle also builds the partitions ([[Resident.use]]): one small
+   * `<label> shards` job, then this job materializes them.
    *
    * The driver then ranks each query's hits (score desc, docIdNum asc), adds
    * the sentinel rows, and returns (qid, docId, rank, score) as a local
-   * DataFrame: collecting it runs no further job. The two jobs are described
-   * `<label> kernel: <n> topics` and `<label> docIds`.
+   * DataFrame: collecting it runs no further job.
    *
-   * @param blocks [[Block]] rows of the index
-   * @param field the field of a block row (one constant for a plain index)
-   * @param dict (field, term, df, cf) rows of the index's dictionary
-   * @param fieldStats (field, fN, fC): each field's doc and token counts
    * @param msm minimum number of matched terms from a query's distinct-term count
    * @param rounded half-up round doc scores to this many decimals and rank
    *   on the rounded double (a double score column); None = float scores
    * @param sentinel docId of the (qid, sentinel, 1, 0) row added for every
    *   topic without hits; None = no such rows
    */
-  def search(blocks: DataFrame, field: Column, dict: DataFrame, fieldStats: DataFrame,
-             docs: DataFrame, topics: Seq[Topic], tag: Analyzer.Tag, msm: Int => Int,
+  def search(resident: Resident, topics: Seq[Topic], tag: Analyzer.Tag, msm: Int => Int,
              scorer: ScorerFactory, tie: Double, k: Int, rounded: Option[Int],
-             sentinel: Option[String], label: String): DataFrame = {
-    val spark = blocks.sparkSession
-    val sc = spark.sparkContext
+             sentinel: Option[String]): DataFrame = {
+    val spark = resident.spark
     val finish: Double => Double = rounded match {
       case None => d => d.toFloat.toDouble
       case Some(decimals) =>
@@ -399,57 +347,31 @@ object BlockMax {
     val specs = Exact.queryTerms(topics, tag).groupBy(_._1).map { case (qid, ts) =>
       qid -> QuerySpec(msm(ts.head._4), ts.map(t => (t._2, t._3)))
     }
-    val isQueryTerm = col("term").isin(specs.values.flatMap(_.terms.map(_._1)).toSeq.distinct: _*)
-    // reduce tasks: no more than the cores, since no adaptive coalescing
-    // trims empty ones (a batch may touch a single shard)
-    val n = math.max(1, math.min(spark.sessionState.conf.numShufflePartitions, sc.defaultParallelism))
-    def everywhere(row: Any): Iterator[(Int, Any)] = (0 until n).iterator.map(p => (-1 - p, row))
+    val terms = specs.values.flatMap(_.terms.map(_._1)).toSet
 
-    // one scan plan, columns (shard, field, term, n, minDoc, maxDoc, maxTf,
-    // minDocLen, docBytes, tfBytes, dlBytes, df, cf): the block rows, then
-    // the statistics rows — dict rows and (field, null, fN, fC) field rows —
-    // without a shard, read by one task
-    val stats = dict.filter(isQueryTerm)
-      .select(col("field"), col("term"), col("df").cast("long"), col("cf").cast("long"))
-      .unionByName(fieldStats.select(col("field"), col("fN").cast("long").as("df"),
-        col("fC").cast("long").as("cf")), allowMissingColumns = true)
-      .coalesce(1)
-    val input = blocks.filter(isQueryTerm)
-      .select(col("shard"), field.as("field"), col("term"), col("n"), col("minDoc"),
-        col("maxDoc"), col("maxTf"), col("minDocLen"), col("docBytes"), col("tfBytes"),
-        col("dlBytes"))
-      .unionByName(stats, allowMissingColumns = true)
-    val top: Hits = described(sc, s"$label kernel: ${topics.size} topics") {
-      // the plan's internal rows, without a SQL execution around them: the
-      // rows go straight into the shuffle
-      input.queryExecution.toRdd
-        .flatMap { r =>
-          if (r.isNullAt(0)) everywhere((string(r, 1), string(r, 2), r.getLong(11), r.getLong(12)))
-          else Iterator((r.getInt(0), Shipped(r.getInt(0), string(r, 1), string(r, 2), r.getInt(3),
-            r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
-            r.getBinary(8), r.getBinary(9), r.getBinary(10))))
-        }
-        .repartitionAndSortWithinPartitions(new ShardPartitioner(n))
-        .mapPartitions(it => Iterator(partitionTopK(it.buffered, specs, scorer, tie, k, finish)))
-        .reduce(merge(_, _, k))
-    }
-
-    val winners = top.valuesIterator.flatMap(_.map(_._2)).toSeq.distinct
-    val docIds: Map[Long, String] =
-      if (winners.isEmpty) Map.empty
-      else described(sc, s"$label docIds") {
-        val wanted = winners.toSet
-        docs.filter(col("docIdNum").between(winners.min, winners.max))
-          .select("docIdNum", "docId").queryExecution.toRdd
-          .flatMap(r => Option.when(wanted(r.getLong(0)))((r.getLong(0), string(r, 1))))
-          .collect().toMap
+    val top: Hits = resident.use { built =>
+      val parts = built.parts
+      val n = parts.getNumPartitions
+      val fields = built.fieldStats
+      Resident.described(spark.sparkContext, s"${resident.label} kernel: ${topics.size} topics") {
+        val stats = parts
+          .mapPartitions { it =>
+            val rows = it.flatMap(p => terms.iterator.flatMap(t =>
+              p.dict.getOrElse(t, Array.empty).iterator.map { case (f, df, cf) => (f, t, df, cf) }
+            )).toArray
+            if (rows.isEmpty) Iterator.empty else (0 until n).iterator.map(i => (i, rows))
+          }
+          .partitionBy(new HashPartitioner(n))
+        parts.zipPartitions(stats) { (ps, rows) =>
+          val st = rows.flatMap(_._2).toSeq
+          ps.map(partitionTopK(_, st, fields, specs, scorer, tie, k, finish))
+        }.reduce(merge(_, _, k))
       }
+    }
 
     val score: Double => Any = if (rounded.isEmpty) _.toFloat else identity
     val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, hits) =>
-      hits.zipWithIndex.flatMap { case ((s, doc), i) =>
-        docIds.get(doc).map(id => Row(qid, id, i + 1, score(s)))
-      }
+      hits.zipWithIndex.map { case ((s, _, id), i) => Row(qid, id, i + 1, score(s)) }
     }
     val sentinels = sentinel.toSeq.flatMap(id =>
       topics.filterNot(t => top.contains(t.qid)).map(t => Row(t.qid, id, 1, score(0d))))

@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
 import graft.index.IndexBuild
@@ -19,13 +18,14 @@ import graft.model.Topic
 object BlockMaxWand {
 
   /**
-   * Distributed BMW search, answered eagerly in two Spark jobs for the whole
-   * topic set ([[BlockMax.search]]): a kernel job, in which blocks pruned to
-   * the query terms at the parquet scan (predicate pushdown on `term`) and
-   * the query terms' dict rows share one shuffle by shard and each shard task
-   * runs the WAND loop per topic, and a docs job that resolves docId for the
-   * winners only. The per-shard top-k lists merge on the driver; the result
-   * is a local DataFrame, so collecting it runs no job.
+   * Distributed BMW search, answered eagerly in one Spark job for the whole
+   * topic set ([[BlockMax.search]]) against the index's resident shard
+   * partitions ([[IndexBuild.Index.resident]]): the query terms' dict rows
+   * go from their dictionary slices to every partition, and each partition
+   * runs the WAND loop per topic over its shards and resolves its winners'
+   * docIds. The per-partition top-k lists merge on the driver; the result
+   * is a local DataFrame, so collecting it runs no job. The first search on
+   * a loaded index also builds its partitions.
    */
   def search(index: IndexBuild.Index, topics: Seq[Topic], model: Scoring.Model,
              k: Int, tag: Analyzer.Tag = Analyzer.Tag.NoStem,
@@ -57,12 +57,7 @@ object BlockMaxWand {
         s.fieldDocs.toDouble, s.fieldTokens.toDouble))
     }
 
-    val spark = index.docs.sparkSession
-    import spark.implicits._
-    BlockMax.search(index.blocks.toDF(), field = lit(""),
-      dict = index.dict.select(lit("").as("field"), col("term"), col("df"), col("cf")),
-      fieldStats = Seq(("", index.stats.numDocs, index.stats.numTokens)).toDF("field", "fN", "fC"),
-      index.docs, topics, tag, msm = _ => 1, scorer, tie = 0d, k, roundedDouble,
-      sentinelDocId, label = "bmw")
+    BlockMax.search(index.resident, topics, tag, msm = _ => 1, scorer, tie = 0d, k,
+      roundedDouble, sentinelDocId)
   }
 }

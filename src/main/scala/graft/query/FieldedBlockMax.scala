@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import graft.analysis.Analyzer
 import graft.index.FieldedBlocks
@@ -24,10 +23,12 @@ object FieldedBlockMax {
 
   /**
    * Distributed fielded block-max search — result ≡ [[Fielded.searchIndexed]]
-   * (pinned in FieldedSpec) with every corpus-sized read a term-pruned block
-   * scan and per-doc work gated by θ and msm; answered eagerly in two Spark
-   * jobs, the per-(field, term) dict and per-field stats rows riding the
-   * kernel's shard shuffle ([[BlockMax.search]]).
+   * (pinned in FieldedSpec), with per-doc work gated by θ and msm; answered
+   * eagerly in one Spark job against the index's resident shard partitions
+   * ([[FieldedBlocks.FBIndex.resident]], built by the first search on a
+   * loaded index): the query terms' per-(field, term) dict rows go from
+   * their dictionary slices to every partition, and the per-field (fN, fC)
+   * rows ride in the job from the driver ([[BlockMax.search]]).
    *
    * @param rounded half-up round the doc score to this many decimals and
    *   rank on the rounded value (the cross-engine gate discipline);
@@ -57,8 +58,7 @@ object FieldedBlockMax {
     // docIdNum ascending ≡ docId-string ascending (fdocs numbering order) —
     // the kernel's (score desc, docIdNum asc) is Fielded.score's
     // (score desc, docId asc)
-    BlockMax.search(idx.blocks.toDF(), col("field"), idx.dict, idx.stats, idx.fdocs,
-      topics, tag, Fielded.minimumShouldMatch, scorer, tie, k, rounded, sentinel = None,
-      label = "fielded bmw")
+    BlockMax.search(idx.resident, topics, tag, Fielded.minimumShouldMatch, scorer, tie, k,
+      rounded, sentinel = None)
   }
 }

@@ -141,4 +141,15 @@ class DerivationsSpec extends AnyFunSuite {
     })
     assert(!Files.exists(Paths.get(failedDir)))
   }
+
+  test("inTempDir: release hands the value to its cleanup while the dir still exists") {
+    val d = new Derivations(_ => ())
+    @volatile var seen: (String, Boolean) = null
+    val dir = d.inTempDir("idx", "dir", "graft-derivations-spec",
+      (v: String) => seen = (v, Files.exists(Paths.get(v))))(identity)
+    assert(seen == null)
+    d.release()
+    assert(seen == ((dir, true)))
+    assert(!Files.exists(Paths.get(dir)))
+  }
 }

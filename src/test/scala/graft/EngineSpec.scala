@@ -93,24 +93,63 @@ class EngineSpec extends AnyFunSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"got $g want $w") }
   }
 
-  test("a BMW batch runs two labelled Spark jobs and leaves the caller's properties alone") {
+  test("BMW jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
-    val idx = index // loaded (its corpus-stats job runs) outside the counted window
+    val idx = IndexBuild.load(spark, indexDir) // its corpus-stats job runs outside the counted window
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val kernel = s"bmw kernel: ${topics.size} topics"
     sc.setJobDescription("caller")
     sc.setLocalProperty("graft.test.span", "7")
     try {
-      val jobs = SparkTestSession.jobDescriptions {
+      def batch() = SparkTestSession.jobDescriptions {
         BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT)).collect()
       }
-      assert(jobs == Seq(s"bmw kernel: ${topics.size} topics", "bmw docIds"))
+      assert(batch() == Seq("bmw shards", kernel)) // the first also builds the resident shards
+      assert(batch() == Seq(kernel))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       assert(sc.getLocalProperty("graft.test.span") == "7")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
     } finally {
       sc.setJobDescription(null)
       sc.setLocalProperty("graft.test.span", null)
+      idx.release()
     }
+  }
+
+  test("a searched handle keeps its snapshot across an append; concurrent first searches build once") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3)))
+        .sortBy(t => (t._1, t._3)).toSeq
+    val sorted = turnsLocal.sortBy(t => s"${t.conv_id}#${t.turn_idx}")
+    val (b1, b2) = sorted.splitAt(250)
+    val dir = Files.createTempDirectory("graft-idx-snapshot").toString
+    val sc = spark.sparkContext
+    val start = sc.getPersistentRDDs.keySet.toSet
+    Streams.appendBatch(b1.toDS(), dir, docsPerShard = 100, batchId = Some(0L))
+    val old = IndexBuild.load(spark, dir)
+    val before = rows(BlockMaxWand.search(old, topics, model, K, sentinelDocId = Some(SENT)))
+    assert(before == Oracle.topk(b1, topics, model, K, SENT).sortBy(t => (t._1, t._3)))
+    Streams.appendBatch(b2.toDS(), dir, docsPerShard = 100, batchId = Some(1L))
+    assert(rows(BlockMaxWand.search(old, topics, model, K, sentinelDocId = Some(SENT))) == before)
+
+    // persisted RDDs are weakly held: count new ids, not the map's size
+    val persisted = sc.getPersistentRDDs.keySet.toSet
+    val fresh = IndexBuild.load(spark, dir)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val got = try {
+      val calls = (1 to 2).map(_ => pool.submit(() =>
+        rows(BlockMaxWand.search(fresh, topics, model, K, sentinelDocId = Some(SENT)))))
+      calls.map(_.get())
+    } finally pool.shutdown()
+    assert(sc.getPersistentRDDs.keySet.count(k => !persisted(k)) == 1)
+    val exact = rows(Exact.search(fresh.termDocs, fresh.dict, fresh.stats, topics, model, K,
+      sentinelDocId = Some(SENT)))
+    assert(got.forall(_ == exact))
+    assert(exact == Oracle.topk(turnsLocal, topics, model, K, SENT).sortBy(t => (t._1, t._3)))
+    fresh.release()
+    old.release()
+    assert(sc.getPersistentRDDs.keySet.forall(start))
   }
 
   test("BMW ≡ exact ≡ oracle on a streamed index (two appended batches, dict snapshot v=2)") {
@@ -146,12 +185,19 @@ class EngineSpec extends AnyFunSuite {
       assert(left.isEmpty, left.values.map(_.toDebugString).mkString("\n"))
     }
     val before = sc.getPersistentRDDs.keySet.toSet
-    IndexBuild.build(turns, Files.createTempDirectory("graft-idx-unpersist").toString,
+    val idx = IndexBuild.build(turns, Files.createTempDirectory("graft-idx-unpersist").toString,
       docsPerShard = 100)
     leftSince(before)
     val fdir = Files.createTempDirectory("graft-fidx-unpersist").toString
-    graft.index.FieldedBlocks.build(
+    val fb = graft.index.FieldedBlocks.build(
       graft.index.FieldedIndex.build(graft.index.FieldedIndex.fromTurns(turns), fdir), fdir)
+    leftSince(before)
+    // and a searched handle's resident shards go with release()
+    graft.query.FieldedBlockMax.search(fb, topics, model, K).collect()
+    BlockMaxWand.search(idx, topics, model, K).collect()
+    assert(sc.getPersistentRDDs.keySet.count(k => !before(k)) == 2)
+    fb.release()
+    idx.release()
     leftSince(before)
   }
 
