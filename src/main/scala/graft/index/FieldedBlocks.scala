@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.FieldedBlock
 
@@ -33,8 +34,12 @@ import graft.model.FieldedBlock
  *             searches read them once, into the loaded index's
  *             [[Resident]] shard partitions
  * }}}
+ * Both are read through their declared schemas, so [[load]] runs no job.
  */
 object FieldedBlocks {
+
+  val FdocsSchema: StructType = StructType.fromDDL("docId STRING, docIdNum BIGINT")
+  val FblocksSchema: StructType = Encoders.product[FieldedBlock].schema
 
   final case class FBIndex(blocks: Dataset[FieldedBlock], fdocs: DataFrame,
                            dict: DataFrame, stats: DataFrame) {
@@ -67,7 +72,7 @@ object FieldedBlocks {
         "docIdNum", assumeSorted = false, col("docId"))
       try fdocs.write.mode("overwrite").parquet(s"$dir/fdocs") finally cleanup()
     }
-    val fdocs = spark.read.parquet(s"$dir/fdocs")
+    val fdocs = spark.read.schema(FdocsSchema).parquet(s"$dir/fdocs")
 
     if (!IndexBuild.stageDone(spark, s"$dir/fblocks"))
       idx.postings
@@ -80,18 +85,21 @@ object FieldedBlocks {
         .mapPartitions(cutRuns(_, docsPerShard, blockSize))
         .write.mode("overwrite").parquet(s"$dir/fblocks")
 
-    FBIndex(spark.read.parquet(s"$dir/fblocks").as[FieldedBlock], fdocs,
+    FBIndex(spark.read.schema(FblocksSchema).parquet(s"$dir/fblocks").as[FieldedBlock], fdocs,
       idx.dict, idx.stats)
   }
 
   def exists(spark: SparkSession, dir: String): Boolean =
     IndexBuild.stageDone(spark, s"$dir/fblocks")
 
+  /** Opens the blocks and the fielded index's dict and stats at `dir` from
+   * their file listings: no job. */
   def load(spark: SparkSession, dir: String): FBIndex = {
     import spark.implicits._
-    val idx = FieldedIndex.load(spark, dir)
-    FBIndex(spark.read.parquet(s"$dir/fblocks").as[FieldedBlock],
-      spark.read.parquet(s"$dir/fdocs"), idx.dict, idx.stats)
+    FBIndex(spark.read.schema(FblocksSchema).parquet(s"$dir/fblocks").as[FieldedBlock],
+      spark.read.schema(FdocsSchema).parquet(s"$dir/fdocs"),
+      spark.read.schema(FieldedIndex.DictSchema).parquet(s"$dir/dict"),
+      spark.read.schema(FieldedIndex.StatsSchema).parquet(s"$dir/stats"))
   }
 
   /** Cut one partition's (field, term, docIdNum, tf, docLen) rows — sorted

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Prebuilt fielded index for R3 retrieval (round-3 VERDICT "What's wrong"
@@ -29,9 +30,15 @@ import org.apache.spark.sql.functions._
  *
  * Query time ([[graft.query.Fielded.searchIndexed]]) reads ONLY pruned
  * scans of these three tables — zero aggregation over the corpus in the
- * query plan (plan-shape pinned in FieldedSpec).
+ * query plan (plan-shape pinned in FieldedSpec). Each table has a declared
+ * schema here, which every read goes through, so [[load]] runs no job.
  */
 object FieldedIndex {
+
+  val PostingsSchema: StructType =
+    StructType.fromDDL("docId STRING, field STRING, term STRING, tf BIGINT, docLen BIGINT")
+  val DictSchema: StructType = StructType.fromDDL("field STRING, term STRING, df BIGINT, cf BIGINT")
+  val StatsSchema: StructType = StructType.fromDDL("field STRING, fN BIGINT, fC BIGINT")
 
   final case class FIndex(postings: DataFrame, dict: DataFrame, stats: DataFrame)
 
@@ -74,7 +81,7 @@ object FieldedIndex {
       // at cluster scale that trades one full recompute + its CPU for one
       // local-disk write (guide §5 caching rule: reused AND expensive).
       val src = fielded
-        .select("docId", "field", "term", "tf", "docLen")
+        .select(PostingsSchema.map(f => col(f.name).cast(f.dataType)): _*)
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       try
         src
@@ -93,7 +100,7 @@ object FieldedIndex {
     // stage dirs — run them as two concurrent jobs (optimization guide
     // §2.6: actions are only sequential because driver code calls them
     // sequentially); each stays individually resumable.
-    val written = spark.read.parquet(s"$dir/postings")
+    val written = spark.read.schema(PostingsSchema).parquet(s"$dir/postings")
     val dictJob = () =>
       if (!IndexBuild.stageDone(spark, s"$dir/dict"))
         written.groupBy("field", "term")
@@ -162,9 +169,10 @@ object FieldedIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** Opens the fielded index at `dir` from its file listings: no job. */
   def load(spark: SparkSession, dir: String): FIndex =
     FIndex(
-      postings = spark.read.parquet(s"$dir/postings"),
-      dict = spark.read.parquet(s"$dir/dict"),
-      stats = spark.read.parquet(s"$dir/stats"))
+      postings = spark.read.schema(PostingsSchema).parquet(s"$dir/postings"),
+      dict = spark.read.schema(DictSchema).parquet(s"$dir/dict"),
+      stats = spark.read.schema(StatsSchema).parquet(s"$dir/stats"))
 }

@@ -1,12 +1,13 @@
 package graft.index
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.analysis.Analyzer
 import graft.data.Transcripts
-import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
+import graft.model.{CorpusStats, DictEntry, DocEntry, PostingBlock, Turn}
 
 /**
  * Resumable index build (SURVEY.md §7.2/§7.5, north rule: "resumable from
@@ -22,11 +23,18 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  *   dict/        term, termId, df, cf           (+ _SUCCESS; derived from
  *                                                block metadata — no extra
  *                                                pass over the corpus)
- *   dicts/v=N/   the same columns, as immutable snapshots: an appended
- *                index supersedes dict/ with them, and `_dict_version`
- *                names the current one (see [[dictPath]])
+ *                + _corpus_stats: "numDocs numTokens" of the docs this
+ *                dict counts, written last (the stage's commit point)
+ *   dicts/v=N/   the same columns and marker, as immutable snapshots: an
+ *                appended index supersedes dict/ with them, and
+ *                `_dict_version` names the current one (see [[dictPath]])
  *   manifest/    per-shard lineage + metrics rows, appended per wave
  * }}}
+ *
+ * Every table has one declared schema here ([[DocsSchema]], [[DictSchema]],
+ * [[PostingsSchema]]) and is read through it, so no read runs a job to infer
+ * a schema from parquet footers. [[load]] reads no rows: file listings, the
+ * `_dict_version` marker and the corpus stats of the dict snapshot it picks.
  *
  * Stage pipeline (each stage skipped when already committed):
  *  1. `docs` — one tokenize pass for (docId, docIdNum, docLen).
@@ -38,7 +46,8 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  *     Each wave appends manifest rows
  *     `(shard, wave, nBlocks, nPostings, nTerms, sumMaxTf, wallMs)`.
  *  3. `dict` — (term, df, cf) aggregated from block metadata (`n`, `sumTf`)
- *     + dense term-ordered termIds.
+ *     + dense term-ordered termIds, then the corpus stats of `docs/`; the
+ *     stage is done once its `_corpus_stats` marker exists.
  *
  * Reference analog: `Indexer.indexWithThreads`
  * (`/root/reference/src/main/java/edu/anadolu/Indexer.java:567-654`) —
@@ -47,6 +56,17 @@ import graft.model.{CorpusStats, DocEntry, PostingBlock, Turn}
  * doc-range sharding.
  */
 object IndexBuild {
+
+  /** The `docs/` table. */
+  val DocsSchema: StructType = Encoders.product[DocEntry].schema
+  /** `dict/` and every `dicts/v=N/` snapshot. */
+  val DictSchema: StructType = Encoders.product[DictEntry].schema
+  /** The `postings/` table: the partition column `shard` goes last, where
+   * the file listing puts it. */
+  val PostingsSchema: StructType = {
+    val blocks = Encoders.product[PostingBlock].schema
+    StructType(blocks.filterNot(_.name == "shard") :+ blocks("shard"))
+  }
 
   final case class Index(docs: DataFrame, dict: DataFrame,
                          blocks: Dataset[PostingBlock], stats: CorpusStats) {
@@ -216,7 +236,7 @@ object IndexBuild {
       if (docsWasDone) {
         val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
         docText(turns)
-          .join(spark.read.parquet(docsDir).select("docId", "docIdNum"), "docId")
+          .join(spark.read.schema(DocsSchema).parquet(docsDir).select("docId", "docIdNum"), "docId")
           .repartitionByRange(parts, col("docIdNum"))
           .sortWithinPartitions("docIdNum")
       } else freshAssigned._1
@@ -288,7 +308,7 @@ object IndexBuild {
           // block rows through the shuffle (see FieldedIndex.fieldStatsOf;
           // block terms are non-null by construction, so count(*) over the
           // (shard, term) groups ≡ the old countDistinct)
-          spark.read.parquet(postingsDir)
+          spark.read.schema(PostingsSchema).parquet(postingsDir)
             .filter(col("shard").isin(shardGroup: _*))
             .groupBy("shard", "term")
             .agg(count(lit(1)).as("tBlocks"), sum("n").as("tPostings"),
@@ -330,18 +350,19 @@ object IndexBuild {
     // commit marker for the postings stage as a whole
     writeSmallFile(spark, s"$postingsDir/_GRAFT_COMPLETE")
 
-    // -- stage 3: dict from block metadata (no corpus pass) --
+    // -- stage 3: dict from block metadata (no corpus pass) + corpus stats --
     // A streaming-appended index supersedes the flat dict/ with versioned
     // snapshots — never resurrect the stale flat dir over them. BUT if THIS
     // build call committed new posting shards (repairing a crashed append),
     // the latest snapshot no longer covers them: write a fresh
     // full-aggregation snapshot, so the returned dict counts every shard.
+    lazy val termStats = termStatsOf(spark.read.schema(PostingsSchema).parquet(postingsDir))
+    lazy val corpusStats = Tokenize.corpusStats(spark.read.schema(DocsSchema).parquet(docsDir))
     val version = dictVersion(spark, indexDir)
     if (version > 0L) {
-      if (repairedShards)
-        writeDictSnapshot(spark, indexDir, termStatsOf(spark.read.parquet(postingsDir)), version)
-    } else if (!stageDone(spark, dictDir))
-      Dictionary.writeWithIds(termStatsOf(spark.read.parquet(postingsDir)), dictDir)
+      if (repairedShards) writeDictSnapshot(spark, indexDir, termStats, corpusStats, version)
+    } else if (!exists(spark, statsFile(dictDir)))
+      writeDict(spark, dictDir, termStats, corpusStats)
 
     load(spark, indexDir)
   }
@@ -375,7 +396,7 @@ object IndexBuild {
    * the shard space of a resumed build, the numbering start of an append
    * onto an index without a high-water mark. */
   private[graft] def docsExtent(spark: SparkSession, docsDir: String): (Long, Long) = {
-    val r = spark.read.parquet(docsDir)
+    val r = spark.read.schema(DocsSchema).parquet(docsDir)
       .agg(count(lit(1)), coalesce(max("docIdNum"), lit(-1L))).head()
     (r.getLong(0), r.getLong(1))
   }
@@ -398,21 +419,48 @@ object IndexBuild {
    * flat dir is rewritten in place by a rebuild, so it cannot serve as an
    * immutable replay base). */
   private[graft] def snapshotBase(spark: SparkSession, indexDir: String): Long = {
-    if (dictVersion(spark, indexDir) == 0L && stageDone(spark, s"$indexDir/dict"))
-      writeDictSnapshot(spark, indexDir, spark.read.parquet(s"$indexDir/dict"), 0L)
+    val flat = s"$indexDir/dict"
+    if (dictVersion(spark, indexDir) == 0L && stageDone(spark, flat)) {
+      val stats = storedStats(spark, flat)
+      writeDictSnapshot(spark, indexDir, spark.read.schema(DictSchema).parquet(flat), stats, 0L)
+    }
     dictVersion(spark, indexDir)
   }
 
-  /** Write `termStats` (term, df, cf), numbered, as snapshot `base + 1` and
-   * advance `_dict_version` to it. Snapshot `base − 1` is deleted: a
-   * replayed append re-merges onto `base`, which is kept, so nothing older
-   * can be read again. */
+  /** Write `termStats` (term, df, cf), numbered, with its corpus stats as
+   * snapshot `base + 1` and advance `_dict_version` to it. Snapshot
+   * `base − 1` is deleted: a replayed append re-merges onto `base`, which is
+   * kept, so nothing older can be read again. */
   private[graft] def writeDictSnapshot(spark: SparkSession, indexDir: String,
-                                       termStats: DataFrame, base: Long): Unit = {
-    Dictionary.writeWithIds(termStats, snapshotDir(indexDir, base + 1))
+                                       termStats: DataFrame, stats: => CorpusStats,
+                                       base: Long): Unit = {
+    writeDict(spark, snapshotDir(indexDir, base + 1), termStats, stats)
     writeSmallFile(spark, versionFile(indexDir), (base + 1).toString)
     if (base > 1) fs(spark, indexDir).delete(new Path(snapshotDir(indexDir, base - 1)), true)
   }
+
+  /** Write `termStats` (term, df, cf), numbered, to `dir`, replacing what
+   * is there, and then `stats` as its `_corpus_stats` marker: a dict dir
+   * without the marker is not committed. The dict rows and `stats` are
+   * computed as two concurrent jobs. */
+  private[graft] def writeDict(spark: SparkSession, dir: String, termStats: DataFrame,
+                               stats: => CorpusStats): Unit = {
+    val s = alongside(() => Dictionary.writeWithIds(termStats, dir), "graft-idx-dict")(stats)
+    writeSmallFile(spark, statsFile(dir), s"${s.numDocs} ${s.numTokens}")
+  }
+
+  private def statsFile(dictDir: String) = s"$dictDir/_corpus_stats"
+
+  /** The corpus stats stored with the dict snapshot at `dictDir`. */
+  private[graft] def storedStats(spark: SparkSession, dictDir: String): CorpusStats =
+    readSmallFile(spark, statsFile(dictDir)) match {
+      case Some(body) =>
+        val Array(n, c) = body.split(' ')
+        CorpusStats(n.toLong, c.toLong)
+      case None => throw new IllegalStateException(
+        s"${statsFile(dictDir)} is missing: this index was written without stored corpus " +
+          "stats (by an older graft, or by a build that did not finish); rebuild it")
+    }
 
   /** Trimmed UTF-8 body of a small marker file, if present. */
   private[graft] def readSmallFile(spark: SparkSession, path: String): Option[String] =
@@ -457,13 +505,17 @@ object IndexBuild {
     if (v > 0L) snapshotDir(indexDir, v) else s"$indexDir/dict"
   }
 
+  /** Opens the index at `indexDir` from its metadata: file listings, the
+   * dict version and the stored corpus stats. Runs no Spark job. The dict
+   * and the stats come from the same snapshot. */
   def load(spark: SparkSession, indexDir: String): Index = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$indexDir/docs")
+    val dictDir = dictPath(spark, indexDir)
+    val stats = storedStats(spark, dictDir)
     Index(
-      docs,
-      spark.read.parquet(dictPath(spark, indexDir)),
-      spark.read.parquet(s"$indexDir/postings").as[PostingBlock],
-      Tokenize.corpusStats(docs))
+      spark.read.schema(DocsSchema).parquet(s"$indexDir/docs"),
+      spark.read.schema(DictSchema).parquet(dictDir),
+      spark.read.schema(PostingsSchema).parquet(s"$indexDir/postings").as[PostingBlock],
+      stats)
   }
 }

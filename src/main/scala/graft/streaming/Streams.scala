@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.analysis.Analyzer
-import graft.index.{DenseIds, IndexBuild, PostingsBuilder}
-import graft.model.Turn
+import graft.index.{DenseIds, IndexBuild, PostingsBuilder, Tokenize}
+import graft.model.{CorpusStats, Turn}
 
 /**
  * Structured Streaming surface (SURVEY.md §1.4: the reference is strictly
@@ -23,8 +23,9 @@ import graft.model.Turn
  *  - [[appendBatch]] / [[indexSink]]: incremental inverted-index ingestion
  *    — each micro-batch becomes a fresh disjoint set of posting shards
  *    (docIdNum ranges aligned to shard boundaries), the dictionary is
- *    re-derived from block METADATA only (never a corpus re-pass), and the
- *    result is a normal [[graft.index.IndexBuild.load]]-able index at
+ *    re-derived from block METADATA only (never a corpus re-pass), the
+ *    corpus stats from the base snapshot's plus the batch's own docs, and
+ *    the result is a normal [[graft.index.IndexBuild.load]]-able index at
  *    every commit point.
  */
 object Streams {
@@ -279,34 +280,38 @@ object Streams {
       IndexBuild.docText(turns), "docIdNum0", assumeSorted = false, col("docId"))
     if (batchN == 0L) { cleanup(); return }
 
-    // (start, dict base version) — from the replay sidecar when present,
-    // else from the index-level markers (hwm; docs scan only as first-contact
-    // fallback), persisted to the sidecar before any write.
-    // baseVer semantics: ≥1 = merge onto that immutable snapshot; 0 = empty
-    // index (delta IS the dict); −1 = legacy sidecar without a recorded
-    // base (written by the pre-snapshot code) — fall back to a FULL
-    // postings re-aggregation for this one replay, which is what the old
-    // code always did and is idempotent regardless of index state. Parsing
-    // a legacy body as base 0 would wipe the pre-existing vocabulary.
-    val (start, baseVer) = batchId.flatMap(id =>
-        IndexBuild.readSmallFile(spark, marker(id, "start")).map { body =>
-          val parts = body.split(':')
-          (parts(0).toLong, if (parts.length > 1) parts(1).toLong else -1L)
-        })
-      .getOrElse {
-        val hwm = IndexBuild.readSmallFile(spark, s"$indexDir/$HWM").map(_.toLong)
-          .orElse(Option.when(IndexBuild.exists(spark, docsDir))(
-            IndexBuild.docsExtent(spark, docsDir)._2).filter(_ >= 0L))
-        val s = hwm.fold(0L)(mx => ((mx / docsPerShard) + 1) * docsPerShard) // next shard boundary
-        val v = IndexBuild.snapshotBase(spark, indexDir)
-        batchId.foreach(id => IndexBuild.writeSmallFile(spark, marker(id, "start"), s"$s:$v"))
-        (s, v)
-      }
-    val withId = withId0
-      .withColumn("docIdNum", col("docIdNum0") + lit(start))
-      .drop("docIdNum0")
-
     try {
+      // (start, dict base version) — from the replay sidecar when present,
+      // else from the index-level markers (hwm; docs scan only as first-contact
+      // fallback), persisted to the sidecar before any write.
+      // baseVer semantics: ≥1 = merge onto that immutable snapshot; 0 = empty
+      // index (delta IS the dict); −1 = legacy sidecar without a recorded
+      // base (written by the pre-snapshot code) — fall back to a FULL
+      // postings re-aggregation for this one replay, which is what the old
+      // code always did and is idempotent regardless of index state. Parsing
+      // a legacy body as base 0 would wipe the pre-existing vocabulary.
+      val (start, baseVer) = batchId.flatMap(id =>
+          IndexBuild.readSmallFile(spark, marker(id, "start")).map { body =>
+            val parts = body.split(':')
+            (parts(0).toLong, if (parts.length > 1) parts(1).toLong else -1L)
+          })
+        .getOrElse {
+          val hwm = IndexBuild.readSmallFile(spark, s"$indexDir/$HWM").map(_.toLong)
+            .orElse(Option.when(IndexBuild.exists(spark, docsDir))(
+              IndexBuild.docsExtent(spark, docsDir)._2).filter(_ >= 0L))
+          val s = hwm.fold(0L)(mx => ((mx / docsPerShard) + 1) * docsPerShard) // next shard boundary
+          val v = IndexBuild.snapshotBase(spark, indexDir)
+          batchId.foreach(id => IndexBuild.writeSmallFile(spark, marker(id, "start"), s"$s:$v"))
+          (s, v)
+        }
+      val withId = withId0
+        .withColumn("docIdNum", col("docIdNum0") + lit(start))
+        .drop("docIdNum0")
+
+      // an index without stored corpus stats fails here, before any write
+      val baseStats =
+        if (baseVer <= 0L) CorpusStats(0L, 0L)
+        else IndexBuild.storedStats(spark, IndexBuild.snapshotDir(indexDir, baseVer))
       val newMax = start + batchN - 1
       if (!batchId.exists(id => IndexBuild.exists(spark, marker(id, "docs")))) {
         IndexBuild.writeDocs(withId, tag, docsDir, "append")
@@ -322,21 +327,30 @@ object Streams {
         .partitionBy("shard").parquet(postingsDir)
 
       // Incremental dict: old snapshot + THIS batch's block metadata only
-      // (shard partition pruning bounds the read to the batch's own shards).
-      val postings = spark.read.parquet(postingsDir)
+      // (shard partition pruning bounds the read to the batch's own shards);
+      // likewise the corpus stats: the base snapshot's + this batch's docs
+      // (its own docIdNum range), so a replay onto the same base rewrites
+      // the same snapshot.
+      val postings = spark.read.schema(IndexBuild.PostingsSchema).parquet(postingsDir)
+      val docs = spark.read.schema(IndexBuild.DocsSchema).parquet(docsDir)
       if (baseVer < 0L) // legacy replay: full re-agg (old semantics)
         IndexBuild.writeDictSnapshot(spark, indexDir, IndexBuild.termStatsOf(postings),
-          IndexBuild.dictVersion(spark, indexDir))
+          Tokenize.corpusStats(docs), IndexBuild.dictVersion(spark, indexDir))
       else {
         val batchShards = (start / docsPerShard).toInt to (newMax / docsPerShard).toInt
         val delta = IndexBuild.termStatsOf(postings.filter(col("shard").isin(batchShards: _*)))
+        val baseDir = IndexBuild.snapshotDir(indexDir, baseVer)
         val merged =
           if (baseVer == 0L) delta
-          else spark.read.parquet(IndexBuild.snapshotDir(indexDir, baseVer))
+          else spark.read.schema(IndexBuild.DictSchema).parquet(baseDir)
             .select("term", "df", "cf")
             .unionByName(delta)
             .groupBy("term").agg(sum("df").as("df"), sum("cf").as("cf"))
-        IndexBuild.writeDictSnapshot(spark, indexDir, merged, baseVer)
+        def stats = {
+          val batch = Tokenize.corpusStats(docs.filter(col("docIdNum").between(start, newMax)))
+          CorpusStats(baseStats.numDocs + batch.numDocs, baseStats.numTokens + batch.numTokens)
+        }
+        IndexBuild.writeDictSnapshot(spark, indexDir, merged, stats, baseVer)
       }
 
       IndexBuild.writeSmallFile(spark, s"$indexDir/$HWM", newMax.toString)

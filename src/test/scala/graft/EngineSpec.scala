@@ -95,7 +95,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("BMW jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
-    val idx = IndexBuild.load(spark, indexDir) // its corpus-stats job runs outside the counted window
+    val idx = IndexBuild.load(spark, indexDir) // a fresh handle: its resident shards are not built yet
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
     val kernel = s"bmw kernel: ${topics.size} topics"
     sc.setJobDescription("caller")
@@ -128,10 +128,14 @@ class EngineSpec extends AnyFunSuite {
     val start = sc.getPersistentRDDs.keySet.toSet
     Streams.appendBatch(b1.toDS(), dir, docsPerShard = 100, batchId = Some(0L))
     val old = IndexBuild.load(spark, dir)
+    val oldStats = old.stats
+    assert(oldStats == Tokenize.corpusStats(Tokenize.docs(b1.toDS())))
     val before = rows(BlockMaxWand.search(old, topics, model, K, sentinelDocId = Some(SENT)))
     assert(before == Oracle.topk(b1, topics, model, K, SENT).sortBy(t => (t._1, t._3)))
     Streams.appendBatch(b2.toDS(), dir, docsPerShard = 100, batchId = Some(1L))
     assert(rows(BlockMaxWand.search(old, topics, model, K, sentinelDocId = Some(SENT))) == before)
+    assert(old.stats == oldStats)
+    assert(IndexBuild.load(spark, dir).stats == Tokenize.corpusStats(Tokenize.docs(turns)))
 
     // persisted RDDs are weakly held: count new ids, not the map's size
     val persisted = sc.getPersistentRDDs.keySet.toSet
