@@ -18,18 +18,19 @@ import graft.model.Block
  * without reading or planning the index again (reference: `Searcher.java`
  * opens the index once and runs every topic against it, `:162-230`).
  *
- * One element per partition ([[Resident.Part]]) holds
- *  - its shards (`shard mod partitions`): posting lists by (term, field),
- *    blocks sorted by minDoc, and docId by docIdNum as an array from the
- *    shard's first doc;
- *  - its slice of the dictionary, hash-partitioned by term.
+ * One element per partition holds its shards (`shard mod partitions`):
+ * posting lists by (term, field), blocks sorted by minDoc, and docId by
+ * docIdNum as an array from the shard's first doc.
  *
  * The first [[use]] runs one small job, described `<label> shards`, for each
- * shard's doc range and block count (block metadata only) and the per-field
- * (fN, fC) rows, which stay on the driver; the partitions themselves are
+ * shard's doc range and block count (block metadata only), the per-field
+ * (fN, fC) rows and the dictionary's (field, term, df, cf) rows, which stay
+ * on the driver (reference: df/cf looked up once per term from the opened
+ * index, `ModelBase.computeWeight:50-57`); the partitions themselves are
  * persisted then, and materialized by the first caller's own job. The copy
  * serves the snapshot the handle was loaded from: the file listings and the
- * dict version pinned at load.
+ * dict version pinned at load, so the driver's dict never goes stale. It
+ * costs driver memory in O(vocabulary): one entry per (field, term).
  *
  * @param label what the partitions serve; their jobs are described with it
  * @param blocks the index's posting blocks, with a `field` column
@@ -61,14 +62,15 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
         val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == b.parts.id)
           .fold(0L)(i => i.memSize + i.diskSize)
         System.err.println(f"[resident] $label: ${b.shards} shards in ${b.parts.getNumPartitions} " +
-          f"partitions, ${b.blocks} blocks, ${b.docs.value} docs, ${bytes / 1e6}%.1f MB, $secs%.2f s")
+          f"partitions, ${b.blocks} blocks, ${b.docs.value} docs, ${bytes / 1e6}%.1f MB, " +
+          f"${b.dict.valuesIterator.map(_.length).sum} dict rows on the driver, $secs%.2f s")
         buildStart = 0L
       }
     }
     out
   }
 
-  /** Unpersists the partitions; a later [[use]] builds them again. */
+  /** Unpersists the partitions and drops the driver dict; a later [[use]] rebuilds both. */
   def release(): Unit = synchronized {
     if (built != null) {
       built.parts.unpersist(blocking = true)
@@ -80,13 +82,17 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
   private def build(): Built = {
     val spark = docs.sparkSession
     val sc = spark.sparkContext
-    // per shard (first doc, last doc, blocks), and the field rows, in one job
+    // per shard (first doc, last doc, blocks), the field rows and the dict
+    // rows, in one job: a field row is a (field, null term, fN, fC) row
     val meta = blocks.select(col("shard"), col("minDoc"), col("maxDoc"))
-      .unionByName(fieldStats.select(col("field"), col("fN").cast("long"), col("fC").cast("long")),
-        allowMissingColumns = true)
+      .unionByName(fieldStats.select(col("field"), col("fN").cast("long").as("docs"),
+        col("fC").cast("long").as("tokens")), allowMissingColumns = true)
+      .unionByName(dict.select(col("field"), col("df").cast("long").as("docs"),
+        col("cf").cast("long").as("tokens"), col("term")), allowMissingColumns = true)
       .queryExecution.toRdd
       .mapPartitions(metaRows)
-    val (extents, fields) = described(sc, s"$label shards")(meta.collect()).toSeq.partitionMap(identity)
+    val (extents, stats) = described(sc, s"$label shards")(meta.collect()).toSeq.partitionMap(identity)
+    val (fields, terms) = stats.partition(_._2 == null)
     val shards = extents.groupMapReduce(_._1)(e => (e._2, e._3, e._4)) {
       case ((lo1, hi1, n1), (lo2, hi2, n2)) => (math.min(lo1, lo2), math.max(hi1, hi2), n1 + n2)
     }.toArray.sortBy(_._2._1)
@@ -106,15 +112,12 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
     val n = math.max(1, Seq(shards.length, spark.sessionState.conf.numShufflePartitions,
       sc.defaultParallelism).min)
 
-    // one scan plan over the blocks, docs and dict rows; each row goes to
-    // its partition: a block and a doc by shard, a dict row by term
+    // one scan plan over the blocks and docs; each row goes to its shard's partition
     val input = blocks.select(col("shard"), col("field"), col("term"), col("n"), col("minDoc"),
         col("maxDoc"), col("maxTf"), col("minDocLen"), col("docBytes"), col("tfBytes"), col("dlBytes"))
       .unionByName(docs.select(col("docIdNum"), col("docId")), allowMissingColumns = true)
-      .unionByName(dict.select(col("field"), col("term"), col("df").cast("long"), col("cf").cast("long")),
-        allowMissingColumns = true)
     val at = input.schema.fieldNames.zipWithIndex.toMap
-    val (shard, field, term, num, df) = (at("shard"), at("field"), at("term"), at("docIdNum"), at("df"))
+    val (shard, field, term, num) = (at("shard"), at("field"), at("term"), at("docIdNum"))
     val docCount = sc.longAccumulator(s"$label resident docs")
     val firstDoc = ids.zip(los).toMap
     val parts = input.queryExecution.toRdd
@@ -125,18 +128,16 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
             r.getLong(at("minDoc")), r.getLong(at("maxDoc")), r.getLong(at("maxTf")),
             r.getLong(at("minDocLen")), r.getBinary(at("docBytes")), r.getBinary(at("tfBytes")),
             r.getBinary(at("dlBytes")))))
-        } else if (!r.isNullAt(num)) {
+        } else {
           val d = r.getLong(num)
           shardOf(d).map(s => (s % n, Doc(s, d, string(r, at("docId")))))
-        } else {
-          val t = string(r, term)
-          Some((Math.floorMod(t.hashCode, n), Term(t, string(r, field), r.getLong(df), r.getLong(at("cf")))))
         }
       }
       .partitionBy(new HashPartitioner(n)) // keys are partition numbers
       .mapPartitions(rs => Iterator(part(rs.map(_._2), firstDoc, docCount)))
       .setName(s"$label resident shards").persist(StorageLevel.MEMORY_AND_DISK)
-    Built(parts, fields.toMap, shards.length, shards.map(_._2._3).sum, docCount)
+    Built(parts, fields.map(f => f._1 -> (f._3, f._4)).toMap,
+      terms.toArray.groupMap(_._2)(t => (t._1, t._3, t._4)), shards.length, shards.map(_._2._3).sum, docCount)
   }
 }
 
@@ -154,52 +155,47 @@ object Resident {
     def docId(num: Long): String = docIds((num - base).toInt)
   }
 
-  /** One partition: its shards and its dictionary slice, term → (field, df,
-   * cf) rows. */
-  final case class Part(shards: Array[Shard], dict: Map[String, Array[(String, Long, Long)]])
-
-  /** Persisted partitions and each field's (fN, fC), with the build's
-   * shard, block and doc counts. */
-  final case class Built(parts: RDD[Part], fieldStats: Map[String, (Long, Long)],
+  /** Persisted partitions, one array of shards each; each field's (fN, fC)
+   * and the dictionary, term → (field, df, cf) rows, on the driver; the
+   * build's shard, block and doc counts. */
+  final case class Built(parts: RDD[Array[Shard]], fieldStats: Map[String, (Long, Long)],
+                         dict: Map[String, Array[(String, Long, Long)]],
                          shards: Int, blocks: Long, docs: LongAccumulator)
 
   /** What the build routes to a partition besides blocks. */
   private final case class Doc(shard: Int, num: Long, id: String)
-  private final case class Term(term: String, field: String, df: Long, cf: Long)
 
   /** String column `i` of an internal row, copied out of the row's buffer. */
   private def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
   /** One meta-scan partition: its (shard, minDoc, maxDoc) rows → per shard
-   * (shard, first doc, last doc, blocks); its (field, fN, fC) rows as they
-   * are. */
+   * (shard, first doc, last doc, blocks); its (field, term, docs, tokens)
+   * rows as they are. */
   private def metaRows(rows: Iterator[InternalRow])
-      : Iterator[Either[(Int, Long, Long, Long), (String, (Long, Long))]] = {
+      : Iterator[Either[(Int, Long, Long, Long), (String, String, Long, Long)]] = {
     val acc = scala.collection.mutable.HashMap.empty[Int, (Long, Long, Long)]
-    val fields = rows.flatMap { r =>
-      if (r.isNullAt(0)) Some(Right((string(r, 3), (r.getLong(4), r.getLong(5)))))
+    val stats = rows.flatMap { r =>
+      if (r.isNullAt(0)) Some(Right((string(r, 3), string(r, 6), r.getLong(4), r.getLong(5))))
       else {
         val (s, lo, hi) = (r.getInt(0), r.getLong(1), r.getLong(2))
         acc(s) = acc.get(s).fold((lo, hi, 1L)) { case (l, h, c) => (math.min(l, lo), math.max(h, hi), c + 1) }
         None
       }
     }.toList
-    fields.iterator ++ acc.iterator.map { case (s, (lo, hi, c)) => Left((s, lo, hi, c)) }
+    stats.iterator ++ acc.iterator.map { case (s, (lo, hi, c)) => Left((s, lo, hi, c)) }
   }
 
-  /** A partition's element from its blocks, docs and dictionary rows. */
-  private def part(records: Iterator[Any], firstDoc: Map[Int, Long], docCount: LongAccumulator): Part = {
+  /** A partition's element from its blocks and docs. */
+  private def part(records: Iterator[Any], firstDoc: Map[Int, Long], docCount: LongAccumulator) = {
     val blocks = ArrayBuffer.empty[Blk]
     val docs = ArrayBuffer.empty[Doc]
-    val terms = ArrayBuffer.empty[Term]
     records.foreach {
       case b: Blk => blocks += b
       case d: Doc => docs += d
-      case t: Term => terms += t
     }
     val docsOf = docs.groupBy(_.shard)
-    val shards = blocks.groupBy(_.shard).toArray.sortBy(_._1).map { case (s, bs) =>
+    blocks.groupBy(_.shard).toArray.sortBy(_._1).map { case (s, bs) =>
       // order blocks by doc range, NOT blockNo — a shard straddling a
       // build-partition boundary has two block runs with repeated blockNos
       val lists = bs.toArray.groupBy(b => (b.term, b.field)).view.mapValues(_.sortBy(_.minDoc)).toMap
@@ -210,7 +206,6 @@ object Resident {
       docCount.add(ds.size)
       Shard(s, lists, base, docIds)
     }
-    Part(shards, terms.toArray.groupMap(_.term)(t => (t.field, t.df, t.cf)))
   }
 
   /** Runs `f` with its jobs described as `desc`, then restores the caller's

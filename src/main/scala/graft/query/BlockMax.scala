@@ -2,7 +2,6 @@ package graft.query
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -276,57 +275,71 @@ object BlockMax {
    * term in one field from its statistics; runs inside the kernel tasks. */
   type ScorerFactory = (QuerySpec, String, TermStats) => (Long, Long) => Double
 
-  /** Per query: its top-k (score, docIdNum, docId), best first. */
-  private type Hits = Map[Int, List[(Double, Long, String)]]
+  /** One query's top-k in rank order (score desc, docIdNum asc), as columns. */
+  private final case class Ranked(scores: Array[Double], nums: Array[Long], ids: Array[String])
 
-  /** Union of two per-query top-k sets over disjoint doc ranges, cut to k in
-   * (score desc, docIdNum asc) order: the exact top-k of both ranges. */
+  /** Per query: its top-k. */
+  private type Hits = Map[Int, Ranked]
+
+  /** The first k of the stable merge of two top-k lists over disjoint doc
+   * ranges in (score desc, docIdNum asc) order: the exact top-k of both. */
+  private def merge(a: Ranked, b: Ranked, k: Int): Ranked = {
+    val n = math.min(k, a.ids.length + b.ids.length)
+    val out = Ranked(new Array[Double](n), new Array[Long](n), new Array[String](n))
+    var i = 0; var j = 0
+    for (o <- 0 until n) {
+      val fromB = i == a.ids.length || (j < b.ids.length && (b.scores(j) > a.scores(i) ||
+        (b.scores(j) == a.scores(i) && b.nums(j) < a.nums(i))))
+      val (r, at) = if (fromB) { j += 1; (b, j - 1) } else { i += 1; (a, i - 1) }
+      out.scores(o) = r.scores(at); out.nums(o) = r.nums(at); out.ids(o) = r.ids(at)
+    }
+    out
+  }
+
   private def merge(a: Hits, b: Hits, k: Int): Hits =
-    (a.keySet ++ b.keySet).iterator.map { qid =>
-      qid -> (a.getOrElse(qid, Nil) ++ b.getOrElse(qid, Nil))
-        .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)).take(k)
-    }.toMap
+    b.foldLeft(a) { case (top, (qid, r)) => top.updated(qid, top.get(qid).fold(r)(merge(_, r, k))) }
 
   /** One resident partition's top-k over its shards, docIds resolved there;
-   * `stats` are the query terms' (field, term, df, cf) dict rows and
+   * `stats` are the query terms' (field, df, cf) dict rows by term and
    * `fields` each field's (fN, fC), from which the scorers are built. */
-  private def partitionTopK(part: Resident.Part, stats: Seq[(String, String, Long, Long)],
+  private def partitionTopK(shards: Array[Resident.Shard], stats: Map[String, Array[(String, Long, Long)]],
                             fields: Map[String, (Long, Long)], specs: Map[Int, QuerySpec],
                             scorer: ScorerFactory, tie: Double, k: Int,
                             finish: Double => Double): Hits = {
-    val byTerm = stats.groupBy(_._2)
     val queries = specs.map { case (qid, spec) =>
       qid -> Query(spec.msm, spec.terms.map { case (term, mult) =>
-        QueryTerm(term, mult, byTerm.getOrElse(term, Nil).map { case (field, _, df, cf) =>
+        QueryTerm(term, mult, stats.getOrElse(term, Array.empty).toSeq.map { case (field, df, cf) =>
           val (fN, fC) = fields(field)
           field -> scorer(spec, field, TermStats(df, cf, fN, fC))
         })
       })
     }
-    part.shards.foldLeft(Map.empty: Hits) { (top, s) =>
-      merge(top, shard(s.lists, queries, tie, k, finish).toList
-        .groupMap(_._1)(r => (r._3, r._2, s.docId(r._2))), k)
+    shards.foldLeft(Map.empty: Hits) { (top, s) =>
+      merge(top, shard(s.lists, queries, tie, k, finish).toArray.groupBy(_._1).map { case (qid, hs) =>
+        qid -> Ranked(hs.map(_._3), hs.map(_._2), hs.map(h => s.docId(h._2)))
+      }, k)
     }
   }
 
   /**
    * Distributed block-max search over an index's [[Resident]] partitions,
-   * eager, in one Spark job for the whole topic set, described `<label>
-   * kernel: <n> topics`:
+   * eager, in one single-stage Spark job for the whole topic set, described
+   * `<label> kernel: <n> topics`:
    *
-   *  1. each partition looks the query terms up in its dictionary slice and
-   *     sends the rows it holds to every partition (a few KB);
-   *  2. each partition builds its scorers from those rows and the driver's
-   *     per-field (fN, fC) through `scorer`, runs [[shard]] per shard, and
-   *     returns its per-query top-k with their docIds; those merge on the
-   *     driver as tasks finish (exact: shard doc ranges are disjoint).
+   *  1. the driver looks the query terms up in the handle's dict and ships
+   *     only their rows, with the per-field (fN, fC), in the task closure;
+   *  2. each partition builds its scorers from them through `scorer`, runs
+   *     [[shard]] per shard, and returns per query its top-k as columns
+   *     (scores, docIdNums, docIds) in rank order; those merge on the driver
+   *     as tasks finish (exact: shard doc ranges are disjoint).
    *
-   * No batch reads or plans the index, or shuffles a block. The first batch
+   * No batch reads or plans the index, or shuffles anything. The first batch
    * on a handle also builds the partitions ([[Resident.use]]): one small
-   * `<label> shards` job, then this job materializes them.
+   * `<label> shards` job, which also brings the dict to the driver, then
+   * this job materializes them.
    *
-   * The driver then ranks each query's hits (score desc, docIdNum asc), adds
-   * the sentinel rows, and returns (qid, docId, rank, score) as a local
+   * The driver then numbers each query's merged hits by rank, adds the
+   * sentinel rows, and returns (qid, docId, rank, score) as a local
    * DataFrame: collecting it runs no further job.
    *
    * @param msm minimum number of matched terms from a query's distinct-term count
@@ -350,28 +363,17 @@ object BlockMax {
     val terms = specs.values.flatMap(_.terms.map(_._1)).toSet
 
     val top: Hits = resident.use { built =>
-      val parts = built.parts
-      val n = parts.getNumPartitions
+      // the tasks get the query terms' rows, never `built` or its whole dict
+      val stats = terms.iterator.flatMap(t => built.dict.get(t).map(t -> _)).toMap
       val fields = built.fieldStats
       Resident.described(spark.sparkContext, s"${resident.label} kernel: ${topics.size} topics") {
-        val stats = parts
-          .mapPartitions { it =>
-            val rows = it.flatMap(p => terms.iterator.flatMap(t =>
-              p.dict.getOrElse(t, Array.empty).iterator.map { case (f, df, cf) => (f, t, df, cf) }
-            )).toArray
-            if (rows.isEmpty) Iterator.empty else (0 until n).iterator.map(i => (i, rows))
-          }
-          .partitionBy(new HashPartitioner(n))
-        parts.zipPartitions(stats) { (ps, rows) =>
-          val st = rows.flatMap(_._2).toSeq
-          ps.map(partitionTopK(_, st, fields, specs, scorer, tie, k, finish))
-        }.reduce(merge(_, _, k))
+        built.parts.map(partitionTopK(_, stats, fields, specs, scorer, tie, k, finish)).reduce(merge(_, _, k))
       }
     }
 
     val score: Double => Any = if (rounded.isEmpty) _.toFloat else identity
-    val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, hits) =>
-      hits.zipWithIndex.map { case ((s, _, id), i) => Row(qid, id, i + 1, score(s)) }
+    val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, r) =>
+      r.ids.indices.map(i => Row(qid, r.ids(i), i + 1, score(r.scores(i))))
     }
     val sentinels = sentinel.toSeq.flatMap(id =>
       topics.filterNot(t => top.contains(t.qid)).map(t => Row(t.qid, id, 1, score(0d))))

@@ -20,10 +20,10 @@ object BlockMaxWand {
   /**
    * Distributed BMW search, answered eagerly in one Spark job for the whole
    * topic set ([[BlockMax.search]]) against the index's resident shard
-   * partitions ([[IndexBuild.Index.resident]]): the query terms' dict rows
-   * go from their dictionary slices to every partition, and each partition
-   * runs the WAND loop per topic over its shards and resolves its winners'
-   * docIds. The per-partition top-k lists merge on the driver; the result
+   * partitions ([[IndexBuild.Index.resident]]): the driver ships the query
+   * terms' dict rows with the tasks, and each partition runs the WAND loop
+   * per topic over its shards and resolves its winners' docIds. The
+   * per-partition top-k lists merge on the driver; the result
    * is a local DataFrame, so collecting it runs no job. The first search on
    * a loaded index also builds its partitions.
    */

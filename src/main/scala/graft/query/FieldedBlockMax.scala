@@ -26,9 +26,9 @@ object FieldedBlockMax {
    * (pinned in FieldedSpec), with per-doc work gated by θ and msm; answered
    * eagerly in one Spark job against the index's resident shard partitions
    * ([[FieldedBlocks.FBIndex.resident]], built by the first search on a
-   * loaded index): the query terms' per-(field, term) dict rows go from
-   * their dictionary slices to every partition, and the per-field (fN, fC)
-   * rows ride in the job from the driver ([[BlockMax.search]]).
+   * loaded index): the query terms' per-(field, term) dict rows and the
+   * per-field (fN, fC) rows ride in the job from the driver
+   * ([[BlockMax.search]]).
    *
    * @param rounded half-up round the doc score to this many decimals and
    *   rank on the rounded value (the cross-engine gate discipline);

@@ -101,11 +101,12 @@ class EngineSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     sc.setLocalProperty("graft.test.span", "7")
     try {
-      def batch() = SparkTestSession.jobDescriptions {
+      def batch() = SparkTestSession.jobs {
         BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT)).collect()
       }
-      assert(batch() == Seq("bmw shards", kernel)) // the first also builds the resident shards
-      assert(batch() == Seq(kernel))
+      // the first also builds the resident shards: one map stage before the kernel's
+      assert(batch() == Seq(("bmw shards", 1), (kernel, 2)))
+      assert(batch() == Seq((kernel, 1)))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       assert(sc.getLocalProperty("graft.test.span") == "7")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)
@@ -114,6 +115,54 @@ class EngineSpec extends AnyFunSuite {
       sc.setLocalProperty("graft.test.span", null)
       idx.release()
     }
+  }
+
+  /** BMW and fielded BMW over turns of `texts`, at `docsPerShard` docs a
+   * shard, against their exhaustive twins: BMW ≡ [[Exact.search]] (with
+   * sentinels) and fielded BMW ≡ `Fielded.searchIndexed` over the contents
+   * field, in both score modes. Returns the BMW rows. */
+  private def edgeCase(texts: Seq[String], topics: Seq[Topic], docsPerShard: Int)
+      : Seq[(Int, String, Int, Float)] = {
+    import spark.implicits._
+    val ts = texts.zipWithIndex.map { case (t, i) =>
+      Turn(f"edge$i%03d", 0, "user", t, null, new java.sql.Timestamp(0L)) }.toDS()
+    val dir = Files.createTempDirectory("graft-edge").toString
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+    val idx = IndexBuild.build(ts, s"$dir/plain", docsPerShard = docsPerShard)
+    val fidx = graft.index.FieldedIndex.build(
+      graft.index.FieldedIndex.fromTurns(ts).filter(col("field") === "contents"), s"$dir/fielded")
+    val fb = graft.index.FieldedBlocks.build(fidx, s"$dir/fielded", docsPerShard = docsPerShard, blockSize = 4)
+    try {
+      val got = BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT))
+      assert(rows(got) == rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, K,
+        sentinelDocId = Some(SENT))))
+      for (rounded <- Seq(None, Some(4)))
+        assert(rows(graft.query.FieldedBlockMax.search(fb, topics, model, K, rounded = rounded)) ==
+          rows(graft.query.Fielded.searchIndexed(fidx, topics, model, K, rounded = rounded)), s"rounded=$rounded")
+      got.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3))).toSeq
+    } finally { idx.release(); fb.release() }
+  }
+
+  test("an index of empty, null and whitespace-only turns: BMW returns only sentinels, ≡ exact") {
+    val texts = Seq("", null, "   ", "\t\n", "", null, " \u00a0 ", "")
+    val got = edgeCase(texts, topics, docsPerShard = 2)
+    assert(got.sortBy(_._1) == topics.map(t => (t.qid, SENT, 1, 0f)))
+  }
+
+  test("accented, CJK and supplementary-plane terms over several shards: BMW ≡ exact") {
+    val deseret = new String(Character.toChars(0x10400)) + new String(Character.toChars(0x10401))
+    val extB = new String(Character.toChars(0x20000)) + new String(Character.toChars(0x20001))
+    val vocab = Seq("café", "naïve", "Zürich", "東京", "日本語", "한국어", deseret, extB,
+      "ascii", "straße", "Ωmega")
+    val rnd = new scala.util.Random(7L)
+    val texts = (0 until 40).map(_ => Seq.fill(3 + rnd.nextInt(6))(vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val topics = Seq(Topic(1, "café zürich"), Topic(2, "東京 日本語"), Topic(3, deseret), Topic(4, extB + " ascii"),
+      Topic(5, "naïve naïve 한국어"), Topic(6, "STRASSE straße ωmega"), Topic(7, "cafe"))
+    val got = edgeCase(texts, topics, docsPerShard = 8) // 40 docs → 5 shards
+    assert(got.map(_._1).toSet == Set(1, 2, 3, 4, 5, 6, 7))
+    assert(got.exists(r => r._1 == 3 && r._2 != SENT), "the supplementary-plane term must hit")
+    assert(got.filter(_._1 == 7) == Seq((7, SENT, 1, 0f)), "an unaccented spelling is another term")
   }
 
   test("a searched handle keeps its snapshot across an append; concurrent first searches build once") {

@@ -300,12 +300,13 @@ class FieldedSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     sc.setLocalProperty("graft.test.span", "7")
     try {
-      def batch() = SparkTestSession.jobDescriptions {
+      def batch() = SparkTestSession.jobs {
         graft.query.FieldedBlockMax.search(fb, genTopics, Scoring.BM25c(0.9, 0.4), 10,
           boosts = genBoosts).collect()
       }
-      assert(batch() == Seq("fielded bmw shards", kernel)) // the first also builds the resident shards
-      assert(batch() == Seq(kernel))
+      // the first also builds the resident shards: one map stage before the kernel's
+      assert(batch() == Seq(("fielded bmw shards", 1), (kernel, 2)))
+      assert(batch() == Seq((kernel, 1)))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       assert(sc.getLocalProperty("graft.test.span") == "7")
       assert(spark.conf.get("spark.sql.shuffle.partitions") == partitions)

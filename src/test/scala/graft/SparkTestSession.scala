@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (JVM-forked once by sbt). */
@@ -18,16 +18,26 @@ object SparkTestSession {
   }
 
   /** Descriptions of the Spark jobs `f` starts on this thread, in start
-   * order. The jobs are told apart by a local property of their own; a
-   * marker job run afterwards flushes the listener bus, since a listener
-   * sees events in the order they were posted. */
-  def jobDescriptions(f: => Unit): Seq[String] = {
+   * order. */
+  def jobDescriptions(f: => Unit): Seq[String] = jobs(f).map(_._1)
+
+  /** The Spark jobs `f` starts on this thread, in start order: each one's
+   * description and the number of its stages that ran (a stage whose
+   * shuffle output already exists is skipped, and not counted). The jobs
+   * are told apart by a local property of their own; a marker job run
+   * afterwards flushes the listener bus, since a listener sees events in
+   * the order they were posted. */
+  def jobs(f: => Unit): Seq[(String, Int)] = {
     val sc = spark.sparkContext
     val key = "graft.test.jobs"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[Int])]()
+    val ran = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((e.properties.getProperty(key), e.properties.getProperty("spark.job.description")))
+        seen.add((e.properties.getProperty(key), e.properties.getProperty("spark.job.description"),
+          e.stageInfos.map(_.stageId)))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        ran.add(e.stageInfo.stageId)
     }
     sc.addSparkListener(listener)
     try {
@@ -39,7 +49,7 @@ object SparkTestSession {
       while (!seen.stream().anyMatch(_._1 == "marker") && System.nanoTime() < deadline) Thread.sleep(10)
       assert(seen.stream().anyMatch(_._1 == "marker"), "listener never saw the marker job")
       import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.filter(_._1 == "counted").map(_._2)
+      seen.asScala.toSeq.filter(_._1 == "counted").map(j => (j._2, j._3.count(ran.contains(_))))
     } finally sc.removeSparkListener(listener)
   }
 }
