@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Turn
 
@@ -90,7 +91,7 @@ object Transcripts {
   /** Adapter: driver test table `documents.parquet` → transcripts shape. */
   def fromDocuments(spark: SparkSession, sfDir: String): Dataset[Turn] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    table(spark, sfDir, "documents")
       .select(
         concat(lit("doc-"), col("doc_id").cast("string")).as("conv_id"),
         lit(0).as("turn_idx"),
@@ -101,7 +102,29 @@ object Transcripts {
       .as[Turn]
   }
 
-  /** Raw driver tables, for the relational/pipeline operators. */
+  /** The declared schema of each driver table, as parquet infers it from
+   * the files: every column nullable, naive timestamps as TIMESTAMP_NTZ. */
+  val Schemas: Map[String, StructType] = Map(
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, " +
+      "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, " +
+      "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, " +
+      "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "customer" -> "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING",
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, " +
+      "props STRING"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "region" -> "r_regionkey INT, r_name STRING",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, " +
+      "p_retailprice DOUBLE"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  /** Raw driver tables, for the relational/pipeline operators; read through
+   * their declared [[Schemas]], so opening one runs no schema-inference job
+   * (a file without some column reads it as nulls). */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    spark.read.schema(Schemas(name)).parquet(s"$sfDir/$name.parquet")
 }

@@ -2,6 +2,7 @@ package graft.query
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -167,34 +168,73 @@ object BlockMax {
     }
   }
 
-  /** Top-k accumulator ordered (score desc, docIdNum asc); ascending doc
-   * traversal ⇒ ties never displace earlier docs. */
-  private final class TopK(k: Int) {
-    private val heap = new java.util.PriorityQueue[(Double, Long)](k,
-      (a: (Double, Long), b: (Double, Long)) => {
-        val c = java.lang.Double.compare(a._1, b._1) // lowest score = worst first
-        if (c != 0) c else java.lang.Long.compare(b._2, a._2) // larger doc = worse
-      })
-    def theta: Double = if (heap.size < k) Double.NegativeInfinity else heap.peek()._1
-    def offer(score: Double, doc: Long): Unit = {
-      if (heap.size < k) heap.add((score, doc))
-      else if (score > heap.peek()._1) { heap.poll(); heap.add((score, doc)) }
-    }
-    def drain(): List[(Double, Long)] = {
-      var out = List.empty[(Double, Long)]
-      while (!heap.isEmpty) out = heap.poll() :: out
+  /** Top-k accumulator ordered (score desc, docIdNum asc): a binary min-heap
+   * over two primitive arrays, the worst entry (lowest score, then largest
+   * doc) at the root, grown with the hits, never sized k up front. Ascending
+   * doc traversal ⇒ ties never displace earlier docs. Scores compare as
+   * doubles (-0.0 == 0.0), like the admission test and [[merge]]. */
+  private[graft] final class TopK(k: Int) {
+    require(k > 0, s"k must be positive: $k")
+    private var scores = new Array[Double](math.min(k, 16))
+    private var docs = new Array[Long](scores.length)
+    private var n = 0
+
+    def size: Int = n
+    def theta: Double = if (n < k) Double.NegativeInfinity else scores(0)
+
+    def offer(score: Double, doc: Long): Unit =
+      if (n < k) {
+        if (n == scores.length) {
+          val cap = math.min(k.toLong, 2L * n).toInt
+          scores = java.util.Arrays.copyOf(scores, cap); docs = java.util.Arrays.copyOf(docs, cap)
+        }
+        scores(n) = score; docs(n) = doc; n += 1
+        var i = n - 1 // sift up
+        while (i > 0 && worse(i, (i - 1) >>> 1)) { swap(i, (i - 1) >>> 1); i = (i - 1) >>> 1 }
+      } else if (score > scores(0)) {
+        scores(0) = score; docs(0) = doc
+        siftDown(n)
+      }
+
+    /** Empties the heap into its top-k as columns, best first (an in-place
+     * heap sort: each pass moves the worst left to the end); `docId` names a
+     * docIdNum. */
+    def drain(docId: Long => String): Ranked = {
+      var end = n
+      while (end > 1) { end -= 1; swap(0, end); siftDown(end) }
+      val nums = java.util.Arrays.copyOf(docs, n)
+      val out = Ranked(java.util.Arrays.copyOf(scores, n), nums, Array.tabulate(n)(i => docId(nums(i))))
+      n = 0
       out
+    }
+
+    /** Entry i ranks below entry j. */
+    private def worse(i: Int, j: Int): Boolean =
+      scores(i) < scores(j) || (scores(i) == scores(j) && docs(i) > docs(j))
+
+    private def swap(i: Int, j: Int): Unit = {
+      val s = scores(i); scores(i) = scores(j); scores(j) = s
+      val d = docs(i); docs(i) = docs(j); docs(j) = d
+    }
+
+    /** Restores the heap order of the first `end` entries below the root. */
+    private def siftDown(end: Int): Unit = {
+      var i = 0
+      while (2 * i + 1 < end) {
+        val l = 2 * i + 1
+        val c = if (l + 1 < end && worse(l + 1, l)) l + 1 else l
+        if (!worse(c, i)) return
+        swap(i, c); i = c
+      }
     }
   }
 
   private val byDoc: java.util.Comparator[Term] =
     (a: Term, b: Term) => java.lang.Long.compare(a.doc, b.doc)
 
-  /** The WAND loop over one shard's streams of one query → its top-k
-   * (score, docIdNum), best first. `terms` is in UTF8 term order, the
-   * summation order of a doc's score. */
-  def topK(terms: Array[Term], msm: Int, k: Int,
-           finish: Double => Double): List[(Double, Long)] = {
+  /** The WAND loop over one shard's streams of one query → its top-k heap.
+   * `terms` is in UTF8 term order, the summation order of a doc's score. */
+  def topK(terms: Array[Term], msm: Int, k: Int, finish: Double => Double): TopK = {
     val heap = new TopK(k)
     val streams = terms.clone() // ordered by current doc; exhausted ones last
     var live = streams.length
@@ -215,7 +255,7 @@ object BlockMax {
         if (acc > theta && i >= msm - 1) pivot = i
         i += 1
       }
-      if (pivot < 0) return heap.drain() // nothing can beat θ anymore
+      if (pivot < 0) return heap // nothing can beat θ anymore
 
       val pivotDoc = streams(pivot).doc
       if (streams(0).doc == pivotDoc) {
@@ -246,21 +286,23 @@ object BlockMax {
       }
       settle()
     }
-    heap.drain()
+    heap
   }
 
-  /** One shard's top-k of every query as (qid, docIdNum, score); `lists`
-   * holds the shard's posting lists by (term, field), blocks by minDoc. */
+  /** One shard's top-k of every query with hits there; `lists` holds the
+   * shard's posting lists by (term, field), blocks by minDoc, and `docId`
+   * names a docIdNum of the shard. */
   def shard(lists: Map[(String, String), Array[_ <: Block]], queries: Map[Int, Query],
-            tie: Double, k: Int, finish: Double => Double): Iterator[(Int, Long, Double)] =
-    queries.iterator.flatMap { case (qid, q) =>
+            tie: Double, k: Int, finish: Double => Double, docId: Long => String): Hits =
+    queries.flatMap { case (qid, q) =>
       val terms = q.terms.sortBy(t => utf8(t.term)).flatMap { t =>
         val cursors = t.fields.sortBy(f => utf8(f._1)).flatMap { case (field, score) =>
           lists.get((t.term, field)).map(new Cursor(_, score))
         }
         if (cursors.isEmpty) None else Some(new Term(cursors.toArray, t.mult, tie))
       }
-      topK(terms.toArray, q.msm, k, finish).iterator.map { case (score, doc) => (qid, doc, score) }
+      val top = topK(terms.toArray, q.msm, k, finish)
+      Option.when(top.size > 0)(qid -> top.drain(docId))
     }
 
   /** A query before its scorers exist: minimum number of matched terms and
@@ -276,10 +318,10 @@ object BlockMax {
   type ScorerFactory = (QuerySpec, String, TermStats) => (Long, Long) => Double
 
   /** One query's top-k in rank order (score desc, docIdNum asc), as columns. */
-  private final case class Ranked(scores: Array[Double], nums: Array[Long], ids: Array[String])
+  final case class Ranked(scores: Array[Double], nums: Array[Long], ids: Array[String])
 
-  /** Per query: its top-k. */
-  private type Hits = Map[Int, Ranked]
+  /** Per query with hits: its top-k. */
+  type Hits = Map[Int, Ranked]
 
   /** The first k of the stable merge of two top-k lists over disjoint doc
    * ranges in (score desc, docIdNum asc) order: the exact top-k of both. */
@@ -299,25 +341,28 @@ object BlockMax {
   private def merge(a: Hits, b: Hits, k: Int): Hits =
     b.foldLeft(a) { case (top, (qid, r)) => top.updated(qid, top.get(qid).fold(r)(merge(_, r, k))) }
 
-  /** One resident partition's top-k over its shards, docIds resolved there;
-   * `stats` are the query terms' (field, df, cf) dict rows by term and
-   * `fields` each field's (fN, fC), from which the scorers are built. */
-  private def partitionTopK(shards: Array[Resident.Shard], stats: Map[String, Array[(String, Long, Long)]],
-                            fields: Map[String, (Long, Long)], specs: Map[Int, QuerySpec],
-                            scorer: ScorerFactory, tie: Double, k: Int,
-                            finish: Double => Double): Hits = {
-    val queries = specs.map { case (qid, spec) =>
-      qid -> Query(spec.msm, spec.terms.map { case (term, mult) =>
-        QueryTerm(term, mult, stats.getOrElse(term, Array.empty).toSeq.map { case (field, df, cf) =>
-          val (fN, fC) = fields(field)
-          field -> scorer(spec, field, TermStats(df, cf, fN, fC))
+  /** The kernel task of a batch: one resident partition's top-k over its
+   * shards, docIds resolved there. A named class rather than a closure, so
+   * Spark's closure cleaner returns at once instead of parsing class files
+   * on every batch. It carries the query terms' (field, df, cf) dict rows
+   * by term (`stats`), each field's (fN, fC), the specs and the scoring
+   * settings; the scorers are built in the task. */
+  private final class Kernel(stats: Map[String, Array[(String, Long, Long)]],
+                             fields: Map[String, (Long, Long)], specs: Map[Int, QuerySpec],
+                             scorer: ScorerFactory, tie: Double, k: Int, finish: Double => Double)
+      extends ((TaskContext, Iterator[Array[Resident.Shard]]) => Hits) with Serializable {
+    def apply(ctx: TaskContext, parts: Iterator[Array[Resident.Shard]]): Hits = {
+      val queries = specs.map { case (qid, spec) =>
+        qid -> Query(spec.msm, spec.terms.map { case (term, mult) =>
+          QueryTerm(term, mult, stats.getOrElse(term, Array.empty).toSeq.map { case (field, df, cf) =>
+            val (fN, fC) = fields(field)
+            field -> scorer(spec, field, TermStats(df, cf, fN, fC))
+          })
         })
-      })
-    }
-    shards.foldLeft(Map.empty: Hits) { (top, s) =>
-      merge(top, shard(s.lists, queries, tie, k, finish).toArray.groupBy(_._1).map { case (qid, hs) =>
-        qid -> Ranked(hs.map(_._3), hs.map(_._2), hs.map(h => s.docId(h._2)))
-      }, k)
+      }
+      parts.flatMap(_.iterator).foldLeft(Map.empty: Hits) { (top, s) =>
+        merge(top, shard(s.lists, queries, tie, k, finish, s.docId), k)
+      }
     }
   }
 
@@ -327,11 +372,11 @@ object BlockMax {
    * `<label> kernel: <n> topics`:
    *
    *  1. the driver looks the query terms up in the handle's dict and ships
-   *     only their rows, with the per-field (fN, fC), in the task closure;
+   *     only their rows, with the per-field (fN, fC), in the [[Kernel]] task;
    *  2. each partition builds its scorers from them through `scorer`, runs
    *     [[shard]] per shard, and returns per query its top-k as columns
-   *     (scores, docIdNums, docIds) in rank order; those merge on the driver
-   *     as tasks finish (exact: shard doc ranges are disjoint).
+   *     (scores, docIdNums, docIds) in rank order; the driver merges the
+   *     tasks' results (exact: shard doc ranges are disjoint).
    *
    * No batch reads or plans the index, or shuffles anything. The first batch
    * on a handle also builds the partitions ([[Resident.use]]): one small
@@ -367,7 +412,8 @@ object BlockMax {
       val stats = terms.iterator.flatMap(t => built.dict.get(t).map(t -> _)).toMap
       val fields = built.fieldStats
       Resident.described(spark.sparkContext, s"${resident.label} kernel: ${topics.size} topics") {
-        built.parts.map(partitionTopK(_, stats, fields, specs, scorer, tie, k, finish)).reduce(merge(_, _, k))
+        spark.sparkContext.runJob(built.parts, new Kernel(stats, fields, specs, scorer, tie, k, finish))
+          .foldLeft(Map.empty: Hits)(merge(_, _, k))
       }
     }
 

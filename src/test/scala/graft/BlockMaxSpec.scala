@@ -9,10 +9,10 @@ import graft.index.Codec
 import graft.model.{Block, FieldedBlock}
 import graft.query.BlockMax
 
-/** Spark-free property test of the block-max kernel: random posting lists
- * cut into small blocks across several shards, searched by [[BlockMax]],
- * must give exactly the (doc, score) list of a brute-force scorer that uses
- * the same score closures and summation order. */
+/** Spark-free property tests of the block-max kernel and its top-k heap:
+ * random posting lists cut into small blocks across several shards, searched
+ * by [[BlockMax]], must give exactly the (doc, score) list of a brute-force
+ * scorer that uses the same score closures and summation order. */
 class BlockMaxSpec extends AnyFunSuite {
   import BlockMaxSpec.Case
 
@@ -94,7 +94,7 @@ class BlockMaxSpec extends AnyFunSuite {
       val lists: Map[(String, String), Array[_ <: Block]] =
         shardBlocks.groupBy(b => (b.term, b.field)).view
           .mapValues(_.sortBy(_.minDoc).toArray).toMap
-      BlockMax.shard(lists, Map(1 -> query), c.tie, c.k, c.finish).map(r => (r._3, r._2))
+      BlockMax.shard(lists, Map(1 -> query), c.tie, c.k, c.finish, _.toString).values.flatMap(r => r.scores.zip(r.nums))
     }.toList.sortBy { case (s, d) => (-s, d) }.take(c.k)
   }
 
@@ -115,6 +115,36 @@ class BlockMaxSpec extends AnyFunSuite {
     val res = Test.check(params, prop)
     assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
     Seq(ties, kBeyondHits, dupTerms, msmAboveOne, multiShard).foreach(n => assert(n > 20))
+  }
+
+  test("top-k heap ≡ sort by (score desc, doc asc) then take k (heavy ties, -0.0 and 0.0, k up to Int.MaxValue)") {
+    val genStream: Gen[(Seq[(Double, Long)], Int)] = for {
+      n <- Gen.choose(0, 60)
+      values <- Gen.oneOf(Seq(-0.0, 0.0), Seq(-0.0, 0.0, 1d), Seq(0d, 2.5), Seq(-1d, -0.0, 3d), Seq(1d, 1.5))
+      scores <- Gen.listOfN(n, Gen.oneOf(values))
+      gaps <- Gen.listOfN(n, Gen.choose(1L, 3L))
+      k <- Gen.oneOf(Gen.const(1), Gen.choose(2, 20), Gen.choose(n + 1, n + 5), Gen.const(Int.MaxValue))
+    } yield (scores.zip(gaps.scanLeft(0L)(_ + _).tail), k) // docs ascending
+    var cut, kBeyondN, kMax, signedZeros = 0
+    val prop = Prop.forAll(genStream) { case (stream, k) =>
+      val heap = new BlockMax.TopK(k)
+      stream.foreach { case (score, doc) => heap.offer(score, doc) }
+      val got = heap.drain(d => s"d$d")
+      // -0.0 == 0.0: one score, as in the admission test `score > θ`
+      val want = stream.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)).take(k)
+      if (k < stream.size) cut += 1
+      if (k > stream.size) kBeyondN += 1
+      if (k == Int.MaxValue) kMax += 1
+      if (want.exists(_._1.equals(-0.0)) && want.exists(_._1.equals(0.0))) signedZeros += 1
+      Prop(got.nums.toSeq == want.map(_._2) && got.scores.toSeq == want.map(_._1) &&
+        got.ids.toSeq == want.map(w => s"d${w._2}")) :|
+        s"k=$k stream=$stream\n want $want\n got  ${got.scores.zip(got.nums).toSeq}"
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(1000).withWorkers(1).withInitialSeed(Seed(20261020L))
+    val res = Test.check(params, prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
+    Seq(cut, kBeyondN, kMax, signedZeros).foreach(n => assert(n > 50))
   }
 }
 

@@ -93,6 +93,15 @@ class EngineSpec extends AnyFunSuite {
     got.zip(want).foreach { case (g, w) => assert(g == w, s"got $g want $w") }
   }
 
+  test("k beyond the corpus (Int.MaxValue): BMW ≡ exact, every matching doc ranked") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3))).toSet
+    val got = rows(BlockMaxWand.search(index, topics, model, Int.MaxValue, sentinelDocId = Some(SENT)))
+    assert(got == rows(Exact.search(index.termDocs, index.dict, index.stats, topics, model, Int.MaxValue,
+      sentinelDocId = Some(SENT))))
+    assert(got.count(_._1 == 1) > K, "the hot-term topic must rank more docs than the default k")
+  }
+
   test("BMW jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
     val idx = IndexBuild.load(spark, indexDir) // a fresh handle: its resident shards are not built yet

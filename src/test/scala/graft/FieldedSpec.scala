@@ -291,6 +291,19 @@ class FieldedSpec extends AnyFunSuite {
     }
   }
 
+  test("FieldedBlockMax ≡ searchIndexed with k beyond the corpus (Int.MaxValue), float + rounded") {
+    for (rounded <- Seq(None, Some(4))) {
+      val want = Fielded.searchIndexed(genIdx, genTopics, Scoring.BM25c(0.9, 0.4), Int.MaxValue,
+          boosts = genBoosts, rounded = rounded)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+      val got = graft.query.FieldedBlockMax.search(genBlocks, genTopics,
+          Scoring.BM25c(0.9, 0.4), Int.MaxValue, boosts = genBoosts, rounded = rounded)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+      assert(want.count(_._1 == 4) > 50, "a hot-term topic must rank more docs than the k cuts above")
+      assert(got == want, s"rounded=$rounded diverged:\n  missing=${want -- got}\n  extra=${got -- want}")
+    }
+  }
+
   test("FieldedBlockMax jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
     val fb = genBlocks.copy() // a fresh handle: its resident shards are not built yet
