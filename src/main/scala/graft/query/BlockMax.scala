@@ -1,10 +1,16 @@
 package graft.query
 
-import scala.jdk.CollectionConverters._
+import java.util.OptionalLong
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, Statistics, SupportsReportStatistics}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
@@ -366,6 +372,27 @@ object BlockMax {
     }
   }
 
+  /** A batch's result rows as a DSv2 table named `label` whose one scan is
+   * a `LocalScan` of the rows: Spark plans it as a `LocalTableScanExec`, so
+   * analysis and optimization see one leaf instead of the rows, and a
+   * collect runs no job. The scan reports the rows' count and size (the
+   * size a `LocalRelation` of them reports), so a join can still broadcast
+   * it. */
+  private final class Result(label: String, rowSchema: StructType, rowArray: Array[InternalRow])
+      extends Table with SupportsRead with ScanBuilder with LocalScan with SupportsReportStatistics {
+    def name(): String = label
+    override def schema(): StructType = rowSchema
+    def capabilities(): java.util.Set[TableCapability] = java.util.EnumSet.of(TableCapability.BATCH_READ)
+    def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = this
+    def build(): Scan = this
+    def readSchema(): StructType = rowSchema
+    def rows(): Array[InternalRow] = rowArray
+    def estimateStatistics(): Statistics = new Statistics {
+      def sizeInBytes(): OptionalLong = OptionalLong.of((8L + rowSchema.defaultSize) * rowArray.length)
+      def numRows(): OptionalLong = OptionalLong.of(rowArray.length)
+    }
+  }
+
   /**
    * Distributed block-max search over an index's [[Resident]] partitions,
    * eager, in one single-stage Spark job for the whole topic set, described
@@ -384,8 +411,11 @@ object BlockMax {
    * this job materializes them.
    *
    * The driver then numbers each query's merged hits by rank, adds the
-   * sentinel rows, and returns (qid, docId, rank, score) as a local
-   * DataFrame: collecting it runs no further job.
+   * sentinel rows, and returns (qid, docId, rank, score) over a `Result`
+   * table named `<label> top-k: <n> topics`, whose scan holds those rows:
+   * collecting the result, or an identity selection of it, runs no further
+   * job, while an aliasing projection over it (`withColumnRenamed`, say)
+   * runs one. k ≤ 0 ranks nothing and runs no job.
    *
    * @param msm minimum number of matched terms from a query's distinct-term count
    * @param rounded half-up round doc scores to this many decimals and rank
@@ -407,7 +437,9 @@ object BlockMax {
     }
     val terms = specs.values.flatMap(_.terms.map(_._1)).toSet
 
-    val top: Hits = resident.use { built =>
+    // k ≤ 0 ranks nothing, as on the exhaustive paths (only the sentinel
+    // rows, where asked), and runs no job
+    val top: Hits = if (k <= 0) Map.empty else resident.use { built =>
       // the tasks get the query terms' rows, never `built` or its whole dict
       val stats = terms.iterator.flatMap(t => built.dict.get(t).map(t -> _)).toMap
       val fields = built.fieldStats
@@ -418,16 +450,20 @@ object BlockMax {
     }
 
     val score: Double => Any = if (rounded.isEmpty) _.toFloat else identity
+    def row(qid: Int, docId: String, rank: Int, s: Double): InternalRow =
+      new GenericInternalRow(Array[Any](qid, UTF8String.fromString(docId), rank, score(s)))
     val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, r) =>
-      r.ids.indices.map(i => Row(qid, r.ids(i), i + 1, score(r.scores(i))))
+      r.ids.indices.map(i => row(qid, r.ids(i), i + 1, r.scores(i)))
     }
     val sentinels = sentinel.toSeq.flatMap(id =>
-      topics.filterNot(t => top.contains(t.qid)).map(t => Row(t.qid, id, 1, score(0d))))
+      topics.filterNot(t => top.contains(t.qid)).map(t => row(t.qid, id, 1, 0d)))
     val schema = StructType(Seq(
       StructField("qid", IntegerType, nullable = false),
       StructField("docId", StringType),
       StructField("rank", IntegerType, nullable = false),
       StructField("score", if (rounded.isEmpty) FloatType else DoubleType, nullable = false)))
-    spark.createDataFrame((ranked ++ sentinels).asJava, schema)
+    val table = new Result(s"${resident.label} top-k: ${topics.size} topics", schema, (ranked ++ sentinels).toArray)
+    new classic.Dataset[Row](classic.ClassicConversions.castToImpl(spark),
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()), Encoders.row(schema))
   }
 }

@@ -23,9 +23,11 @@ object BlockMaxWand {
    * partitions ([[IndexBuild.Index.resident]]): the driver ships the query
    * terms' dict rows with the tasks, and each partition runs the WAND loop
    * per topic over its shards and resolves its winners' docIds. The
-   * per-partition top-k lists merge on the driver; the result
-   * is a local DataFrame, so collecting it runs no job. The first search on
-   * a loaded index also builds its partitions.
+   * per-partition top-k lists merge on the driver into the result's rows,
+   * which the DataFrame's scan holds: collecting it, or an identity
+   * selection of it, runs no job; an aliasing projection over it runs one.
+   * The first search on a loaded index also builds its partitions; k ≤ 0
+   * ranks nothing (only the sentinel rows, if asked) and runs no job.
    */
   def search(index: IndexBuild.Index, topics: Seq[Topic], model: Scoring.Model,
              k: Int, tag: Analyzer.Tag = Analyzer.Tag.NoStem,

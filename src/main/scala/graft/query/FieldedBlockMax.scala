@@ -28,7 +28,9 @@ object FieldedBlockMax {
    * ([[FieldedBlocks.FBIndex.resident]], built by the first search on a
    * loaded index): the query terms' per-(field, term) dict rows and the
    * per-field (fN, fC) rows ride in the job from the driver
-   * ([[BlockMax.search]]).
+   * ([[BlockMax.search]]). The merged rows are held by the result's scan:
+   * collecting it, or an identity selection of it, runs no job; an aliasing
+   * projection over it runs one. k ≤ 0 ranks nothing and runs no job.
    *
    * @param rounded half-up round the doc score to this many decimals and
    *   rank on the rounded value (the cross-engine gate discipline);

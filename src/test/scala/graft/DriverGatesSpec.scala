@@ -80,6 +80,15 @@ class DriverGatesSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
+  test("a warm block-max gate runs its kernel job and nothing else (r1c_bmw_topk, r3c_fielded_bmw)") {
+    for ((gate, label) <- Seq("r1c_bmw_topk" -> "bmw", "r3c_fielded_bmw" -> "fielded bmw")) {
+      val fn = SparkEntry.queries(gate)
+      fn(spark, sfDir).collect() // the derivations and the resident shards
+      assert(SparkTestSession.jobs(fn(spark, sfDir).collect()) ==
+        Seq((s"$label kernel: ${DriverQueries.topics.size} topics", 1)), gate)
+    }
+  }
+
   test("every oracleSql string matches its pinned SHA-256") {
     def sha256(s: String): String =
       java.security.MessageDigest.getInstance("SHA-256")

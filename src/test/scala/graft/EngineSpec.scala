@@ -102,6 +102,23 @@ class EngineSpec extends AnyFunSuite {
     assert(got.count(_._1 == 1) > K, "the hot-term topic must rank more docs than the default k")
   }
 
+  test("k ≤ 0: BMW ranks nothing, ≡ exact (a sentinel per topic where asked), with no job") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+    val idx = index // built outside the counted jobs
+    for (k <- Seq(0, -1); sentinel <- Seq(None, Some(SENT)); rounded <- Seq(None, Some(4))) {
+      var got = Set.empty[(Int, String, Int, Any)]
+      val jobs = SparkTestSession.jobs {
+        got = rows(BlockMaxWand.search(idx, topics, model, k, sentinelDocId = sentinel, roundedDouble = rounded))
+      }
+      val zero: Any = if (rounded.isEmpty) 0f else 0d
+      assert(jobs.isEmpty, s"k=$k")
+      assert(got == sentinel.toSet.flatMap((id: String) => topics.map(t => (t.qid, id, 1, zero))), s"k=$k")
+      assert(got == rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, k,
+        sentinelDocId = sentinel, roundedDouble = rounded)), s"k=$k sentinel=$sentinel rounded=$rounded")
+    }
+  }
+
   test("BMW jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
     val idx = IndexBuild.load(spark, indexDir) // a fresh handle: its resident shards are not built yet
@@ -110,8 +127,13 @@ class EngineSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     sc.setLocalProperty("graft.test.span", "7")
     try {
-      def batch() = SparkTestSession.jobs {
-        BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT)).collect()
+      // the search's jobs; collecting its result, or an identity selection, runs none
+      def batch() = {
+        var result: org.apache.spark.sql.DataFrame = null
+        val jobs = SparkTestSession.jobs { result = BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT)) }
+        assert(SparkTestSession.jobs(result.collect()).isEmpty)
+        assert(SparkTestSession.jobs(result.select("qid", "docId", "rank", "score").collect()).isEmpty)
+        jobs
       }
       // the first also builds the resident shards: one map stage before the kernel's
       assert(batch() == Seq(("bmw shards", 1), (kernel, 2)))

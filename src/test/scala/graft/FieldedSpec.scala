@@ -304,6 +304,21 @@ class FieldedSpec extends AnyFunSuite {
     }
   }
 
+  test("k ≤ 0: FieldedBlockMax ranks nothing, ≡ searchIndexed, with no job") {
+    val blocks = genBlocks // built outside the counted jobs
+    for (k <- Seq(0, -1); rounded <- Seq(None, Some(4))) {
+      var got = Array.empty[org.apache.spark.sql.Row]
+      val jobs = SparkTestSession.jobs {
+        got = graft.query.FieldedBlockMax.search(blocks, genTopics, Scoring.BM25c(0.9, 0.4), k,
+          boosts = genBoosts, rounded = rounded).collect()
+      }
+      assert(jobs.isEmpty, s"k=$k")
+      assert(got.isEmpty, s"k=$k")
+      assert(Fielded.searchIndexed(genIdx, genTopics, Scoring.BM25c(0.9, 0.4), k,
+        boosts = genBoosts, rounded = rounded).collect().isEmpty, s"k=$k rounded=$rounded")
+    }
+  }
+
   test("FieldedBlockMax jobs: shards + kernel on a fresh load, then kernel only") {
     val sc = spark.sparkContext
     val fb = genBlocks.copy() // a fresh handle: its resident shards are not built yet
@@ -313,9 +328,15 @@ class FieldedSpec extends AnyFunSuite {
     sc.setJobDescription("caller")
     sc.setLocalProperty("graft.test.span", "7")
     try {
-      def batch() = SparkTestSession.jobs {
-        graft.query.FieldedBlockMax.search(fb, genTopics, Scoring.BM25c(0.9, 0.4), 10,
-          boosts = genBoosts).collect()
+      // the search's jobs; collecting its result, or an identity selection, runs none
+      def batch() = {
+        var result: org.apache.spark.sql.DataFrame = null
+        val jobs = SparkTestSession.jobs {
+          result = graft.query.FieldedBlockMax.search(fb, genTopics, Scoring.BM25c(0.9, 0.4), 10, boosts = genBoosts)
+        }
+        assert(SparkTestSession.jobs(result.collect()).isEmpty)
+        assert(SparkTestSession.jobs(result.select("qid", "docId", "rank", "score").collect()).isEmpty)
+        jobs
       }
       // the first also builds the resident shards: one map stage before the kernel's
       assert(batch() == Seq(("fielded bmw shards", 1), (kernel, 2)))
