@@ -19,8 +19,11 @@ import graft.model.Block
  * opens the index once and runs every topic against it, `:162-230`).
  *
  * One element per partition holds its shards (`shard mod partitions`):
- * posting lists by (term, field), blocks sorted by minDoc, and docId by
- * docIdNum as an array from the shard's first doc.
+ * posting lists by (term, field), blocks sorted by minDoc, and the docIds
+ * by docIdNum from the shard's first doc as one [[DocIdColumn]]: a UTF-8
+ * byte buffer filled once, here, from the docs rows' `UTF8String` bytes, and
+ * each entry's end offset. A docIdNum of the range without a docs row, and
+ * a null docId, is a null entry, so it stays null in a result row.
  *
  * The first [[use]] runs one small job, described `<label> shards`, for each
  * shard's doc range and block count (block metadata only), the per-field
@@ -62,7 +65,8 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
         val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == b.parts.id)
           .fold(0L)(i => i.memSize + i.diskSize)
         System.err.println(f"[resident] $label: ${b.shards} shards in ${b.parts.getNumPartitions} " +
-          f"partitions, ${b.blocks} blocks, ${b.docs.value} docs, ${bytes / 1e6}%.1f MB, " +
+          f"partitions, ${b.blocks} blocks, ${b.docs.value} docs, ${bytes / 1e6}%.1f MB " +
+          f"(docId buffers ${b.idBytes.value} bytes), " +
           f"${b.dict.valuesIterator.map(_.length).sum} dict rows on the driver, $secs%.2f s")
         buildStart = 0L
       }
@@ -119,6 +123,7 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
     val at = input.schema.fieldNames.zipWithIndex.toMap
     val (shard, field, term, num) = (at("shard"), at("field"), at("term"), at("docIdNum"))
     val docCount = sc.longAccumulator(s"$label resident docs")
+    val idBytes = sc.longAccumulator(s"$label resident docId bytes")
     val firstDoc = ids.zip(los).toMap
     val parts = input.queryExecution.toRdd
       .flatMap { r =>
@@ -130,14 +135,15 @@ final class Resident(val label: String, blocks: DataFrame, dict: DataFrame,
             r.getBinary(at("dlBytes")))))
         } else {
           val d = r.getLong(num)
-          shardOf(d).map(s => (s % n, Doc(s, d, string(r, at("docId")))))
+          shardOf(d).map(s => (s % n, Doc(s, d, utf8Bytes(r, at("docId")))))
         }
       }
       .partitionBy(new HashPartitioner(n)) // keys are partition numbers
-      .mapPartitions(rs => Iterator(part(rs.map(_._2), firstDoc, docCount)))
+      .mapPartitions(rs => Iterator(part(rs.map(_._2), firstDoc, docCount, idBytes)))
       .setName(s"$label resident shards").persist(StorageLevel.MEMORY_AND_DISK)
     Built(parts, fields.map(f => f._1 -> (f._3, f._4)).toMap,
-      terms.toArray.groupMap(_._2)(t => (t._1, t._3, t._4)), shards.length, shards.map(_._2._3).sum, docCount)
+      terms.toArray.groupMap(_._2)(t => (t._1, t._3, t._4)), shards.length, shards.map(_._2._3).sum, docCount,
+      idBytes)
   }
 }
 
@@ -149,25 +155,30 @@ object Resident {
                        dlBytes: Array[Byte]) extends Block
 
   /** One shard: posting lists by (term, field), blocks sorted by minDoc, and
-   * the docId of docIdNum `base + i` at `docIds(i)`. */
+   * the docId of docIdNum `base + i` as entry i of `docIds` (UTF-8; null for
+   * a null docId or a number without a doc). */
   final case class Shard(id: Int, lists: Map[(String, String), Array[Blk]],
-                         base: Long, docIds: Array[String]) {
-    def docId(num: Long): String = docIds((num - base).toInt)
-  }
+                         base: Long, docIds: DocIdColumn)
 
   /** Persisted partitions, one array of shards each; each field's (fN, fC)
    * and the dictionary, term → (field, df, cf) rows, on the driver; the
-   * build's shard, block and doc counts. */
+   * build's shard, block and doc counts and its docId buffers' bytes. */
   final case class Built(parts: RDD[Array[Shard]], fieldStats: Map[String, (Long, Long)],
                          dict: Map[String, Array[(String, Long, Long)]],
-                         shards: Int, blocks: Long, docs: LongAccumulator)
+                         shards: Int, blocks: Long, docs: LongAccumulator, idBytes: LongAccumulator)
 
-  /** What the build routes to a partition besides blocks. */
-  private final case class Doc(shard: Int, num: Long, id: String)
+  /** What the build routes to a partition besides blocks: a doc's UTF-8
+   * docId (null for a null one). */
+  private final case class Doc(shard: Int, num: Long, id: Array[Byte])
 
   /** String column `i` of an internal row, copied out of the row's buffer. */
   private def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** String column `i` of an internal row as its UTF-8 bytes, copied out of
+   * the row's buffer (which the scan reuses); null stays null. */
+  private def utf8Bytes(r: InternalRow, i: Int): Array[Byte] =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).clone().getBytes
 
   /** One meta-scan partition: its (shard, minDoc, maxDoc) rows → per shard
    * (shard, first doc, last doc, blocks); its (field, term, docs, tokens)
@@ -187,7 +198,8 @@ object Resident {
   }
 
   /** A partition's element from its blocks and docs. */
-  private def part(records: Iterator[Any], firstDoc: Map[Int, Long], docCount: LongAccumulator) = {
+  private def part(records: Iterator[Any], firstDoc: Map[Int, Long], docCount: LongAccumulator,
+                   idBytes: LongAccumulator) = {
     val blocks = ArrayBuffer.empty[Blk]
     val docs = ArrayBuffer.empty[Doc]
     records.foreach {
@@ -201,9 +213,11 @@ object Resident {
       val lists = bs.toArray.groupBy(b => (b.term, b.field)).view.mapValues(_.sortBy(_.minDoc)).toMap
       val base = firstDoc(s)
       val ds = docsOf.getOrElse(s, ArrayBuffer.empty)
-      val docIds = new Array[String](if (ds.isEmpty) 0 else (ds.map(_.num).max - base + 1).toInt)
-      ds.foreach(d => docIds((d.num - base).toInt) = d.id)
+      val slots = new Array[Array[Byte]](if (ds.isEmpty) 0 else (ds.map(_.num).max - base + 1).toInt)
+      ds.foreach(d => slots((d.num - base).toInt) = d.id)
+      val docIds = DocIdColumn.of(slots)
       docCount.add(ds.size)
+      idBytes.add(docIds.bytes.length)
       Shard(s, lists, base, docIds)
     }
   }

@@ -3,7 +3,7 @@ package graft.query
 import java.util.OptionalLong
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row, classic}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -14,7 +14,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
-import graft.index.{Codec, Resident}
+import graft.index.{Codec, DocIdColumn, Resident}
 import graft.model.{Block, Topic}
 
 /**
@@ -62,8 +62,13 @@ object BlockMax {
   /** Cursor over one posting list's blocks in a shard, ordered by minDoc:
    * blocks decode lazily and skipTo passes whole blocks undecoded. */
   final class Cursor(blocks: Array[_ <: Block], score: (Long, Long) => Double) {
-    private val ubs = blocks.map(b => math.max(0d, score(b.maxTf, b.minDocLen)))
-    val maxUb: Double = ubs.max
+    private val ubs = {
+      val u = new Array[Double](blocks.length)
+      var i = 0
+      while (i < u.length) { u(i) = math.max(0d, score(blocks(i).maxTf, blocks(i).minDocLen)); i += 1 }
+      u
+    }
+    val maxUb: Double = ubs.foldLeft(ubs(0))(math.max)
     private var bi = 0
     private var pi = 0
     private var docs: Array[Long] = _
@@ -203,15 +208,20 @@ object BlockMax {
       }
 
     /** Empties the heap into its top-k as columns, best first (an in-place
-     * heap sort: each pass moves the worst left to the end); `docId` names a
-     * docIdNum. */
-    def drain(docId: Long => String): Ranked = {
+     * heap sort: each pass moves the worst left to the end); docIdNum `d`
+     * is entry `d − base` of `ids`, whose byte range is copied as it is. */
+    def drain(ids: DocIdColumn, base: Long): Ranked = {
       var end = n
       while (end > 1) { end -= 1; swap(0, end); siftDown(end) }
-      val nums = java.util.Arrays.copyOf(docs, n)
-      val out = Ranked(java.util.Arrays.copyOf(scores, n), nums, Array.tabulate(n)(i => docId(nums(i))))
+      var bytes = 0
+      var i = 0
+      while (i < n) { val e = (docs(i) - base).toInt; bytes += ids.end(e) - ids.start(e); i += 1 }
+      val out = new DocIdColumn.Builder(n, bytes)
+      i = 0
+      while (i < n) { out.add(ids, (docs(i) - base).toInt); i += 1 }
+      val ranked = Ranked(java.util.Arrays.copyOf(scores, n), java.util.Arrays.copyOf(docs, n), out.result())
       n = 0
-      out
+      ranked
     }
 
     /** Entry i ranks below entry j. */
@@ -235,17 +245,23 @@ object BlockMax {
     }
   }
 
-  private val byDoc: java.util.Comparator[Term] =
-    (a: Term, b: Term) => java.lang.Long.compare(a.doc, b.doc)
-
   /** The WAND loop over one shard's streams of one query → its top-k heap.
    * `terms` is in UTF8 term order, the summation order of a doc's score. */
   def topK(terms: Array[Term], msm: Int, k: Int, finish: Double => Double): TopK = {
     val heap = new TopK(k)
     val streams = terms.clone() // ordered by current doc; exhausted ones last
     var live = streams.length
+    // a stable insertion sort of the ≤ |terms| live streams by current doc:
+    // after one step only the moved streams are out of place
     def settle(): Unit = {
-      java.util.Arrays.sort(streams, 0, live, byDoc)
+      var i = 1
+      while (i < live) {
+        val t = streams(i)
+        var j = i - 1
+        while (j >= 0 && streams(j).doc > t.doc) { streams(j + 1) = streams(j); j -= 1 }
+        streams(j + 1) = t
+        i += 1
+      }
       while (live > 0 && streams(live - 1).doc == Long.MaxValue) live -= 1
     }
     settle()
@@ -296,10 +312,10 @@ object BlockMax {
   }
 
   /** One shard's top-k of every query with hits there; `lists` holds the
-   * shard's posting lists by (term, field), blocks by minDoc, and `docId`
-   * names a docIdNum of the shard. */
+   * shard's posting lists by (term, field), blocks by minDoc, and entry
+   * `d − base` of `ids` is the docId of docIdNum `d`. */
   def shard(lists: Map[(String, String), Array[_ <: Block]], queries: Map[Int, Query],
-            tie: Double, k: Int, finish: Double => Double, docId: Long => String): Hits =
+            tie: Double, k: Int, finish: Double => Double, ids: DocIdColumn, base: Long): Hits =
     queries.flatMap { case (qid, q) =>
       val terms = q.terms.sortBy(t => utf8(t.term)).flatMap { t =>
         val cursors = t.fields.sortBy(f => utf8(f._1)).flatMap { case (field, score) =>
@@ -308,7 +324,7 @@ object BlockMax {
         if (cursors.isEmpty) None else Some(new Term(cursors.toArray, t.mult, tie))
       }
       val top = topK(terms.toArray, q.msm, k, finish)
-      Option.when(top.size > 0)(qid -> top.drain(docId))
+      Option.when(top.size > 0)(qid -> top.drain(ids, base))
     }
 
   /** A query before its scorers exist: minimum number of matched terms and
@@ -320,11 +336,17 @@ object BlockMax {
   final case class TermStats(df: Long, cf: Long, fieldDocs: Long, fieldTokens: Long)
 
   /** Builds the score closure `(tf, docLen) => contribution` of one query's
-   * term in one field from its statistics; runs inside the kernel tasks. */
+   * term in one field from its statistics, once per (query, term, field)
+   * (through [[Scoring.Model.bind]], so per-term constants such as BM25's
+   * idf are computed then); runs inside the kernel tasks. */
   type ScorerFactory = (QuerySpec, String, TermStats) => (Long, Long) => Double
 
-  /** One query's top-k in rank order (score desc, docIdNum asc), as columns. */
-  final case class Ranked(scores: Array[Double], nums: Array[Long], ids: Array[String])
+  /** One query's top-k in rank order (score desc, docIdNum asc), as columns
+   * of primitive arrays: the docIds as a UTF-8 [[DocIdColumn]] (a null
+   * docId stays a null entry), copied from the resident shard's buffer. */
+  final case class Ranked(scores: Array[Double], nums: Array[Long], ids: DocIdColumn) {
+    def size: Int = scores.length
+  }
 
   /** Per query with hits: its top-k. */
   type Hits = Map[Int, Ranked]
@@ -332,16 +354,17 @@ object BlockMax {
   /** The first k of the stable merge of two top-k lists over disjoint doc
    * ranges in (score desc, docIdNum asc) order: the exact top-k of both. */
   private def merge(a: Ranked, b: Ranked, k: Int): Ranked = {
-    val n = math.min(k, a.ids.length + b.ids.length)
-    val out = Ranked(new Array[Double](n), new Array[Long](n), new Array[String](n))
+    val n = math.min(k, a.size + b.size)
+    val (scores, nums) = (new Array[Double](n), new Array[Long](n))
+    val ids = new DocIdColumn.Builder(n, a.ids.bytes.length + b.ids.bytes.length)
     var i = 0; var j = 0
     for (o <- 0 until n) {
-      val fromB = i == a.ids.length || (j < b.ids.length && (b.scores(j) > a.scores(i) ||
+      val fromB = i == a.size || (j < b.size && (b.scores(j) > a.scores(i) ||
         (b.scores(j) == a.scores(i) && b.nums(j) < a.nums(i))))
       val (r, at) = if (fromB) { j += 1; (b, j - 1) } else { i += 1; (a, i - 1) }
-      out.scores(o) = r.scores(at); out.nums(o) = r.nums(at); out.ids(o) = r.ids(at)
+      scores(o) = r.scores(at); nums(o) = r.nums(at); ids.add(r.ids, at)
     }
-    out
+    Ranked(scores, nums, ids.result())
   }
 
   private def merge(a: Hits, b: Hits, k: Int): Hits =
@@ -367,7 +390,7 @@ object BlockMax {
         })
       }
       parts.flatMap(_.iterator).foldLeft(Map.empty: Hits) { (top, s) =>
-        merge(top, shard(s.lists, queries, tie, k, finish, s.docId), k)
+        merge(top, shard(s.lists, queries, tie, k, finish, s.docIds, s.base), k)
       }
     }
   }
@@ -387,6 +410,8 @@ object BlockMax {
     def build(): Scan = this
     def readSchema(): StructType = rowSchema
     def rows(): Array[InternalRow] = rowArray
+    def renamed(from: String, to: String): Result = new Result(label, StructType(rowSchema.map(f =>
+      if (f.name == from) f.copy(name = to) else f)), rowArray)
     def estimateStatistics(): Statistics = new Statistics {
       def sizeInBytes(): OptionalLong = OptionalLong.of((8L + rowSchema.defaultSize) * rowArray.length)
       def numRows(): OptionalLong = OptionalLong.of(rowArray.length)
@@ -450,20 +475,38 @@ object BlockMax {
     }
 
     val score: Double => Any = if (rounded.isEmpty) _.toFloat else identity
-    def row(qid: Int, docId: String, rank: Int, s: Double): InternalRow =
-      new GenericInternalRow(Array[Any](qid, UTF8String.fromString(docId), rank, score(s)))
+    def row(qid: Int, docId: UTF8String, rank: Int, s: Double): InternalRow =
+      new GenericInternalRow(Array[Any](qid, docId, rank, score(s)))
+    // each docId a view of the merged column's buffer: no decode, no copy
     val ranked = top.toSeq.sortBy(_._1).flatMap { case (qid, r) =>
-      r.ids.indices.map(i => row(qid, r.ids(i), i + 1, r.scores(i)))
+      (0 until r.size).map(i => row(qid, r.ids.utf8(i), i + 1, r.scores(i)))
     }
     val sentinels = sentinel.toSeq.flatMap(id =>
-      topics.filterNot(t => top.contains(t.qid)).map(t => row(t.qid, id, 1, 0d)))
+      topics.filterNot(t => top.contains(t.qid)).map(t => row(t.qid, UTF8String.fromString(id), 1, 0d)))
     val schema = StructType(Seq(
       StructField("qid", IntegerType, nullable = false),
       StructField("docId", StringType),
       StructField("rank", IntegerType, nullable = false),
       StructField("score", if (rounded.isEmpty) FloatType else DoubleType, nullable = false)))
-    val table = new Result(s"${resident.label} top-k: ${topics.size} topics", schema, (ranked ++ sentinels).toArray)
+    dataFrame(spark, new Result(s"${resident.label} top-k: ${topics.size} topics", schema,
+      (ranked ++ sentinels).toArray))
+  }
+
+  private def dataFrame(spark: SparkSession, table: Result): DataFrame =
     new classic.Dataset[Row](classic.ClassicConversions.castToImpl(spark),
-      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()), Encoders.row(schema))
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()),
+      Encoders.row(table.schema()))
+
+  /** A [[search]] result with column `from` renamed `to`, over the same
+   * rows: a new `Result` table under the renamed schema, so its plan stays
+   * one `LocalScan` leaf, and collecting it runs no job and no other SQL
+   * execution (a `withColumnRenamed` projection over the scan would run a
+   * job). */
+  private[graft] def renamed(result: DataFrame, from: String, to: String): DataFrame = {
+    val table = result.queryExecution.logical match {
+      case r: DataSourceV2Relation if r.table.isInstanceOf[Result] => r.table.asInstanceOf[Result]
+      case other => throw new IllegalArgumentException(s"not a block-max result: ${other.nodeName}")
+    }
+    dataFrame(result.sparkSession, table.renamed(from, to))
   }
 }

@@ -55,8 +55,9 @@ object BlockMaxWand {
         case _ => model
       }
       val avgdl = s.fieldTokens.toDouble / s.fieldDocs.toDouble
-      (tf, dl) => perTerm(qModel.score(tf.toDouble, dl, avgdl, 1.0, s.df.toDouble, s.cf.toDouble,
-        s.fieldDocs.toDouble, s.fieldTokens.toDouble))
+      val score = qModel.bind(avgdl, 1.0, s.df.toDouble, s.cf.toDouble, s.fieldDocs.toDouble,
+        s.fieldTokens.toDouble)
+      (tf, dl) => perTerm(score(tf, dl))
     }
 
     BlockMax.search(index.resident, topics, tag, msm = _ => 1, scorer, tie = 0d, k,

@@ -53,8 +53,9 @@ object FieldedBlockMax {
     val scorer: BlockMax.ScorerFactory = (_, field, s) => {
       val boost = boosts.getOrElse(field, 0d)
       val avgdl = s.fieldTokens.toDouble / s.fieldDocs.toDouble
-      (tf, dl) => boost * model.score(tf.toDouble, dl, avgdl, 1.0, s.df.toDouble, s.cf.toDouble,
-        s.fieldDocs.toDouble, s.fieldTokens.toDouble).toFloat.toDouble
+      val score = model.bind(avgdl, 1.0, s.df.toDouble, s.cf.toDouble, s.fieldDocs.toDouble,
+        s.fieldTokens.toDouble)
+      (tf, dl) => boost * score(tf, dl).toFloat.toDouble
     }
 
     // docIdNum ascending ≡ docId-string ascending (fdocs numbering order) —

@@ -60,6 +60,13 @@ object Scoring {
     def score(tf: Double, docLen: Long, avgdl: Double, kf: Double,
               df: Double, cf: Double, n: Double, c: Double): Double
     def expr(in: In): Column
+    /** [[score]] with every argument but (tf, docLen) bound: the scorer of
+     * one term in one field. An override computes the per-term constants
+     * (an idf's logarithm, say) once, here, instead of once per posting,
+     * and keeps `score`'s order of operations, so its results equal
+     * `score`'s bit for bit. */
+    def bind(avgdl: Double, kf: Double, df: Double, cf: Double, n: Double, c: Double): (Long, Long) => Double =
+      (tf, docLen) => score(tf.toDouble, docLen, avgdl, kf, df, cf, n, c)
     /** True iff `score(maxTf, minDocLen)` is a valid per-block upper bound,
      * i.e. the model is monotone non-decreasing in tf and non-increasing in
      * docLen. Block-Max WAND is only sound for such models; non-monotone
@@ -73,10 +80,13 @@ object Scoring {
    * (`edu/anadolu/similarities/BM25.java:39-43`). */
   case object BM25 extends Model {
     val name = "BM25"
+    private val fixed = BM25c(1.2, 0.75)
     def score(tf: Double, docLen: Long, avgdl: Double, kf: Double,
               df: Double, cf: Double, n: Double, c: Double): Double =
-      BM25c(1.2, 0.75).score(tf, docLen, avgdl, kf, df, cf, n, c)
-    def expr(in: In): Column = BM25c(1.2, 0.75).expr(in)
+      fixed.score(tf, docLen, avgdl, kf, df, cf, n, c)
+    override def bind(avgdl: Double, kf: Double, df: Double, cf: Double, n: Double,
+                      c: Double): (Long, Long) => Double = fixed.bind(avgdl, kf, df, cf, n, c)
+    def expr(in: In): Column = fixed.expr(in)
   }
 
   /** Parameterized BM25 (`BM25c.java:27-32`); the north rule's flagship is
@@ -89,6 +99,14 @@ object Scoring {
       val bigK = k1 * ((1 - b) + b * docLen / avgdl) + tf
       (tf * (k3 + 1d) * kf / ((k3 + kf) * bigK)) *
         log2((n - df + 0.5d) / (df + 0.5d))
+    }
+    override def bind(avgdl: Double, kf: Double, df: Double, cf: Double, n: Double,
+                      c: Double): (Long, Long) => Double = {
+      val idf = log2((n - df + 0.5d) / (df + 0.5d))
+      (tf, docLen) => {
+        val bigK = k1 * ((1 - b) + b * docLen / avgdl) + tf
+        (tf * (k3 + 1d) * kf / ((k3 + kf) * bigK)) * idf
+      }
     }
     def expr(in: In): Column = {
       val bigK = lit(k1) * (lit(1 - b) + lit(b) * in.docLen / in.avgdl) + in.tf

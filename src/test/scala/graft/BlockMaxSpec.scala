@@ -5,7 +5,9 @@ import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.Codec
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.index.{Codec, DocIdColumn}
 import graft.model.{Block, FieldedBlock}
 import graft.query.BlockMax
 
@@ -90,11 +92,18 @@ class BlockMaxSpec extends AnyFunSuite {
     val query = BlockMax.Query(c.msm, c.query.toSeq.map { case (t, mult) =>
       BlockMax.QueryTerm(t, mult, c.fields.map(f => f -> c.score(f, t)))
     })
-    blocks.groupBy(_.shard).values.flatMap { shardBlocks =>
+    blocks.groupBy(_.shard).toSeq.flatMap { case (shard, shardBlocks) =>
       val lists: Map[(String, String), Array[_ <: Block]] =
         shardBlocks.groupBy(b => (b.term, b.field)).view
           .mapValues(_.sortBy(_.minDoc).toArray).toMap
-      BlockMax.shard(lists, Map(1 -> query), c.tie, c.k, c.finish, _.toString).values.flatMap(r => r.scores.zip(r.nums))
+      val base = shard.toLong * c.docsPerShard
+      val ids = DocIdColumn.of(Array.tabulate(c.docsPerShard)(i => s"d${base + i}".getBytes(UTF_8)))
+      BlockMax.shard(lists, Map(1 -> query), c.tie, c.k, c.finish, ids, base).values.flatMap { r =>
+        (0 until r.size).map { i =>
+          assert(r.ids.utf8(i).toString == s"d${r.nums(i)}")
+          (r.scores(i), r.nums(i))
+        }
+      }
     }.toList.sortBy { case (s, d) => (-s, d) }.take(c.k)
   }
 
@@ -117,6 +126,11 @@ class BlockMaxSpec extends AnyFunSuite {
     Seq(ties, kBeyondHits, dupTerms, msmAboveOne, multiShard).foreach(n => assert(n > 20))
   }
 
+  /** The docId of doc d in the heap property: 1- to 4-byte UTF-8
+   * characters, and null for every seventh doc. */
+  private def docId(d: Long): String =
+    if (d % 7 == 3) null else s"d$d-é東${new String(Character.toChars(0x10400 + (d % 5).toInt))}"
+
   test("top-k heap ≡ sort by (score desc, doc asc) then take k (heavy ties, -0.0 and 0.0, k up to Int.MaxValue)") {
     val genStream: Gen[(Seq[(Double, Long)], Int)] = for {
       n <- Gen.choose(0, 60)
@@ -129,7 +143,11 @@ class BlockMaxSpec extends AnyFunSuite {
     val prop = Prop.forAll(genStream) { case (stream, k) =>
       val heap = new BlockMax.TopK(k)
       stream.foreach { case (score, doc) => heap.offer(score, doc) }
-      val got = heap.drain(d => s"d$d")
+      // the docIds of docs 1 to 3n, as a resident shard with base 1 holds them
+      val base = 1L
+      val ids = DocIdColumn.of(Array.tabulate(stream.size * 3 + 1)(i =>
+        Option(docId(base + i)).map(_.getBytes(UTF_8)).orNull))
+      val got = heap.drain(ids, base)
       // -0.0 == 0.0: one score, as in the admission test `score > θ`
       val want = stream.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)).take(k)
       if (k < stream.size) cut += 1
@@ -137,7 +155,8 @@ class BlockMaxSpec extends AnyFunSuite {
       if (k == Int.MaxValue) kMax += 1
       if (want.exists(_._1.equals(-0.0)) && want.exists(_._1.equals(0.0))) signedZeros += 1
       Prop(got.nums.toSeq == want.map(_._2) && got.scores.toSeq == want.map(_._1) &&
-        got.ids.toSeq == want.map(w => s"d${w._2}")) :|
+        (0 until got.size).map(i => Option(got.ids.utf8(i)).map(_.toString).orNull) ==
+          want.map(w => docId(w._2))) :|
         s"k=$k stream=$stream\n want $want\n got  ${got.scores.zip(got.nums).toSeq}"
     }
     val params = Test.Parameters.default

@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.driver.DriverQueries
@@ -86,6 +87,10 @@ class DriverGatesSpec extends AnyFunSuite {
       fn(spark, sfDir).collect() // the derivations and the resident shards
       assert(SparkTestSession.jobs(fn(spark, sfDir).collect()) ==
         Seq((s"$label kernel: ${DriverQueries.topics.size} topics", 1)), gate)
+      // the renamed result is the block-max result's own scan, one leaf
+      val plan = fn(spark, sfDir).queryExecution.logical
+      assert(plan.isInstanceOf[DataSourceV2Relation] && plan.children.isEmpty, s"$gate: $plan")
+      assert(plan.output.map(_.name) == Seq("qid", "docid", "rank", "score"), gate)
     }
   }
 

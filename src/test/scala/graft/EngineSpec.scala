@@ -148,15 +148,17 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  /** BMW and fielded BMW over turns of `texts`, at `docsPerShard` docs a
-   * shard, against their exhaustive twins: BMW ≡ [[Exact.search]] (with
+  /** BMW and fielded BMW over turns of `texts` (turn i of conversation
+   * `convId(i)`), at `docsPerShard` docs a shard, against their exhaustive
+   * twins at each of `ks`, in both score modes: BMW ≡ [[Exact.search]] (with
    * sentinels) and fielded BMW ≡ `Fielded.searchIndexed` over the contents
-   * field, in both score modes. Returns the BMW rows. */
-  private def edgeCase(texts: Seq[String], topics: Seq[Topic], docsPerShard: Int)
+   * field. Returns the BMW rows at the first k, float scores. */
+  private def edgeCase(texts: Seq[String], topics: Seq[Topic], docsPerShard: Int,
+                       convId: Int => String = i => f"edge$i%03d", ks: Seq[Int] = Seq(K))
       : Seq[(Int, String, Int, Float)] = {
     import spark.implicits._
     val ts = texts.zipWithIndex.map { case (t, i) =>
-      Turn(f"edge$i%03d", 0, "user", t, null, new java.sql.Timestamp(0L)) }.toDS()
+      Turn(convId(i), 0, "user", t, null, new java.sql.Timestamp(0L)) }.toDS()
     val dir = Files.createTempDirectory("graft-edge").toString
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
@@ -165,13 +167,16 @@ class EngineSpec extends AnyFunSuite {
       graft.index.FieldedIndex.fromTurns(ts).filter(col("field") === "contents"), s"$dir/fielded")
     val fb = graft.index.FieldedBlocks.build(fidx, s"$dir/fielded", docsPerShard = docsPerShard, blockSize = 4)
     try {
-      val got = BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT))
-      assert(rows(got) == rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, K,
-        sentinelDocId = Some(SENT))))
-      for (rounded <- Seq(None, Some(4)))
-        assert(rows(graft.query.FieldedBlockMax.search(fb, topics, model, K, rounded = rounded)) ==
-          rows(graft.query.Fielded.searchIndexed(fidx, topics, model, K, rounded = rounded)), s"rounded=$rounded")
-      got.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3))).toSeq
+      for (k <- ks; rounded <- Seq(None, Some(4))) {
+        assert(rows(BlockMaxWand.search(idx, topics, model, k, sentinelDocId = Some(SENT), roundedDouble = rounded)) ==
+          rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, k, sentinelDocId = Some(SENT),
+            roundedDouble = rounded)), s"k=$k rounded=$rounded")
+        assert(rows(graft.query.FieldedBlockMax.search(fb, topics, model, k, rounded = rounded)) ==
+          rows(graft.query.Fielded.searchIndexed(fidx, topics, model, k, rounded = rounded)),
+          s"k=$k rounded=$rounded")
+      }
+      BlockMaxWand.search(idx, topics, model, ks.head, sentinelDocId = Some(SENT))
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getFloat(3))).toSeq
     } finally { idx.release(); fb.release() }
   }
 
@@ -194,6 +199,38 @@ class EngineSpec extends AnyFunSuite {
     assert(got.map(_._1).toSet == Set(1, 2, 3, 4, 5, 6, 7))
     assert(got.exists(r => r._1 == 3 && r._2 != SENT), "the supplementary-plane term must hit")
     assert(got.filter(_._1 == 7) == Seq((7, SENT, 1, 0f)), "an unaccented spelling is another term")
+  }
+
+  test("docIds of 2-, 3- and 4-byte UTF-8 characters over 5 shards in 4 partitions: BMW ≡ exact, fielded ≡ indexed") {
+    // conversation ids mix 1- to 4-byte characters, so the UTF-8 byte order
+    // (the docIdNum order) differs from the UTF-16 one; repeated texts tie
+    val marks = Seq("a", "é", "ß", "東", "한", new String(Character.toChars(0x10400)),
+      new String(Character.toChars(0x1F600)))
+    val texts = (0 until 40).map(i => Seq("w0", "w1", "w2 w2", "w0 w3")(i % 4))
+    val topics = Seq(Topic(1, "w0"), Topic(2, "w2 w3"), Topic(3, "qqqmissing"), Topic(4, "w1 w0"))
+    def convId(i: Int) = s"${marks(i % marks.size)}${marks((i / 7) % marks.size)}-$i"
+    val got = edgeCase(texts, topics, docsPerShard = 8, convId, ks = Seq(3, 100)) // 40 docs → 5 shards
+    // topic 1's top score is shared by the 10 docs whose text is "w0"
+    assert(got.filter(_._1 == 1).map(_._4).distinct.size == 1, "k = 3 must cut through a tie")
+    assert(got.exists(r => r._2.exists(_ > 0x7f)), "a non-ASCII docId must rank")
+  }
+
+  test("a null docId (null conversation id) stays null in the BMW result, ≡ exact") {
+    import spark.implicits._
+    // one null docId: the exact path keys its sums by docId, so two would merge there
+    val ts = (0 until 12).map(i => Turn(if (i == 5) null else f"c$i%02d", i % 3, "user",
+      Seq("w0 w1", "w1", "w0 w0")(i % 3), null, new java.sql.Timestamp(0L))).toDS()
+    val idx = IndexBuild.build(ts, Files.createTempDirectory("graft-null-id").toString, docsPerShard = 4)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+    try {
+      for (rounded <- Seq(None, Some(4))) {
+        val got = rows(BlockMaxWand.search(idx, topics, model, K, sentinelDocId = Some(SENT), roundedDouble = rounded))
+        assert(got == rows(Exact.search(idx.termDocs, idx.dict, idx.stats, topics, model, K,
+          sentinelDocId = Some(SENT), roundedDouble = rounded)), s"rounded=$rounded")
+        assert(got.exists(_._2 == null), s"rounded=$rounded")
+      }
+    } finally idx.release()
   }
 
   test("a searched handle keeps its snapshot across an append; concurrent first searches build once") {

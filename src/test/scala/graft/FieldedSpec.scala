@@ -304,6 +304,34 @@ class FieldedSpec extends AnyFunSuite {
     }
   }
 
+  test("FieldedBlockMax ≡ searchIndexed with docIds of 2-, 3- and 4-byte UTF-8 characters (k cuts, k beyond hits)") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // a prefix per turn: UTF-8 byte order (the docIdNum order) ≠ UTF-16 order
+    val marks = Seq("é", "東", new String(Character.toChars(0x10400)), "z")
+    val turns = graft.data.Transcripts.generate(spark, 30, 6, seed = 13L, partitions = 3).toDF()
+      .withColumn("conv_id", concat(element_at(array(marks.map(lit): _*), (col("turn_idx") % 4 + 1).cast("int")),
+        col("conv_id")))
+      .as[graft.model.Turn]
+    val dir = java.nio.file.Files.createTempDirectory("graft-fbmw-utf8").toString
+    val idx = graft.index.FieldedIndex.build(graft.index.FieldedIndex.fromTurns(turns), dir)
+    // 180 docs → 12 shards in 4 resident partitions: the driver merges byte
+    // ranges from several tasks
+    val fb = graft.index.FieldedBlocks.build(idx, dir, docsPerShard = 16, blockSize = 4)
+    try {
+      for (k <- Seq(3, 1000); rounded <- Seq(None, Some(4))) {
+        val want = Fielded.searchIndexed(idx, genTopics, Scoring.BM25c(0.9, 0.4), k,
+            boosts = genBoosts, rounded = rounded)
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+        val got = graft.query.FieldedBlockMax.search(fb, genTopics, Scoring.BM25c(0.9, 0.4), k,
+            boosts = genBoosts, rounded = rounded)
+          .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.get(3))).toSet
+        if (k == 1000) assert(marks.forall(m => got.exists(_._2.startsWith(m))), s"rounded=$rounded")
+        assert(got == want, s"k=$k rounded=$rounded diverged:\n  missing=${want -- got}\n  extra=${got -- want}")
+      }
+    } finally fb.release()
+  }
+
   test("k ≤ 0: FieldedBlockMax ranks nothing, ≡ searchIndexed, with no job") {
     val blocks = genBlocks // built outside the counted jobs
     for (k <- Seq(0, -1); rounded <- Seq(None, Some(4))) {

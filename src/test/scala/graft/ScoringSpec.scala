@@ -1,8 +1,11 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.query.Scoring
+import graft.query.{Scoring, StockLucene}
 import graft.query.Scoring._
 
 /** Model formula checks against values computed straight from the reference
@@ -111,6 +114,36 @@ class ScoringSpec extends AnyFunSuite {
       val s = m.score(tf, dl, avgdl, 1.0, df, cf, n, c)
       assert(!s.isNaN && !s.isInfinite, s"${m.name} -> $s")
     }
+  }
+
+  test("bind ≡ score bit for bit: every zoo and stock-grid model, and BM25c points") {
+    val models = Scoring.zoo ++ StockLucene.grid ++
+      Seq(BM25c(0.1, 0.0), BM25c(1.6, 0.4), BM25c(2.0, 1.0), BM25c(0.75, 0.3))
+    // 1 ≤ df ≤ N, cf ≥ df, C ≥ N, avgdl = C/N; tf ∈ [0, 50], docLen ∈ [1, 10⁴]
+    val genPoint = for {
+      n <- Gen.choose(1L, 1000000L)
+      df <- Gen.oneOf(Gen.const(1L), Gen.const(n), Gen.choose(1L, n))
+      cf <- Gen.oneOf(Gen.const(df), Gen.choose(df, df * 60))
+      c <- Gen.choose(math.max(n, cf), math.max(n, cf) * 500)
+      kf <- Gen.oneOf(1d, 2d, 0.5)
+      postings <- Gen.listOfN(8, Gen.zip(Gen.choose(0L, 50L), Gen.oneOf(Gen.choose(1L, 10L), Gen.choose(1L, 10000L))))
+    } yield (n, df, cf, c, kf, postings)
+    val prop = Prop.forAllNoShrink(genPoint) { case (n, df, cf, c, kf, postings) =>
+      val avgdl = c.toDouble / n.toDouble
+      val bad = for {
+        m <- models
+        bound = m.bind(avgdl, kf, df.toDouble, cf.toDouble, n.toDouble, c.toDouble)
+        (tf, dl) <- postings
+        want = m.score(tf.toDouble, dl, avgdl, kf, df.toDouble, cf.toDouble, n.toDouble, c.toDouble)
+        got = bound(tf, dl)
+        if java.lang.Double.doubleToRawLongBits(got) != java.lang.Double.doubleToRawLongBits(want)
+      } yield s"${m.name} tf=$tf dl=$dl: bind=$got score=$want"
+      Prop(bad.isEmpty) :| bad.take(5).mkString(s"N=$n df=$df cf=$cf C=$c kf=$kf\n", "\n", "")
+    }
+    val params = Test.Parameters.default
+      .withMinSuccessfulTests(1000).withWorkers(1).withInitialSeed(Seed(20261021L))
+    val res = Test.check(params, prop)
+    assert(res.passed, Pretty.pretty(res, Pretty.Params(2)))
   }
 
   test("column expressions agree bit-for-bit with scala formulas across the zoo") {
