@@ -369,12 +369,8 @@ object DriverQueries {
     // ICTF (ICTF.java:19-21), SCQ (SCQ.java:19-24); natural log as reference.
     Spec("a10_qpp_terms",
       (s, d) => {
-        import s.implicits._
-        val q = Exact.queryTerms(topics, Analyzer.Tag.NoStem)
-          .map { case (qid, term, _, _) => (qid, term) }.toDF("qid", "term")
-        val dct = dict(s, d)
         val st = corpusStats(s, d)
-        dct.join(broadcast(q), Seq("term"))
+        new Exact.QueryTermLiterals(topics, Analyzer.Tag.NoStem).expand(dict(s, d))
           .select(col("qid"), col("term"),
             round(log(lit(st.numDocs.toDouble) / col("df")), 6).as("idf"),
             round(log(lit(st.numTokens.toDouble) / col("cf")), 6).as("ictf"),
@@ -505,8 +501,7 @@ object DriverQueries {
     // QPP aggregation over per-term idf (qpp/Aggregate.java).
     Spec("a10b_qpp_agg",
       (s, d) => {
-        val pt = Qpp.perTerm(s, topics, dict(s, d),
-          corpusStats(s, d))
+        val pt = Qpp.perTerm(topics, dict(s, d), corpusStats(s, d))
         // gamma ratios pinned to 0 when the relevant extreme is 0 (a term
         // in every doc → idf 0; the reference's raw double division gives
         // ∞/NaN, which the two engines hash differently)
@@ -550,7 +545,7 @@ object DriverQueries {
 
     // VAR predictor (qpp/VAR.java:42-117): wdt = 1 + ln(tf)·ln(1 + N/df).
     Spec("a10d_var",
-      (s, d) => Qpp.varPredictor(s, termDocs(s, d), topics, corpusStats(s, d))
+      (s, d) => Qpp.varPredictor(termDocs(s, d), topics, corpusStats(s, d))
         .select(col("qid"), round(col("var"), 6).as("var")),
       Some(s"""WITH $CTES,
         |q(qid, term, mult) AS (SELECT * FROM (VALUES $qValues) AS v(qid, term, mult)),
@@ -1070,7 +1065,7 @@ object DriverQueries {
         val td = termDocs(s, d)
         val dct = dict(s, d)
         val st = corpusStats(s, d)
-        val qts = Exact.qtermStats(s, topics, dct, Analyzer.Tag.NoStem)
+        val qts = Exact.qtermStats(topics, dct, Analyzer.Tag.NoStem)
         val in = graft.query.Scoring.In(
           tf = col("tf").cast("double"), docLen = col("docLen").cast("double"),
           df = col("df").cast("double"), cf = col("cf").cast("double"),
@@ -1100,10 +1095,7 @@ object DriverQueries {
     // per (qid, term, judgeLevel): matched-doc count + Σ tf/docLen.
     Spec("a8_judged_freq",
       (s, d) => {
-        import s.implicits._
-        val q = Exact.queryTerms(topics, Analyzer.Tag.NoStem)
-          .map { case (qid, t, _, _) => (qid, t) }.toDF("qid", "term")
-        termDocs(s, d).join(broadcast(q), Seq("term"))
+        new Exact.QueryTermLiterals(topics, Analyzer.Tag.NoStem).expand(termDocs(s, d))
           .join(qrelsDf(s, d), Seq("qid", "docId"))
           .groupBy("qid", "term", "judge")
           .agg(count(lit(1)).as("cnt"),
@@ -1124,10 +1116,7 @@ object DriverQueries {
     // (stats/QueryStats.java:6-46): matched-df, Σdl, Σdl².
     Spec("a9_query_stats",
       (s, d) => {
-        import s.implicits._
-        val q = Exact.queryTerms(topics, Analyzer.Tag.NoStem)
-          .map { case (qid, t, _, _) => (qid, t) }.toDF("qid", "term")
-        termDocs(s, d).join(broadcast(q), Seq("term"))
+        new Exact.QueryTermLiterals(topics, Analyzer.Tag.NoStem).expand(termDocs(s, d))
           .groupBy("qid", "docId").agg(first("docLen").as("dl"))
           .groupBy("qid")
           .agg(count(lit(1)).as("n_matched"), sum("dl").as("sum_dl"),
@@ -1336,19 +1325,13 @@ object DriverQueries {
     // L1 — LTR text features (ltr/DocLength, Entropy, AvgTermLength,
     // CoveredTermCount/Ratio) per (qid, matched doc), K5's feature source.
     Spec("l1_ltr_features",
-      (s, d) => {
-        val td = termDocs(s, d)
-        val qts = Exact.qtermStats(s, topics, dict(s, d), Analyzer.Tag.NoStem)
-          .select("qid", "term", "mult", "qLen")
-        val docF = graft.ltr.DocFeatures.docFeatures(td)
-        graft.ltr.DocFeatures.coverage(td, qts)
-          .join(docF, "docId")
+      (s, d) =>
+        graft.ltr.DocFeatures.features(termDocs(s, d), topics, Analyzer.Tag.NoStem)
           .select(col("qid"), col("docId").as("docid"), col("doclen"),
             round(col("entropy"), 6).as("entropy"),
             round(col("avg_term_len"), 6).as("avg_term_len"),
             col("covered_cnt"),
-            round(col("covered_ratio"), 6).as("covered_ratio"))
-      },
+            round(col("covered_ratio"), 6).as("covered_ratio")),
       Some(s"""WITH $CTES,
         |qv(qid, term, mult) AS (SELECT * FROM (VALUES $qValues) AS v(qid, term, mult)),
         |ql AS (SELECT qid, sum(mult) AS qlen FROM qv GROUP BY qid),
@@ -1374,7 +1357,7 @@ object DriverQueries {
       (s, d) => {
         val td = termDocs(s, d)
         val st = corpusStats(s, d)
-        val qts = Exact.qtermStats(s, topics, dict(s, d), Analyzer.Tag.NoStem)
+        val qts = Exact.qtermStats(topics, dict(s, d), Analyzer.Tag.NoStem)
         val in = graft.query.Scoring.In(
           tf = col("tf").cast("double"), docLen = col("docLen").cast("double"),
           df = col("df").cast("double"), cf = col("cf").cast("double"),
@@ -1731,7 +1714,7 @@ object DriverQueries {
         import graft.query.StockLucene._
         val td = termDocs(s, d)
         val st = corpusStats(s, d)
-        val qts = Exact.qtermStats(s, topics, dict(s, d), Analyzer.Tag.NoStem)
+        val qts = Exact.qtermStats(topics, dict(s, d), Analyzer.Tag.NoStem)
         val in = graft.query.Scoring.In(
           tf = col("tf").cast("double"), docLen = col("docLen").cast("double"),
           df = col("df").cast("double"), cf = col("cf").cast("double"),
@@ -1982,10 +1965,7 @@ object DriverQueries {
     // match is binned here — documented).
     Spec("qf1_query_freq",
       (s, d) => {
-        import s.implicits._
-        val q = Exact.queryTerms(topics, Analyzer.Tag.NoStem)
-          .toDF("qid", "term", "mult", "nTerms")
-        val rf = termDocs(s, d).join(broadcast(q), Seq("term"))
+        val rf = new Exact.QueryTermLiterals(topics, Analyzer.Tag.NoStem).expand(termDocs(s, d))
           .groupBy("qid", "docId")
           .agg((sum(col("tf")).cast("double") / first("docLen")).as("rf"),
             count(lit(1)).as("matched"), first("nTerms").as("nTerms"))
@@ -2081,7 +2061,7 @@ object DriverQueries {
     Spec("rb1_rule_based",
       (s, d) => {
         val st = corpusStats(s, d)
-        Exact.qtermStats(s, topics, dict(s, d), Analyzer.Tag.NoStem)
+        Exact.qtermStats(topics, dict(s, d), Analyzer.Tag.NoStem)
           .groupBy("qid")
           .agg(first("qLen").as("qlen"), max("cf").as("maxcf"),
             max("df").as("maxdf"), min("df").as("mindf"))

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,9 +57,8 @@ object EmpiricalCdf {
              topics: Seq[Topic], norm: Scoring.TFNorm, prob: Prob,
              tag: Analyzer.Tag = Analyzer.Tag.NoStem,
              roundTo: Int = 4): DataFrame = {
-    val spark = termDocs.sparkSession
-    val qts = Exact.qtermStats(spark, topics, dict, tag)
-    val terms = Exact.queryTerms(topics, tag).map(_._2).distinct
+    val qts = Exact.qtermStats(topics, dict, tag)
+    val terms = new Exact.QueryTermLiterals(topics, tag)
     val avgdl = stats.numTokens.toDouble / stats.numDocs.toDouble
     // Precision.round(tfn, 4) — EModelBase.java:90 (HALF_UP, as Spark round)
     val tfn = round(norm.tfnC(col("tf").cast("double"),
@@ -69,7 +68,7 @@ object EmpiricalCdf {
     // CDF over the term's postings BEFORE the query join — a term shared by
     // several topics must not count its postings once per topic
     val withCdf = termDocs
-      .filter(col("term").isin(terms: _*))
+      .filter(terms.kept)
       .withColumn("tfn", tfn)
       .withColumn("cdf", count(lit(1)).over(w))
     withCdf

@@ -1,8 +1,16 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.analysis.Analyzer
 import graft.model.{CorpusStats, Topic}
@@ -21,11 +29,13 @@ import graft.model.{CorpusStats, Topic}
  *  - zero-hit queries emit a collection sentinel doc at rank 1, score 0
  *    (`Searcher.java:193-202`).
  *
- * Plan shape at scale: the posting source is scanned ONCE and reduced by a
- * broadcast hash join against the (tiny) query-term table — no shuffle of the
- * posting side until the per-(qid,docId) partial aggregate, whose map-side
- * combine shrinks the shuffle to |matched docs| rows. The final top-k window
- * shuffles only per-query candidates.
+ * Plan shape at scale: the query terms enter every plan as literals
+ * ([[QueryTermLiterals]]): the dictionary is reduced to their rows by a
+ * hashed `term IN (…)` filter, and the posting source is scanned ONCE and
+ * reduced by a broadcast hash join against those few dictionary rows — no
+ * shuffle of the posting side until the per-(qid,docId) partial aggregate,
+ * whose map-side combine shrinks the shuffle to |matched docs| rows. The
+ * final top-k window shuffles only per-query candidates.
  */
 object Exact {
 
@@ -38,20 +48,69 @@ object Exact {
       m.map { case (term, mult) => (t.qid, term, mult, m.size) }
     }
 
-  /** Query-term table joined with per-term (df, cf): the dictionary is
-   * scanned once and reduced via a broadcast of the query terms. `qLen` is
-   * the analyzed query word count (Σ mult — the reference's maxOverlap,
-   * `Searcher.java:351`), read by query-sensitive models via [[Scoring.In.qLen]]. */
-  def qtermStats(spark: SparkSession, topics: Seq[Topic], dict: DataFrame,
-                 tag: Analyzer.Tag): DataFrame = {
-    import spark.implicits._
-    val qt = queryTerms(topics, tag)
-    val qLens = qt.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
-    val q = qt.map { case (qid, term, mult, nTerms) => (qid, term, mult, nTerms, qLens(qid)) }
-      .toDF("qid", "term", "mult", "nTerms", "qLen")
-    dict.join(broadcast(q), Seq("term"))
-      .select("qid", "term", "mult", "nTerms", "qLen", "df", "cf")
+  /** How the analyzed query terms of `topics` enter a plan: as literals, so
+   * no plan broadcasts a query-term `LocalRelation` (one Spark job and one
+   * broadcast buffer per call).
+   *
+   *  - [[kept]] is `term IN (…)`. Spark hashes it (`InSet`) above 10 terms
+   *    and pushes it into parquet scans.
+   *  - [[matches]] looks the term up in a hash table built here and shipped
+   *    inside the plan ([[TermMatches]]), so a lookup costs the same for 10
+   *    terms as for 10,000. */
+  final class QueryTermLiterals(topics: Seq[Topic], tag: Analyzer.Tag) {
+    private val qt = queryTerms(topics, tag)
+
+    val kept: Column = col("term").isin(qt.map(_._2).distinct: _*)
+
+    /** The row's matches, array<struct<qid, mult, nTerms, qLen>>: the term
+     * occurs `mult` times in topic `qid`, which has `nTerms` distinct terms
+     * and `qLen` words (Σ mult — the reference's maxOverlap,
+     * `Searcher.java:351`). Null where the term is no query term. */
+    val matches: Column = {
+      val qLens = qt.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
+      val table = new java.util.HashMap[UTF8String, ArrayData]
+      qt.groupBy(_._2).foreach { case (term, uses) =>
+        table.put(UTF8String.fromString(term), new GenericArrayData(uses.map {
+          case (qid, _, mult, nTerms) => InternalRow(qid, mult, nTerms, qLens(qid))
+        }.toArray[Any]))
+      }
+      Columns.of(TermMatches(UnresolvedAttribute("term"), table))
+    }
+
+    /** The rows of a term-keyed `source` (postings, dict, fielded postings)
+     * whose term is a query term, one per (row, topic holding the term),
+     * with qid, mult, nTerms and qLen appended. */
+    def expand(source: DataFrame): DataFrame =
+      source.filter(kept).select(col("*"), inline(matches))
   }
+
+  /** `term` → the value `table` holds for it, null for any other term. It
+   * generates code (a `CodegenFallback` would keep its operator, e.g. the
+   * `Generate` of `inline`, out of whole-stage codegen). */
+  private final case class TermMatches(child: Expression, table: java.util.HashMap[UTF8String, ArrayData])
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(StructType(Seq("qid", "mult", "nTerms", "qLen")
+      .map(StructField(_, IntegerType, nullable = false))), containsNull = false)
+    override def nullable: Boolean = true
+    override def prettyName: String = "query_term_matches"
+    // the table can hold thousands of terms: plan strings show only the input
+    override def toString: String = s"$prettyName($child)"
+    override protected def nullSafeEval(term: Any): Any = table.get(term)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val t = ctx.addReferenceObj("table", table)
+      nullSafeCodeGen(ctx, ev, term =>
+        s"""${ev.value} = (ArrayData) $t.get($term);
+           |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    }
+    override protected def withNewChildInternal(c: Expression): TermMatches = copy(child = c)
+  }
+
+  /** The query terms' dictionary rows with per-term (df, cf), one per
+   * (qid, term); `qLen` is read by query-sensitive models via
+   * [[Scoring.In.qLen]]. */
+  def qtermStats(topics: Seq[Topic], dict: DataFrame, tag: Analyzer.Tag): DataFrame =
+    new QueryTermLiterals(topics, tag).expand(dict)
+      .select("qid", "term", "mult", "nTerms", "qLen", "df", "cf")
 
   /** Per-row (term,doc) score × multiplicity, accumulated in double.
    * With `floatBoundary` the per-term score is cast to float first
@@ -83,7 +142,7 @@ object Exact {
              conjunctive: Boolean = false,
              sentinelDocId: Option[String] = None,
              roundedDouble: Option[Int] = None): DataFrame = {
-    val qts = qtermStats(termDocs.sparkSession, topics, dict, tag)
+    val qts = qtermStats(topics, dict, tag)
 
     // roundedDouble: cross-engine-comparable mode — pure double math, final
     // score rounded to d decimals and ranked on the rounded value (ties then
@@ -139,8 +198,7 @@ object Exact {
   def scoreAllModels(termDocs: DataFrame, dict: DataFrame, stats: CorpusStats,
                      topics: Seq[Topic], models: Seq[Scoring.Model],
                      tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
-    val spark = termDocs.sparkSession
-    val qts = qtermStats(spark, topics, dict, tag)
+    val qts = qtermStats(topics, dict, tag)
     val aggs = models.map(m =>
       sum(perTermScore(m, stats)).cast("float").cast("double").as(m.name))
     termDocs
@@ -154,10 +212,7 @@ object Exact {
   def countMatches(termDocs: DataFrame, topics: Seq[Topic],
                    tag: Analyzer.Tag = Analyzer.Tag.NoStem,
                    conjunctive: Boolean = false): DataFrame = {
-    val spark = termDocs.sparkSession
-    import spark.implicits._
-    val q = queryTerms(topics, tag).toDF("qid", "term", "mult", "nTerms")
-    val grouped = termDocs.join(broadcast(q), Seq("term"))
+    val grouped = new QueryTermLiterals(topics, tag).expand(termDocs)
       .groupBy("qid", "docId")
       .agg(count(lit(1)).as("matched"), first("nTerms").as("nTerms"))
     val m = if (conjunctive) grouped.filter(col("matched") === col("nTerms")) else grouped

@@ -49,24 +49,20 @@ object Fielded {
              tie: Double = DEFAULT_TIE,
              tag: Analyzer.Tag = Analyzer.Tag.NoStem,
              rounded: Option[Int] = None): DataFrame = {
-    val spark = fieldedTermDocs.sparkSession
-    import spark.implicits._
-
-    val q = Exact.queryTerms(topics, tag).toDF("qid", "term", "mult", "nTerms")
+    val terms = new Exact.QueryTermLiterals(topics, tag)
 
     // Per-field corpus stats (|fields| rows — trivially broadcastable) and
     // per-(field, term) df/cf for the QUERY terms only: the posting scan is
-    // semi-joined to the (tiny, broadcast) query-term list BEFORE the
-    // aggregate, so the broadcast side below is bounded by
-    // |query terms| × |fields|, never the corpus vocabulary
-    // (mirrors Exact.qtermStats — the full-dict broadcast was the round-2
-    // scale-killer flagged in VERDICT "What's wrong" #1).
+    // filtered by the query-term literals BEFORE the aggregate, so the
+    // broadcast side below is bounded by |query terms| × |fields|, never
+    // the corpus vocabulary (mirrors Exact.qtermStats — the full-dict
+    // broadcast was the round-2 scale-killer flagged in VERDICT "What's
+    // wrong" #1).
     val fieldStats = graft.index.FieldedIndex.fieldStatsOf(fieldedTermDocs)
-    val fieldDict = fieldedTermDocs
-      .join(broadcast(q.select("term").distinct()), Seq("term"), "left_semi")
+    val fieldDict = fieldedTermDocs.filter(terms.kept)
       .groupBy("field", "term")
       .agg(count(lit(1)).as("df"), sum("tf").as("cf"))
-    score(fieldedTermDocs, q, fieldDict, fieldStats, model, k, boosts, tie, rounded)
+    score(terms.expand(fieldedTermDocs), fieldDict, fieldStats, model, k, boosts, tie, rounded)
   }
 
   /**
@@ -84,24 +80,17 @@ object Fielded {
                     tie: Double = DEFAULT_TIE,
                     tag: Analyzer.Tag = Analyzer.Tag.NoStem,
                     rounded: Option[Int] = None): DataFrame = {
-    val spark = idx.postings.sparkSession
-    import spark.implicits._
-    val qt = Exact.queryTerms(topics, tag)
-    val q = qt.toDF("qid", "term", "mult", "nTerms")
-    val termSet = qt.map(_._2).distinct
-    score(
-      idx.postings.filter(col("term").isin(termSet: _*)),
-      q,
-      idx.dict.filter(col("term").isin(termSet: _*)),
-      idx.stats,
+    val terms = new Exact.QueryTermLiterals(topics, tag)
+    score(terms.expand(idx.postings), idx.dict.filter(terms.kept), idx.stats,
       model, k, boosts, tie, rounded)
   }
 
-  /** Shared scoring tail: per-field model score × boost → per-term
-   * DisjunctionMax → per-doc sum + minimum-should-match → top-k.
+  /** Shared scoring tail over `matched`, the query terms' postings
+   * expanded by [[Exact.QueryTermLiterals]]: per-field model score × boost →
+   * per-term DisjunctionMax → per-doc sum + minimum-should-match → top-k.
    * `fieldDict`/`fieldStats` are bounded (≤ |query terms| × |fields| and
    * |fields| rows) and broadcast. */
-  private def score(postings: DataFrame, q: DataFrame, fieldDict: DataFrame,
+  private def score(matched: DataFrame, fieldDict: DataFrame,
                     fieldStats: DataFrame, model: Scoring.Model, k: Int,
                     boosts: Map[String, Double], tie: Double,
                     rounded: Option[Int]): DataFrame = {
@@ -113,8 +102,7 @@ object Fielded {
       when(col("field") === f, lit(b)).otherwise(acc)
     }
 
-    val perField = postings
-      .join(broadcast(q), Seq("term"))
+    val perField = matched
       .join(broadcast(fieldDict), Seq("field", "term"))
       .join(broadcast(fieldStats), Seq("field"))
       .withColumn("s", boostCol * model.expr(in).cast("float").cast("double"))

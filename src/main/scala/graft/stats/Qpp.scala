@@ -16,17 +16,13 @@ object Qpp {
   /** Per-(qid, term): IDF = ln(N/df) (`qpp/IDF.java:22-24`),
    * ICTF = ln(C/cf) (`ICTF.java:19-21`),
    * SCQ = (1 + ln cf)·idf (`SCQ.java:19-24`). */
-  def perTerm(spark: SparkSession, topics: Seq[Topic], dict: DataFrame,
-              stats: CorpusStats, tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
-    import spark.implicits._
-    val q = Exact.queryTerms(topics, tag).map { case (qid, t, m, _) => (qid, t, m) }
-      .toDF("qid", "term", "mult")
-    dict.join(broadcast(q), Seq("term"))
+  def perTerm(topics: Seq[Topic], dict: DataFrame, stats: CorpusStats,
+              tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame =
+    new Exact.QueryTermLiterals(topics, tag).expand(dict)
       .select(col("qid"), col("term"), col("mult"),
         log(lit(stats.numDocs.toDouble) / col("df")).as("idf"),
         log(lit(stats.numTokens.toDouble) / col("cf")).as("ictf"),
         ((lit(1d) + log(col("cf"))) * log(lit(stats.numDocs.toDouble) / col("df"))).as("scq"))
-  }
 
   /** Per-query aggregation of a per-term predictor column
    * (`qpp/Aggregate.java`): min/max/avg/sum/geometric-mean/stddev/variance
@@ -93,13 +89,12 @@ object Qpp {
    * (`qpp/VAR.java:42-117`): per term
    * variance = Σwdt² − (Σwdt)²/df; per query avg of √(variance/df) over
    * terms present in the vocabulary. */
-  def varPredictor(spark: SparkSession, termDocs: DataFrame, topics: Seq[Topic],
-                   stats: CorpusStats, tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
-    import spark.implicits._
-    val q = Exact.queryTerms(topics, tag).map { case (qid, t, _, _) => (qid, t) }.toDF("qid", "term")
+  def varPredictor(termDocs: DataFrame, topics: Seq[Topic], stats: CorpusStats,
+                   tag: Analyzer.Tag = Analyzer.Tag.NoStem): DataFrame = {
+    val terms = new Exact.QueryTermLiterals(topics, tag)
     val n = stats.numDocs.toDouble
     // wdt needs df inside the row function → two passes: df, then wdt agg
-    val dfPerTerm = termDocs.join(broadcast(q.select("term").distinct()), Seq("term"))
+    val dfPerTerm = termDocs.filter(terms.kept)
       .groupBy("term").agg(count(lit(1)).cast("double").as("df"))
     val wdt = termDocs.join(broadcast(dfPerTerm), Seq("term"))
       .withColumn("wdt", lit(1d) + log(col("tf").cast("double")) * log(lit(1d) + lit(n) / col("df")))
@@ -109,7 +104,7 @@ object Qpp {
       // sqrt never sees a −1ulp negative
       .withColumn("variance", greatest(col("wdtSq") - pow(col("wdtSum"), 2) / col("df"), lit(0d)))
       .withColumn("termVar", sqrt(lit(1.0) / col("df") * col("variance")))
-    wdt.join(broadcast(q), Seq("term"))
+    terms.expand(wdt)
       .groupBy("qid")
       .agg((sum("termVar") / count(lit(1))).as("var"))
   }

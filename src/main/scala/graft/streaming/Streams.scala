@@ -110,7 +110,7 @@ object Streams {
                           floatBoundary: Boolean = true): (DataFrame, () => Unit) = {
     val spark = df.sparkSession
     val byQid: Map[Int, Seq[(String, Int, Long, Long)]] =
-      graft.query.Exact.qtermStats(spark, topics, dict, tag)
+      graft.query.Exact.qtermStats(topics, dict, tag)
         .select("qid", "term", "mult", "df", "cf").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4)))
         .groupBy(_._1)

@@ -1,6 +1,6 @@
 package graft.train
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,8 +57,7 @@ object ParamTrain {
                 topics: Seq[Topic], models: Seq[Scoring.Model], topK: Int,
                 tag: Analyzer.Tag = Analyzer.Tag.NoStem,
                 roundedDouble: Option[Int] = None): DataFrame = {
-    val spark = termDocs.sparkSession
-    val qts = Exact.qtermStats(spark, topics, dict, tag)
+    val qts = Exact.qtermStats(topics, dict, tag)
     val in = Scoring.In(
       tf = col("tf").cast("double"), docLen = col("docLen").cast("double"),
       df = col("df").cast("double"), cf = col("cf").cast("double"),

@@ -6,7 +6,11 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.driver.DriverQueries
@@ -15,7 +19,7 @@ import graft.driver.DriverQueries
  * bundled sf0.001 tables against the reference rows/hash recorded from a
  * commit that matched DuckDB on all gates, cold and again after
  * `releaseCaches`; and every `oracleSql` string against its pinned SHA-256. */
-class DriverGatesSpec extends AnyFunSuite {
+class DriverGatesSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "perfbench/data/sf0.001"
@@ -92,6 +96,44 @@ class DriverGatesSpec extends AnyFunSuite {
       assert(plan.isInstanceOf[DataSourceV2Relation] && plan.children.isEmpty, s"$gate: $plan")
       assert(plan.output.map(_.name) == Seq("qid", "docid", "rank", "score"), gate)
     }
+  }
+
+  /** The timed gate set of the benchmark's `gates` workload
+   * (`perfbench.Gates.Selected`). */
+  private val benchmarkGates = Seq(
+    "a10_qpp_terms", "g1_stem_golden", "g2_kstem_golden", "l1_ltr_features",
+    "r3c_fielded_bmw", "r6_spam_rerank", "sw1_stopword_histogram", "x3_fingerprint")
+
+  test("warm benchmark gates' job counts: l1_ltr_features 2, a10_qpp_terms 1") {
+    def run(gate: String): Unit = SparkEntry.queries(gate)(spark, sfDir).collect()
+    benchmarkGates.foreach(run) // the warm-up pass: derivations, resident shards
+    val jobs = benchmarkGates.map(g => g -> SparkTestSession.jobs(run(g)))
+    jobs.foreach { case (g, js) => info(f"$g%-24s ${js.size}%2d jobs, ${js.map(_._2).sum}%2d stages run") }
+    val n = jobs.toMap.view.mapValues(_.size).toMap
+    assert(n("l1_ltr_features") == 2 && n("a10_qpp_terms") == 1, jobs.mkString("\n", "\n", ""))
+  }
+
+  /** The query terms enter plans as literals (`Exact.QueryTermLiterals`):
+   * no executed plan builds a broadcast hash relation over a local table of
+   * terms, which costs a job and a broadcast buffer per call. (The zero-bin
+   * histograms cross-join a fixed term list, an identity broadcast.) */
+  test("no gate hash-joins a broadcast query-term table (a LocalTableScan with a term column)") {
+    var broadcasts = 0
+    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val sent = collect(plan) {
+        case b: BroadcastExchangeExec if b.mode.isInstanceOf[HashedRelationBroadcastMode] => b
+      }
+      broadcasts += sent.size
+      val termTables = sent.flatMap(b => collect(b) {
+        case l: LocalTableScanExec if l.output.exists(_.name == "term") => l
+      })
+      if (termTables.isEmpty) None else Some(s"$name:\n$plan")
+    }
+    assert(broadcasts > 0, "no gate broadcast a hash relation: the check saw no plan")
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 
   test("every oracleSql string matches its pinned SHA-256") {

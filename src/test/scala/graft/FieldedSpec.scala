@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, InSet}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.Topic
@@ -7,7 +12,7 @@ import graft.query.{Fielded, Scoring}
 
 /** R3 fielded DisMax + minimum-should-match semantics
  * (`Searcher.java:232-323`). */
-class FieldedSpec extends AnyFunSuite {
+class FieldedSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkTestSession.spark
 
@@ -58,11 +63,59 @@ class FieldedSpec extends AnyFunSuite {
     val df = Fielded.search(fd, Seq(Topic(1, "apple pie")), Scoring.BM25c(0.9, 0.4), 10)
     val plan = df.queryExecution.executedPlan.toString
     // the per-(field,term) dictionary aggregate must be fed by a semi-join
-    // against the broadcast query terms, so the later broadcast of the dict
-    // is bounded by |query terms| × |fields|, not the corpus vocabulary
-    assert(plan.contains("LeftSemi"),
-      s"fieldDict must be semi-joined to query terms before aggregation:\n$plan")
+    // against the query terms, so the later broadcast of the dict is bounded
+    // by |query terms| × |fields|, not the corpus vocabulary. The terms are
+    // plan literals, so the semi-join is a `term IN (query terms)` filter,
+    // which the optimizer folds into a local source's rows: hence the
+    // analyzed plan
+    val analyzed = df.queryExecution.analyzed
+    val dictAggs = analyzed.collect {
+      case a: Aggregate if a.groupingExpressions.flatMap(_.references.toSeq.map(_.name)) == Seq("field", "term") => a
+    }
+    val semiJoined = dictAggs.nonEmpty && dictAggs.forall(_.child.exists {
+      case Filter(cond, _) => cond.exists {
+        case In(a: AttributeReference, list) => a.name == "term" &&
+          list.map(_.eval().toString).toSet == Set("apple", "pie")
+        case _ => false
+      }
+      case _ => false
+    })
+    assert(semiJoined, s"fieldDict must be semi-joined to query terms before aggregation:\n$analyzed")
     assert(!plan.toLowerCase.contains("udf"), s"no UDFs expected in the fielded plan:\n$plan")
+  }
+
+  test("executed plan: the (field, term) aggregate over a parquet source reads only query-term rows") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("fielded-plan").resolve("fd").toString
+    Seq(
+      ("docA", "title", "apple", 1L, 2L),
+      ("docA", "contents", "pie", 1L, 10L),
+      ("docB", "contents", "apple", 1L, 10L),
+      ("docB", "contents", "other", 2L, 10L),
+      ("docC", "title", "noise", 1L, 2L))
+      .toDF("docId", "field", "term", "tf", "docLen").write.parquet(dir)
+    val df = Fielded.search(spark.read.parquet(dir), Seq(Topic(1, "apple pie")),
+      Scoring.BM25c(0.9, 0.4), 10)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    def termIn(e: Expression): Boolean = e.exists {
+      case In(a: AttributeReference, _) => a.name == "term"
+      case InSet(a: AttributeReference, _) => a.name == "term"
+      case _ => false
+    }
+    val dictAggs = collect(plan) {
+      case a: HashAggregateExec
+          if a.groupingExpressions.map(_.references.head.name) == Seq("field", "term") => a
+    }
+    assert(dictAggs.nonEmpty, s"no (field, term) aggregate in the executed plan:\n$plan")
+    // the partial aggregate reads its rows through the query-term filter,
+    // which is also pushed into the parquet scan
+    val filtered = dictAggs.exists(a => collect(a) {
+      case f: FilterExec if termIn(f.condition) => f
+    }.nonEmpty && collect(a) {
+      case s: FileSourceScanExec if s.dataFilters.exists(termIn) => s
+    }.nonEmpty)
+    assert(filtered, s"the (field, term) aggregate must read through a term IN filter:\n$plan")
   }
 
   test("transcripts' natural fields (role / tool / contents) retrieve as true fields") {
